@@ -193,6 +193,61 @@ def _host_probe_sec() -> float:
     return round(min(_probe_once() for _ in range(3)), 4)
 
 
+# Last-resort shed order for the stdout line (historically cheapest first):
+# a fixed committed order keeps the printed set stable round over round.
+SHED_ORDER = [
+    "w_first_last_ignore_nulls",
+    "corpus_chunk_overlap",
+    "dedup_exact_hash_first_wins",
+    "sim_embedding_quantize_int8",
+    "q6_forecast_revenue",
+    "events_histogram_equiwidth",
+    "corpus_pack_sequences",
+    "set_union_distinct_aliases",
+    "events_sessionize",
+    "multimodal_jpeg_decode_real",
+]
+
+
+def _dumps(obj) -> str:
+    return json.dumps(obj, separators=(",", ":"))
+
+
+def _shed_to_fit(slim: dict, line_limit: int) -> None:
+    """Drop queries from ``slim["queries"]`` until its compact JSON fits
+    ``line_limit``: first in the fixed SHED_ORDER, then, once that runs
+    out, the cheapest remaining ones (failed queries last). Says on
+    stderr what it dropped; the complete dict is in BENCH_LOCAL.json."""
+    queries = slim["queries"]
+    fixed = [n for n in SHED_ORDER if n in queries]
+    by_cost = sorted(
+        (n for n in queries if n not in SHED_ORDER),
+        key=lambda n: (queries[n] < 0, queries[n], n),
+    )
+    dropped: list[str] = []
+    for name in fixed + by_cost:
+        if len(_dumps(slim)) <= line_limit:
+            break
+        del queries[name]
+        slim["queries_truncated"] = True
+        dropped.append(name)
+    if not dropped:
+        return
+    print(
+        f"[bench] slim stdout line over {line_limit} chars: dropped "
+        f"{len(dropped)} queries from it (complete dict is in "
+        "BENCH_LOCAL.json)",
+        file=sys.stderr,
+    )
+    beyond = dropped[len(fixed) :]
+    if beyond:
+        print(
+            "[bench] WARNING: the fixed shed order ran out; also dropped "
+            f"the {len(beyond)} cheapest remaining: {', '.join(beyond)}",
+            file=sys.stderr,
+        )
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     try:
@@ -411,10 +466,6 @@ def main() -> None:
     # committed order (historically cheapest first) so the printed set
     # stays stable round-over-round instead of tracking noise.
     line_limit = 1900
-
-    def _dumps(obj) -> str:
-        return json.dumps(obj, separators=(",", ":"))
-
     slim = {
         "metric": "total_sec",
         "value": total,
@@ -422,33 +473,7 @@ def main() -> None:
         "queries": {n: round(s, 2) for n, s in timings.items()},
         "sf": sf,
     }
-    SHED_ORDER = [
-        "w_first_last_ignore_nulls",
-        "corpus_chunk_overlap",
-        "dedup_exact_hash_first_wins",
-        "sim_embedding_quantize_int8",
-        "q6_forecast_revenue",
-        "events_histogram_equiwidth",
-        "corpus_pack_sequences",
-        "set_union_distinct_aliases",
-        "events_sessionize",
-        "multimodal_jpeg_decode_real",
-    ]
-    dropped = 0
-    for name in SHED_ORDER:
-        if len(_dumps(slim)) <= line_limit:
-            break
-        if name in slim["queries"]:
-            del slim["queries"][name]
-            slim["queries_truncated"] = True
-            dropped += 1
-    if dropped:
-        print(
-            f"[bench] slim stdout line over {line_limit} chars: dropped "
-            f"{dropped} queries from it in the FIXED shed order (complete "
-            "dict is in BENCH_LOCAL.json)",
-            file=sys.stderr,
-        )
+    _shed_to_fit(slim, line_limit)
     for key in ("accuracy", "host_probe_sec", "ann_recall_at_5"):
         trial = dict(slim)
         trial[key] = full[key]

@@ -18,6 +18,9 @@ from pyspark.sql import functions as F
 from tijdloze_musicbrainz_spark.plans import REGISTRY
 from tijdloze_musicbrainz_spark.plans.cc_index import (
     CC_DELTA_MOD,
+    CC_PAY_BCAST_MAX_BYTES,
+    CC_PAY_BCAST_ROW_BYTES,
+    _base_pairs,
     _block_runs,
     _build_base,
     _ingest_batch,
@@ -224,3 +227,22 @@ def test_streaming_restart_rejects_too_small_corpus(spark, tmp_path):
         REGISTRY["streaming_cluster_ingest_restart"].builder(
             spark, str(tmp_path)
         ).collect()
+
+
+def test_base_pairs_gate_falls_back_to_row_count_without_bytes(spark):
+    """Under a reliable checkpoint dir the observed checkpoint reports no
+    block bytes. The base self-join must then size itself by the exact
+    base row count: a small base is broadcast, one past the budget is
+    not."""
+    pay = spark.createDataFrame(
+        [(1, "a b", ["x"]), (2, "a b", ["x"]), (3, "c d", ["y"])],
+        "doc_id long, blk string, sgs array<string>",
+    )
+
+    def hinted(pay_metrics: dict) -> bool:
+        plan = _base_pairs(pay, pay_metrics)._jdf.queryExecution().optimizedPlan()
+        return "strategy=broadcast" in plan.toString()
+
+    assert hinted({"bytes": None, "n_rows": 3, "n_base_pay": 3})
+    too_many = CC_PAY_BCAST_MAX_BYTES // CC_PAY_BCAST_ROW_BYTES + 1
+    assert not hinted({"bytes": None, "n_rows": too_many, "n_base_pay": too_many})

@@ -78,30 +78,73 @@ def test_window_queries_all_have_oracles():
     assert not rows_only, f"unexpected rows-only in window: {rows_only}"
 
 
-def test_doc_counts_match_registry():
-    """The judged docs must not lag the registry (r14 verdict item 6:
-    SURVEY.md §8 said '215 queries' for six rounds while the registry
-    stood at 240). Every doc that states the registry size must state
-    the live count — README, COVERAGE, QUERIES, and SURVEY §8."""
+def _stale_docs(root: str) -> tuple[int, int, list[str]]:
+    """(expected size, size without the golden CSV, docs under ``root``
+    that do not state both). Three entries register only when the
+    reference golden CSV exists, so the docs state the size with and
+    without them; the expected counts come from the live registry plus
+    that flag, whichever way this checkout has it."""
     import os
     import re
 
-    n = len(REGISTRY)
-    root = os.path.join(os.path.dirname(__file__), "..")
+    from tijdloze_musicbrainz_spark.plans.benchmark_real import (
+        CSV_GATED,
+        REAL_CSV_PRESENT,
+    )
+
+    gated = len(CSV_GATED)
+    n = len(REGISTRY) + (0 if REAL_CSV_PRESENT else gated)
+    both = rf"{n} (?:registered )?queries \({n - gated} without the reference golden CSV\)"
     expectations = {
-        "README.md": rf"\b{n} registered queries\b",
-        "COVERAGE.md": rf"\*\*{n} registered queries",
-        "QUERIES.md": rf"^{n} queries;",
-        "SURVEY.md": rf"\bstands at {n} queries\b",
+        "README.md": rf"\b{both}",
+        "COVERAGE.md": rf"\*\*{both}",
+        "QUERIES.md": rf"^{both};",
+        "SURVEY.md": rf"\bstands at {both}",
     }
     stale = []
     for fname, pattern in expectations.items():
         with open(os.path.join(root, fname)) as f:
             if not re.search(pattern, f.read(), re.MULTILINE):
                 stale.append(fname)
+    return n, n - gated, stale
+
+
+def test_doc_counts_match_registry():
+    """The judged docs must not lag the registry (r14 verdict item 6:
+    SURVEY.md §8 said '215 queries' for six rounds while the registry
+    stood at 240). Every doc that states the registry size must state
+    the live count — README, COVERAGE, QUERIES, and SURVEY §8 — with
+    and without the golden-CSV entries, on a box with or without the
+    reference checkout."""
+    import os
+
+    n, n_without, stale = _stale_docs(os.path.join(os.path.dirname(__file__), ".."))
     assert not stale, (
-        f"docs with a stale registry count (expected {n}): {stale}"
+        f"docs with a stale registry count (expected {n}, {n_without} "
+        f"without the golden CSV): {stale}"
     )
+
+
+def test_doc_count_check_flags_a_stale_doc(tmp_path):
+    """The count check still catches a doc that lags the registry: a
+    copy of the docs with QUERIES.md one query behind is flagged, and
+    only that doc."""
+    import os
+    import shutil
+
+    root = os.path.join(os.path.dirname(__file__), "..")
+    for fname in ("README.md", "COVERAGE.md", "QUERIES.md", "SURVEY.md"):
+        shutil.copy(os.path.join(root, fname), tmp_path / fname)
+    n, n_without, stale = _stale_docs(str(tmp_path))
+    assert stale == []
+    queries = tmp_path / "QUERIES.md"
+    queries.write_text(
+        queries.read_text().replace(
+            f"{n} queries ({n_without} without",
+            f"{n - 1} queries ({n_without - 1} without",
+        )
+    )
+    assert _stale_docs(str(tmp_path))[2] == ["QUERIES.md"]
 
 
 def test_no_rows_only_anywhere():

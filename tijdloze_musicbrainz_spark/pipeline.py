@@ -588,22 +588,16 @@ def song_aliases(
     )
 
 
-def run_pipeline(tables: dict[str, DataFrame]) -> dict[str, DataFrame]:
-    """The full DAG. ``tables`` holds FIXTURES.md §B.2-shaped inputs;
-    returns the §B.1-shaped exports."""
+def canonical_pipeline(tables: dict[str, DataFrame]) -> dict[str, DataFrame]:
+    """The canonical half of the DAG: area map -> artist cut ->
+    single-from relations -> candidates -> canonical argmin. Callers
+    that read only ``canonical`` use this instead of run_pipeline:
+    PySpark analyzes every DataFrame as it is built, and each export
+    branch re-analyzes the whole canonical plan beneath it."""
     area_map = area_country_map(
         tables["area"], tables["iso_3166_1"], tables["l_area_area"]
     )
     mb_artist = artist_export(tables["artist"], tables["l_artist_url"], area_map)
-    aliases = artist_aliases(
-        mb_artist,
-        tables["artist_alias"],
-        tables["artist_credit_name"],
-        tables["l_artist_artist"],
-        tables["link"],
-        tables["link_attribute"],
-        tables["artist"],
-    )
     relations = single_from_relations(
         tables["artist_credit_name"],
         tables["artist_credit"],
@@ -612,7 +606,29 @@ def run_pipeline(tables: dict[str, DataFrame]) -> dict[str, DataFrame]:
         tables["link"],
     )
     candidates = candidate_entries(tables, mb_artist.select("id"))
-    best = canonical_selection(candidates, relations)
+    return {
+        "area_country_map": area_map,
+        "mb_artist": mb_artist,
+        "single_from_relations": relations,
+        "candidates": candidates,
+        "canonical": canonical_selection(candidates, relations),
+    }
+
+
+def run_pipeline(tables: dict[str, DataFrame]) -> dict[str, DataFrame]:
+    """The full DAG. ``tables`` holds FIXTURES.md §B.2-shaped inputs;
+    returns the §B.1-shaped exports."""
+    canon = canonical_pipeline(tables)
+    best = canon["canonical"]
+    aliases = artist_aliases(
+        canon["mb_artist"],
+        tables["artist_alias"],
+        tables["artist_credit_name"],
+        tables["l_artist_artist"],
+        tables["link"],
+        tables["link_attribute"],
+        tables["artist"],
+    )
 
     # mb_album.release_year is the GROUP-wide year (all releases, no
     # status filter — src/main.py:264-272 exports release_group_year),
@@ -651,12 +667,8 @@ def run_pipeline(tables: dict[str, DataFrame]) -> dict[str, DataFrame]:
     )
 
     return {
-        "area_country_map": area_map,
-        "mb_artist": mb_artist,
+        **canon,
         "mb_artist_alias": aliases,
-        "single_from_relations": relations,
-        "candidates": candidates,
-        "canonical": best,
         "mb_album": mb_album,
         "mb_song": mb_song,
         "mb_song_alias": mb_song_alias,

@@ -435,13 +435,25 @@ best AS (
 )"""
 
 
-def _register_if_csv_present(*args, **kwargs):
+# Entries that register only when the golden CSV exists, present or not.
+CSV_GATED: list[str] = []
+
+
+def _register_if_csv_present(name: str, *args, **kwargs):
     """Register only when the golden CSV exists: a checkout without the
-    reference repo keeps a fully working registry minus this one entry
+    reference repo keeps a fully working registry minus these entries
     (r6 ADVICE item 4)."""
+    CSV_GATED.append(name)
     if REAL_CSV_PRESENT:
-        return register(*args, **kwargs)
+        return register(name, *args, **kwargs)
     return lambda fn: fn
+
+
+def registry_sizes(registry) -> tuple[int, int]:
+    """(size with the golden CSV, size without it) of ``registry``,
+    whichever of the two this checkout has."""
+    n_with = len(registry) + (0 if REAL_CSV_PRESENT else len(CSV_GATED))
+    return n_with, n_with - len(CSV_GATED)
 
 
 @_register_if_csv_present(

@@ -220,6 +220,18 @@ def _pairs_of(
     )
 
 
+def _base_pairs(base_pay: DataFrame, pay_metrics: dict) -> DataFrame:
+    """_pairs_of over the base subset of an observed checkpoint. The
+    gate gets both figures: the measured bytes when the block manager
+    has them, and the exact base row count for the per-row fallback
+    when it does not (a reliable checkpoint dir reports no bytes)."""
+    return _pairs_of(
+        base_pay,
+        n_rows=int(pay_metrics.get("n_base_pay") or 0),
+        est_bytes=_subset_bytes(pay_metrics, "n_base_pay"),
+    )
+
+
 def _build_base(
     spark: SparkSession, sf_dir: str, name: str
 ) -> tuple[str, dict[str, str], DataFrame, DataFrame, int]:
@@ -271,7 +283,7 @@ def _build_base(
 
     # -- build: the ONE corpus-linear clustering pass over the base ----
     base_labels, _ = connected_components(
-        _pairs_of(base_pay, est_bytes=_subset_bytes(pay_m, "n_base_pay"))
+        _base_pairs(base_pay, pay_m)
         .select(F.col("doc_a").alias("u"), F.col("doc_b").alias("v"))
     )
     base_ids = docs_all.filter(F.col("doc_id") % CC_DELTA_MOD != 0)
@@ -845,7 +857,7 @@ def streaming_cluster_ingest_restart(
     # deterministic OVERWRITE unit, which a bucketed append is not).
     base_pay = pay.filter(F.col("doc_id") % CC_DELTA_MOD != 0)
     base_labels, _ = connected_components(
-        _pairs_of(base_pay, est_bytes=_subset_bytes(pay_m, "n_base_pay"))
+        _base_pairs(base_pay, pay_m)
         .select(F.col("doc_a").alias("u"), F.col("doc_b").alias("v"))
     )
     base_ids = docs_all.filter(F.col("doc_id") % CC_DELTA_MOD != 0)

@@ -12,7 +12,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..fixtures import musicbrainz_fixture_tables
-from ..pipeline import run_pipeline
+from ..pipeline import canonical_pipeline, run_pipeline
 from .registry import register
 
 
@@ -38,7 +38,7 @@ SELECT * FROM (VALUES
 )
 def mb_pipeline_canonical_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     tables = musicbrainz_fixture_tables(spark)
-    best = run_pipeline(tables)["canonical"]
+    best = canonical_pipeline(tables)["canonical"]
     return best.select(
         "artist_id",
         "recording_mb_id",
@@ -361,8 +361,9 @@ SELECT artist_id, recording_mb_id, recording_name, release_group_mb_id,
        (release_type = 2) AS is_single
 FROM ranked WHERE rn = 1
 """,
-    doc="The composed dataset-generation DAG at data scale: the full "
-    "run_pipeline over an sf-scaled MusicBrainz-shaped derivation of "
+    doc="The composed dataset-generation DAG at data scale: the "
+    "canonical half of run_pipeline (canonical_pipeline) over an "
+    "sf-scaled MusicBrainz-shaped derivation of "
     "the TPC-H tables (~600k tracks at sf0.1). This is the workload "
     "the reference runs in ~8 h on a t2.large via a per-artist loop; "
     "here it is one set-oriented Spark job (see bench.py). Since r4c "
@@ -371,4 +372,4 @@ FROM ranked WHERE rn = 1
 )
 def mb_pipeline_scale(spark: SparkSession, sf_dir: str) -> DataFrame:
     tables = mb_scale_tables(spark, sf_dir)
-    return run_pipeline(tables)["canonical"]
+    return canonical_pipeline(tables)["canonical"]

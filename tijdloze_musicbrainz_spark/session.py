@@ -13,6 +13,15 @@ one you would also set on a 1000-executor cluster:
 - Session timezone pinned to UTC so timestamp semantics are identical
   to the DuckDB differential oracle (UTC-naive).
 - Arrow on for the few Pandas-UDF code paths (vectorized transfer).
+- ``spark.sql.codegen.useIdInClassName=false``: AQE numbers codegen
+  stages in the order its query stages finish, so the same stage got
+  a different class name on each build. The name is part of the
+  generated source, the codegen cache's key, so every build missed
+  the cache and paid Janino plus JIT again. Without the id the
+  source of an unchanged stage is identical and hits the cache.
+- ``spark.sql.codegen.cache.maxEntries`` raised above the working set
+  (``CODEGEN_CACHE_ENTRIES``): the default 100-entry LRU evicts
+  classes before a repeat build of the same plans can reuse them.
 """
 
 from __future__ import annotations
@@ -22,6 +31,14 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+
+# Generated classes the codegen cache holds (a static conf, read once per
+# JVM). Both benchmark workloads in one JVM compile 193 distinct classes
+# (138 of them etl_export's; tools/codegen_reuse.py --cache-entries
+# 100000), so 512 holds that working set with room. At the default of 100
+# the LRU evicts before reuse: 127 of etl_export's classes recompiled
+# every pass even with stable class names.
+CODEGEN_CACHE_ENTRIES = 512
 
 
 def cpu_count() -> int:
@@ -71,6 +88,10 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        # stable generated class names + a cache that holds the working
+        # set: a repeat build of a plan compiles nothing (module docstring)
+        .config("spark.sql.codegen.useIdInClassName", "false")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
         .config("spark.ui.enabled", "false")
         # 128 MB input splits: keeps scan parallelism aligned with the

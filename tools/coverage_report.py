@@ -13,6 +13,7 @@ import sys
 def main() -> None:
     sys.path.insert(0, ".")
     from tijdloze_musicbrainz_spark.plans import REGISTRY
+    from tijdloze_musicbrainz_spark.plans.benchmark_real import registry_sizes
 
     by_id: dict[str, list[str]] = {}
     for name, spec in sorted(REGISTRY.items()):
@@ -31,9 +32,11 @@ def main() -> None:
         print(f"| {sid} | {', '.join(by_id[sid])} |")
 
     n_oracle = sum(1 for s in REGISTRY.values() if s.oracle is not None)
+    n_with, n_without = registry_sizes(REGISTRY)
     print()
     print(
-        f"**{len(REGISTRY)} registered queries; {n_oracle} oracle-checked, "
+        f"**{n_with} registered queries ({n_without} without the reference "
+        f"golden CSV); {n_oracle} oracle-checked, "
         f"{len(REGISTRY) - n_oracle} rows-only; "
         f"{len(by_id)} SURVEY operator ids covered.**"
     )

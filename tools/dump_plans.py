@@ -2,12 +2,24 @@
 query shapes with the properties worth auditing called out. Run:
 
     python tools/dump_plans.py > PLANS.md
+
+Or dump the extended plans (parsed, analyzed, optimized, physical) of
+named queries, one file each, for a before/after comparison:
+
+    python tools/dump_plans.py --out DIR --tag before [--sf DIR] NAME ...
+
+writes DIR/<name>_<tag>.txt. Expression and plan ids are renumbered in
+order of first appearance, so two builds of the same plan give the same
+file and ``diff`` shows only real plan changes.
 """
 
 from __future__ import annotations
 
+import argparse
 import contextlib
 import io
+import os
+import re
 import sys
 
 AUDITED = {
@@ -435,12 +447,52 @@ AUDITED = {
 }
 
 
+def stable_ids(plan: str) -> str:
+    """Renumber ``#<id>`` expression ids and ``plan_id=<id>`` in order of
+    first appearance: the counters behind them differ between builds."""
+    seen: dict[str, int] = {}
+
+    def renumber(m: re.Match) -> str:
+        key = m.group(0)
+        seen.setdefault(key, len(seen) + 1)
+        return f"{m.group(1)}{seen[key]}"
+
+    return re.sub(r"(#|plan_id=)\d+", renumber, plan)
+
+
+def dump_named(spark, names: list[str], sf_dir: str, out: str, tag: str) -> None:
+    from tijdloze_musicbrainz_spark.plans import REGISTRY
+
+    os.makedirs(out, exist_ok=True)
+    for name in names:
+        df = REGISTRY[name].builder(spark, sf_dir)
+        buf = io.StringIO()
+        with contextlib.redirect_stdout(buf):
+            df.explain("extended")
+        path = os.path.join(out, f"{name}_{tag}.txt")
+        with open(path, "w") as f:
+            f.write(f"# {name} ({tag}): explain('extended') at {sf_dir}\n")
+            f.write(stable_ids(buf.getvalue()).rstrip() + "\n")
+        print(f"[plans] wrote {path}", file=sys.stderr)
+
+
 def main() -> None:
+    ap = argparse.ArgumentParser()
+    ap.add_argument("names", nargs="*")
+    ap.add_argument("--out")
+    ap.add_argument("--tag", default="plan")
+    # named dumps default to the benchmark's scale and tables
+    ap.add_argument("--sf", default=os.path.join("perfbench", "data", "sf0.01"))
+    args = ap.parse_args()
+
     sys.path.insert(0, ".")
     from tijdloze_musicbrainz_spark.plans import REGISTRY
     from tijdloze_musicbrainz_spark.session import get_spark
 
     spark = get_spark("dump_plans", shuffle_partitions=8)
+    if args.out:
+        dump_named(spark, args.names, args.sf, args.out, args.tag)
+        return
     print("# PLANS — formatted physical plans of the headline shapes")
     print()
     print(

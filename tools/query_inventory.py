@@ -12,11 +12,15 @@ import sys
 def main() -> None:
     sys.path.insert(0, ".")
     from tijdloze_musicbrainz_spark.plans import REGISTRY
+    from tijdloze_musicbrainz_spark.plans.benchmark_real import registry_sizes
+
+    n_with, n_without = registry_sizes(REGISTRY)
 
     print("# QUERIES — the registered operator inventory")
     print()
     print(
-        f"{len(REGISTRY)} queries; every one carries a DuckDB oracle. "
+        f"{n_with} queries ({n_without} without the reference golden CSV); "
+        "every one carries a DuckDB oracle. "
         "Generated by `python tools/query_inventory.py > QUERIES.md`; "
         "per-SURVEY-id mapping lives in COVERAGE.md, plan audits in "
         "PLANS.md."
