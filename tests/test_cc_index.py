@@ -18,7 +18,6 @@ from pyspark.sql import functions as F
 from tijdloze_musicbrainz_spark.plans import REGISTRY
 from tijdloze_musicbrainz_spark.plans.cc_index import (
     CC_DELTA_MOD,
-    CC_PAY_BCAST_MAX_BYTES,
     CC_PAY_BCAST_ROW_BYTES,
     _base_pairs,
     _block_runs,
@@ -26,6 +25,7 @@ from tijdloze_musicbrainz_spark.plans.cc_index import (
     _ingest_batch,
     _probe_pairs,
 )
+from tijdloze_musicbrainz_spark.plans.util import BCAST_MAX_BYTES
 
 
 def _plan(df) -> str:
@@ -244,5 +244,5 @@ def test_base_pairs_gate_falls_back_to_row_count_without_bytes(spark):
         return "strategy=broadcast" in plan.toString()
 
     assert hinted({"bytes": None, "n_rows": 3, "n_base_pay": 3})
-    too_many = CC_PAY_BCAST_MAX_BYTES // CC_PAY_BCAST_ROW_BYTES + 1
+    too_many = BCAST_MAX_BYTES // CC_PAY_BCAST_ROW_BYTES + 1
     assert not hinted({"bytes": None, "n_rows": too_many, "n_base_pay": too_many})

@@ -34,18 +34,17 @@ from pyspark.sql import functions as F
 from tijdloze_musicbrainz_spark.plans import REGISTRY
 from tijdloze_musicbrainz_spark.plans import cc_index as cc
 from tijdloze_musicbrainz_spark.plans import dedup_index as di
-from tijdloze_musicbrainz_spark.plans.lifecycle import (
-    current_snapshot,
-    current_snapshot_version,
-    index_root,
-    sf_tag,
-)
+from tijdloze_musicbrainz_spark.plans.lifecycle import index_root, sf_tag
 from tijdloze_musicbrainz_spark.plans.similarity import pq_lifecycle as pq
 from tijdloze_musicbrainz_spark.plans.util import t
 from tijdloze_musicbrainz_spark.sources.bucketing import (
     ConcurrentAppendError,
     exclusive_append,
     lock_payload,
+)
+from tijdloze_musicbrainz_spark.sources.commit_log import (
+    current_snapshot,
+    current_snapshot_version,
 )
 from tijdloze_musicbrainz_spark.sources.store_io import get_store_io
 

@@ -19,16 +19,15 @@ import pytest
 from pyspark.sql import functions as F
 
 from tijdloze_musicbrainz_spark.plans import REGISTRY
-from tijdloze_musicbrainz_spark.plans.lifecycle import (
-    commit_snapshot,
-    current_snapshot,
-    current_snapshot_version,
-    index_root,
-    sf_tag,
-)
+from tijdloze_musicbrainz_spark.plans.lifecycle import index_root, sf_tag
 from tijdloze_musicbrainz_spark.sources.bucketing import (
     ConcurrentAppendError,
     exclusive_append,
+)
+from tijdloze_musicbrainz_spark.sources.commit_log import (
+    commit_snapshot,
+    current_snapshot,
+    current_snapshot_version,
 )
 
 

@@ -1,6 +1,6 @@
 """Concurrent-reader visibility for index-compaction swaps (r11
 verdict item 3): compaction writes a FRESH store and then publishes it
-with one atomic pointer flip (plans/lifecycle.py publish_store /
+with one atomic pointer flip (sources/commit_log.py publish_store /
 current_store). These are REAL two-thread races, the index tiers'
 sibling of tests/test_manifest.py's two-writer proof: a reader loops
 resolve-pointer -> full probe while the compactor rewrites and
@@ -19,8 +19,8 @@ from pyspark.sql import functions as F
 
 def test_concurrent_probe_during_band_index_compaction(spark, tmp_path):
     from tijdloze_musicbrainz_spark.plans import dedup_index as di
-    from tijdloze_musicbrainz_spark.plans.lifecycle import (
-        compact_bucketed,
+    from tijdloze_musicbrainz_spark.plans.lifecycle import compact_bucketed
+    from tijdloze_musicbrainz_spark.sources.commit_log import (
         current_store,
         publish_store,
     )
@@ -124,7 +124,7 @@ def test_concurrent_label_read_during_label_compaction(spark, tmp_path):
     the SAME (doc_id, cluster_id) set, so any torn read of a
     half-written flat store fails the equality."""
     from tijdloze_musicbrainz_spark.plans import cc_index as cc
-    from tijdloze_musicbrainz_spark.plans.lifecycle import (
+    from tijdloze_musicbrainz_spark.sources.commit_log import (
         current_store,
         publish_store,
     )

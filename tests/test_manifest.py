@@ -1,10 +1,12 @@
 """Commit-protocol properties of the manifest-committed table
-(operators/manifest.py): snapshot isolation across a multi-bucket
-merge, crash safety before the pointer swap, optimistic-concurrency
-conflict detection, and time travel."""
+(operators/manifest.py, a client of sources/commit_log.py): snapshot
+isolation across a multi-bucket merge, crash safety before the pointer
+flip, optimistic-concurrency conflict detection under the table's
+lease, and time travel."""
 
 from __future__ import annotations
 
+import contextlib
 import os
 
 import pytest
@@ -12,10 +14,16 @@ import pytest
 from pyspark.sql import functions as F
 
 from tijdloze_musicbrainz_spark.operators.manifest import (
-    CommitConflict,
-    current_version,
     merge_upsert_manifest,
     read_table,
+)
+from tijdloze_musicbrainz_spark.sources.commit_log import (
+    SnapshotConflict,
+    current_snapshot_version,
+)
+from tijdloze_musicbrainz_spark.sources.store_io import (
+    get_store_io,
+    set_store_io,
 )
 
 
@@ -24,17 +32,76 @@ def _rows(spark, table, version=None):
     return {(r.k, r.seq, r.v) for r in df.collect()} if df is not None else set()
 
 
+class _CrashAtPointerFlip:
+    """Store-IO wrapper that dies at the commit point — the ``_CURRENT``
+    pointer flip — and forwards every other call (the lease's own
+    atomic puts included)."""
+
+    def __init__(self, inner):
+        self._inner = inner
+
+    def __getattr__(self, name):
+        return getattr(self._inner, name)
+
+    def put_atomic(self, path, text):
+        if os.path.basename(path) == "_CURRENT":
+            raise RuntimeError("simulated crash at the commit point")
+        self._inner.put_atomic(path, text)
+
+
+@contextlib.contextmanager
+def _crash_at_pointer_flip():
+    prev = get_store_io()
+    set_store_io(_CrashAtPointerFlip(prev))
+    try:
+        yield
+    finally:
+        set_store_io(prev)
+
+
+def _during_next_merge(monkeypatch, action):
+    """Run ``action`` once, inside the next merge: after it has read
+    its base snapshot and before it commits (its dedup step). Merges
+    that ``action`` runs itself pass straight through."""
+    import tijdloze_musicbrainz_spark.operators.manifest as m
+
+    real = m.dedup_last_wins
+    fired = []
+
+    def hooked(*a, **k):
+        if not fired:
+            fired.append(True)
+            action()
+        return real(*a, **k)
+
+    monkeypatch.setattr(m, "dedup_last_wins", hooked)
+
+
+def _snapshot_files(table):
+    """(versions, referenced data entries) over every manifest on disk."""
+    import json
+
+    sdir = os.path.join(table, "_snapshots")
+    versions, referenced = [], set()
+    for name in os.listdir(sdir):
+        versions.append(int(name[1:-5]))
+        with open(os.path.join(sdir, name)) as f:
+            for entries in json.load(f)["files"].values():
+                referenced.update(entries)
+    return sorted(versions), referenced
+
+
 def test_merge_and_snapshot_versions(spark, tmp_path_factory):
     table = str(tmp_path_factory.mktemp("manifest") / "t")
     full = spark.range(100).selectExpr("id as k", "1L as seq", "id as v")
     touched = merge_upsert_manifest(full, table, ["k"], "seq")
     assert len(touched) > 1  # multi-bucket commit
-    assert current_version(table) == 0
+    assert current_snapshot_version(table) == 0
     assert len(_rows(spark, table)) == 100
 
     inc = spark.createDataFrame([(7, 2, 999), (13, 2, 888)], "k long, seq long, v long")
     merge_upsert_manifest(inc, table, ["k"], "seq")
-    assert current_version(table) == 1
+    assert current_snapshot_version(table) == 1
     now = _rows(spark, table)
     assert (7, 2, 999) in now and (13, 2, 888) in now
     assert len(now) == 100  # keys upserted, not appended
@@ -48,55 +115,65 @@ def test_crash_before_pointer_swap_leaves_old_snapshot(
     spark, tmp_path_factory, monkeypatch
 ):
     """Simulate a crash AFTER data files and manifest are written but
-    BEFORE the pointer swap: readers must still see the old snapshot,
-    and a retried merge must succeed and converge."""
+    BEFORE the pointer flip: readers must still see the old snapshot,
+    and a plain retry must succeed and converge — the next leased
+    commit reclaims the orphaned manifest, and vacuum reclaims the
+    crashed attempt's data entries."""
     table = str(tmp_path_factory.mktemp("manifest_crash") / "t")
     full = spark.range(50).selectExpr("id as k", "1L as seq", "id as v")
     merge_upsert_manifest(full, table, ["k"], "seq")
     before = _rows(spark, table)
 
-    import tijdloze_musicbrainz_spark.operators.manifest as m
-
-    real_replace = os.replace
-
-    def crash(src, dst):
-        raise RuntimeError("simulated crash at the commit point")
-
-    monkeypatch.setattr(m.os, "replace", crash)
     inc = spark.createDataFrame([(7, 2, 999)], "k long, seq long, v long")
-    with pytest.raises(RuntimeError, match="simulated crash"):
-        merge_upsert_manifest(inc, table, ["k"], "seq")
-    monkeypatch.setattr(m.os, "replace", real_replace)
+    with _crash_at_pointer_flip():
+        with pytest.raises(RuntimeError, match="simulated crash"):
+            merge_upsert_manifest(inc, table, ["k"], "seq")
 
     # reader is untouched: still the old snapshot, pointer still v0
-    assert current_version(table) == 0
+    assert current_snapshot_version(table) == 0
+    assert os.path.exists(os.path.join(table, "_snapshots", "v1.json"))
     assert _rows(spark, table) == before
 
-    # the orphaned v1 manifest blocks a blind retry (conflict), which
-    # is the protocol telling the writer to clean up / re-resolve
-    with pytest.raises(CommitConflict):
-        merge_upsert_manifest(inc, table, ["k"], "seq")
-    # crash recovery: remove the orphan commit attempt and retry
-    os.remove(os.path.join(table, "_manifests", "v1.json"))
+    # crash recovery is the retry itself: the orphan v1 is reclaimed
     merge_upsert_manifest(inc, table, ["k"], "seq")
+    assert current_snapshot_version(table) == 1
     after = _rows(spark, table)
     assert (7, 2, 999) in after and len(after) == 50
 
+    # the crashed attempt's renamed entries are referenced by nothing;
+    # vacuum (keeping both versions) reclaims exactly those
+    from tijdloze_musicbrainz_spark.operators.manifest import vacuum
 
-def test_concurrent_committers_conflict(spark, tmp_path_factory):
-    """Two writers preparing version N+1 from the same base: the
-    second commit must raise CommitConflict, never silently clobber."""
-    import json
+    _, referenced = _snapshot_files(table)
+    on_disk = {f"data/{e}" for e in os.listdir(os.path.join(table, "data"))}
+    assert on_disk - referenced
+    assert set(vacuum(table, keep_versions=2)) == on_disk - referenced
+    assert _rows(spark, table) == after
 
+
+def test_concurrent_committers_conflict(spark, tmp_path_factory, monkeypatch):
+    """Two writers preparing version N+1 from the same base: writer B
+    really commits v1 while writer A is mid-merge, so A's commit must
+    raise SnapshotConflict, never silently clobber B."""
     table = str(tmp_path_factory.mktemp("manifest_cc") / "t")
     full = spark.range(20).selectExpr("id as k", "1L as seq", "id as v")
     merge_upsert_manifest(full, table, ["k"], "seq")
-    # writer A sneaks in a v1 manifest (as if committed elsewhere)
-    with open(os.path.join(table, "_manifests", "v1.json"), "x") as f:
-        json.dump({"version": 1, "files": {}}, f)
+
+    def writer_b():
+        merge_upsert_manifest(
+            spark.createDataFrame([(5, 2, 555)], "k long, seq long, v long"),
+            table,
+            ["k"],
+            "seq",
+        )
+
+    _during_next_merge(monkeypatch, writer_b)
     inc = spark.createDataFrame([(3, 2, 1)], "k long, seq long, v long")
-    with pytest.raises(CommitConflict):
+    with pytest.raises(SnapshotConflict):
         merge_upsert_manifest(inc, table, ["k"], "seq")
+    assert current_snapshot_version(table) == 1
+    rows = _rows(spark, table)
+    assert (5, 2, 555) in rows and (3, 2, 1) not in rows
 
 
 def test_replayed_batch_is_idempotent(spark, tmp_path_factory):
@@ -106,7 +183,7 @@ def test_replayed_batch_is_idempotent(spark, tmp_path_factory):
     snap1 = _rows(spark, table)
     merge_upsert_manifest(full, table, ["k"], "seq")  # replay
     assert _rows(spark, table) == snap1  # same winners, new version
-    assert current_version(table) == 1
+    assert current_snapshot_version(table) == 1
 
 
 def test_cdc_merge_deletes_and_reinserts(spark, tmp_path_factory):
@@ -205,26 +282,20 @@ def test_cdc_tombstone_outlives_its_batch(spark, tmp_path_factory):
 def test_time_travel_to_uncommitted_version_refused(
     spark, tmp_path_factory, monkeypatch
 ):
-    """r6 (ADVICE 2): an orphaned manifest beyond _LATEST (crash
-    between manifest write and pointer swap) must not be readable as
-    if committed."""
-    import tijdloze_musicbrainz_spark.operators.manifest as m
-
+    """r6 (ADVICE 2): an orphaned manifest beyond the _CURRENT pointer
+    (crash between manifest write and pointer flip) must not be
+    readable as if committed."""
     table = str(tmp_path_factory.mktemp("manifest_orphan") / "t")
     full = spark.range(10).selectExpr("id as k", "1L as seq", "id as v")
     merge_upsert_manifest(full, table, ["k"], "seq")
 
-    real_replace = os.replace
-    monkeypatch.setattr(
-        m.os, "replace", lambda s, d: (_ for _ in ()).throw(RuntimeError("crash"))
-    )
     inc = spark.createDataFrame([(7, 2, 999)], "k long, seq long, v long")
-    with pytest.raises(RuntimeError, match="crash"):
-        merge_upsert_manifest(inc, table, ["k"], "seq")
-    monkeypatch.setattr(m.os, "replace", real_replace)
+    with _crash_at_pointer_flip():
+        with pytest.raises(RuntimeError, match="crash"):
+            merge_upsert_manifest(inc, table, ["k"], "seq")
 
     # v1.json exists on disk but was never committed
-    assert os.path.exists(os.path.join(table, "_manifests", "v1.json"))
+    assert os.path.exists(os.path.join(table, "_snapshots", "v1.json"))
     with pytest.raises(ValueError, match="not committed"):
         read_table(spark, table, version=1)
     # the committed snapshot is still served normally
@@ -245,18 +316,18 @@ def test_compaction_preserves_snapshot_and_shrinks_files(
         )
         merge_upsert_manifest(batch, table, ["k"], "seq")
     before = _rows(spark, table)
-    v_before = current_version(table)
+    v_before = current_snapshot_version(table)
     n_files_before = len(glob.glob(f"{table}/data/*/*.parquet"))
 
     compact(table, spark)
-    assert current_version(table) == v_before + 1
+    assert current_snapshot_version(table) == v_before + 1
     assert _rows(spark, table) == before  # contents identical
     # old version still readable (immutable files retained)
     assert _rows(spark, table, version=v_before) == before
     import json as _json
     import os as _os
 
-    with open(_os.path.join(table, "_manifests", f"v{v_before + 1}.json")) as f:
+    with open(_os.path.join(table, "_snapshots", f"v{v_before + 1}.json")) as f:
         m = _json.load(f)
     # one entry PER BUCKET after OPTIMIZE (bucket structure preserved)
     assert all(len(v) == 1 for v in m["files"].values())
@@ -286,7 +357,7 @@ def test_vacuum_removes_only_unreferenced_files(spark, tmp_path_factory):
         )
         merge_upsert_manifest(batch, table, ["k"], "seq")
     live = _rows(spark, table)
-    v = current_version(table)
+    v = current_snapshot_version(table)
 
     deleted = vacuum(table, keep_versions=2)
     assert deleted  # old rewrites were garbage
@@ -395,34 +466,27 @@ def test_upsert_over_cdc_written_table(spark, tmp_path_factory):
 
 
 def test_merge_with_retry_survives_a_lost_race(spark, tmp_path_factory, monkeypatch):
-    """r8: the optimistic-concurrency retry loop. A merge that read a
-    STALE snapshot loses the commit race (CommitConflict); the retry
-    re-reads the winner's snapshot and merges over it — the final
-    table holds BOTH writers' effects, no lost updates."""
+    """r8: the optimistic-concurrency retry loop. A merge whose base
+    goes STALE (the winner commits while it merges) loses under the
+    lease (SnapshotConflict); the retry re-reads the winner's snapshot
+    and merges over it — the final table holds BOTH writers' effects,
+    no lost updates."""
     import tijdloze_musicbrainz_spark.operators.manifest as m
 
     table = str(tmp_path_factory.mktemp("manifest_retry") / "t")
     base = spark.range(20).selectExpr("id as k", "1L as seq", "id as v")
     merge_upsert_manifest(base, table, ["k"], "seq")  # v0
-    # the "winner": a second writer commits v1 first
-    merge_upsert_manifest(
-        spark.createDataFrame([(5, 2, 555)], "k long, seq long, v long"),
-        table,
-        ["k"],
-        "seq",
-    )
-    assert current_version(table) == 1
 
-    # make the NEXT merge read a stale snapshot (as if it had started
-    # before the winner committed), then see reality on retry
-    real_cv = m.current_version
-    calls = {"n": 0}
+    # the "winner": a second writer commits v1 during the first attempt
+    def winner():
+        merge_upsert_manifest(
+            spark.createDataFrame([(5, 2, 555)], "k long, seq long, v long"),
+            table,
+            ["k"],
+            "seq",
+        )
 
-    def stale_once(t):
-        calls["n"] += 1
-        return 0 if calls["n"] == 1 else real_cv(t)
-
-    monkeypatch.setattr(m, "current_version", stale_once)
+    _during_next_merge(monkeypatch, winner)
     touched = m.merge_with_retry(
         m.merge_upsert_manifest,
         spark.createDataFrame([(3, 3, 333)], "k long, seq long, v long"),
@@ -431,6 +495,7 @@ def test_merge_with_retry_survives_a_lost_race(spark, tmp_path_factory, monkeypa
         "seq",
     )
     assert touched  # the retry committed
+    assert current_snapshot_version(table) == 2
     now = _rows(spark, table)
     assert (3, 3, 333) in now  # loser's batch landed
     assert (5, 2, 555) in now  # winner's update NOT clobbered
@@ -447,13 +512,10 @@ def test_merge_with_retry_gives_up_after_max(spark, tmp_path_factory, monkeypatc
         ["k"],
         "seq",
     )
-    monkeypatch.setattr(m, "current_version", lambda t: 0)
-    # real version is 0, but every commit of v1 collides with itself
-    # after the first orphaned attempt? force it simpler: always raise
     def always_conflict(*a, **k):
-        raise m.CommitConflict("forced")
+        raise SnapshotConflict("forced")
 
-    with pytest.raises(m.CommitConflict):
+    with pytest.raises(SnapshotConflict):
         m.merge_with_retry(
             always_conflict,
             spark.range(1).selectExpr("id as k", "1L as seq", "id as v"),
@@ -484,16 +546,12 @@ def test_merge_with_retry_rejects_negative_max(spark, tmp_path_factory):
 def test_lost_race_leaves_no_orphan_data_files(
     spark, tmp_path_factory, monkeypatch
 ):
-    """r9 (r8 ADVICE): a losing committer had already renamed its
-    staged bucket files into data/ before _commit raised — those files
-    are referenced by NO manifest, so vacuum() (which walks manifests)
-    could never reclaim them and a contended table grew unboundedly.
-    The loser must delete its own renamed entries before re-raising.
+    """r9 (r8 ADVICE): a losing committer must leave nothing under
+    data/ — a contended table must not grow unboundedly. The stale
+    base is detected under the lease BEFORE any staged bucket is
+    renamed into data/, so the loser has nothing to clean up.
     Invariant checked: after a lost race, every file under data/ is
     referenced by some manifest version."""
-    import json
-    import os
-
     import tijdloze_musicbrainz_spark.operators.manifest as m
 
     table = str(tmp_path_factory.mktemp("manifest_orphans") / "t")
@@ -503,22 +561,17 @@ def test_lost_race_leaves_no_orphan_data_files(
         ["k"],
         "seq",
     )  # v0
-    merge_upsert_manifest(
-        spark.createDataFrame([(5, 2, 555)], "k long, seq long, v long"),
-        table,
-        ["k"],
-        "seq",
-    )  # v1
 
-    # force ONE stale read so the next merge attempts v1 and collides
-    real_cv = m.current_version
-    calls = {"n": 0}
+    # the winner commits v1 while the loser's first attempt merges
+    def winner():
+        merge_upsert_manifest(
+            spark.createDataFrame([(5, 2, 555)], "k long, seq long, v long"),
+            table,
+            ["k"],
+            "seq",
+        )
 
-    def stale_once(t):
-        calls["n"] += 1
-        return 0 if calls["n"] == 1 else real_cv(t)
-
-    monkeypatch.setattr(m, "current_version", stale_once)
+    _during_next_merge(monkeypatch, winner)
     m.merge_with_retry(
         m.merge_upsert_manifest,
         spark.createDataFrame([(3, 3, 333)], "k long, seq long, v long"),
@@ -527,15 +580,8 @@ def test_lost_race_leaves_no_orphan_data_files(
         "seq",
     )
 
-    referenced = set()
-    mdir = os.path.join(table, "_manifests")
-    for name in os.listdir(mdir):
-        with open(os.path.join(mdir, name)) as f:
-            for entries in json.load(f)["files"].values():
-                referenced.update(
-                    e.removeprefix("data/") for e in entries
-                )
-    on_disk = set(os.listdir(os.path.join(table, "data")))
+    _, referenced = _snapshot_files(table)
+    on_disk = {f"data/{e}" for e in os.listdir(os.path.join(table, "data"))}
     orphans = on_disk - referenced
     assert not orphans, f"lost race leaked unreferenced files: {orphans}"
     # and the retry still landed both writers' effects
@@ -756,8 +802,6 @@ def test_real_two_writer_race_serializes_and_leaks_nothing(
     version count equals commit count, every manifest references only
     files that exist, and no file under data/ is unreferenced (the
     loser's cleanup really runs under contention)."""
-    import json
-    import os
     import threading
 
     import tijdloze_musicbrainz_spark.operators.manifest as m
@@ -799,16 +843,57 @@ def test_real_two_writer_race_serializes_and_leaks_nothing(
     assert len(rows) == 60
 
     # manifest/file-system invariants under contention
-    mdir = os.path.join(table, "_manifests")
-    versions = sorted(int(f[1:-5]) for f in os.listdir(mdir))
+    versions, referenced = _snapshot_files(table)
     assert versions == list(range(len(versions)))  # dense, no gaps
-    assert m.current_version(table) == versions[-1]
-    referenced = set()
-    for f in os.listdir(mdir):
-        with open(os.path.join(mdir, f)) as fh:
-            for entries in json.load(fh)["files"].values():
-                for e in entries:
-                    assert os.path.exists(os.path.join(table, e)), e
-                    referenced.add(e.removeprefix("data/"))
-    on_disk = set(os.listdir(os.path.join(table, "data")))
+    assert current_snapshot_version(table) == versions[-1]
+    for e in referenced:
+        assert os.path.exists(os.path.join(table, e)), e
+    on_disk = {f"data/{e}" for e in os.listdir(os.path.join(table, "data"))}
     assert on_disk <= referenced, f"orphans: {on_disk - referenced}"
+
+
+def test_stale_writer_conflicts_after_vacuum_and_keeps_the_table(
+    spark, tmp_path_factory, monkeypatch
+):
+    """A writer that read v0 must not commit over a table that moved
+    on — even once vacuum has dropped the manifest its version number
+    would collide with. While writer A merges over v0, writer B
+    commits v1 and v2 and vacuums with keep 1 (v0/v1 manifests and
+    their superseded data gone). A's commit must raise
+    SnapshotConflict under the lease: the pointer stays at v2 and the
+    table still reads. (A version-file create alone passes here —
+    v1.json no longer exists — and rolls the pointer back to a
+    manifest naming vacuumed files.)"""
+    from tijdloze_musicbrainz_spark.operators.manifest import vacuum
+
+    table = str(tmp_path_factory.mktemp("manifest_stale") / "t")
+    merge_upsert_manifest(
+        spark.range(20).selectExpr("id as k", "1L as seq", "id as v"),
+        table,
+        ["k"],
+        "seq",
+    )  # v0
+
+    def writer_b():
+        for row in ((5, 2, 555), (6, 3, 666)):
+            merge_upsert_manifest(
+                spark.createDataFrame([row], "k long, seq long, v long"),
+                table,
+                ["k"],
+                "seq",
+            )
+        assert vacuum(table, keep_versions=1)
+
+    _during_next_merge(monkeypatch, writer_b)
+    with pytest.raises(SnapshotConflict):
+        merge_upsert_manifest(
+            spark.createDataFrame([(3, 9, 333)], "k long, seq long, v long"),
+            table,
+            ["k"],
+            "seq",
+        )
+    assert current_snapshot_version(table) == 2
+    rows = _rows(spark, table)
+    assert len(rows) == 20
+    assert (5, 2, 555) in rows and (6, 3, 666) in rows
+    assert (3, 9, 333) not in rows

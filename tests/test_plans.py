@@ -420,8 +420,6 @@ DRIVER_MATERIALIZATION_ALLOWLIST = {
         "distinct touched bucket ids (<= num_buckets)",
     ("operators/manifest.py", "merge_upsert_manifest", "collect"):
         "distinct touched bucket ids (<= num_buckets)",
-    ("operators/manifest.py", "merge_cdc_manifest", "collect"):
-        "distinct touched bucket ids (<= num_buckets)",
     ("operators/manifest.py", "commit_clustered", "collect"):
         "one stats row per committed file (manifest metadata)",
     ("operators/manifest.py", "compact", "first"):

@@ -31,19 +31,19 @@ import threading
 
 import pytest
 
-from tijdloze_musicbrainz_spark.plans.lifecycle import (
-    SnapshotConflict,
-    commit_snapshot,
-    current_snapshot,
-    current_snapshot_version,
-    vacuum_unreferenced,
-)
 from tijdloze_musicbrainz_spark.sources import bucketing as bk
 from tijdloze_musicbrainz_spark.sources.bucketing import (
     ConcurrentAppendError,
     FencedOut,
     exclusive_append,
     lock_payload,
+)
+from tijdloze_musicbrainz_spark.sources.commit_log import (
+    SnapshotConflict,
+    commit_snapshot,
+    current_snapshot,
+    current_snapshot_version,
+    vacuum_unreferenced,
 )
 from tijdloze_musicbrainz_spark.sources.store_io import get_store_io
 
@@ -522,7 +522,6 @@ def test_vacuum_ann_tier_after_compaction(spark, sf_dir):
     must answer identically from the compacted snapshot."""
     from pyspark.sql import functions as F
 
-    from tijdloze_musicbrainz_spark.plans.lifecycle import current_snapshot
     from tijdloze_musicbrainz_spark.plans.similarity import (
         pq_lifecycle as pq,
     )
@@ -547,11 +546,7 @@ def test_vacuum_ann_tier_after_compaction(spark, sf_dir):
     topk, _, _, _ = pq._pq_query_stored(spark, base, subs, root, corpus)
     before = {tuple(r) for r in topk.collect()}
 
-    from tijdloze_musicbrainz_spark.plans.lifecycle import (
-        commit_snapshot,
-        compact_partitioned,
-        vacuum_unreferenced,
-    )
+    from tijdloze_musicbrainz_spark.plans.lifecycle import compact_partitioned
     from tijdloze_musicbrainz_spark.sources.bucketing import (
         exclusive_append,
     )
@@ -596,11 +591,9 @@ def test_vacuum_cc_tier_after_label_compaction(spark, sf_dir):
     from pyspark.sql import functions as F
 
     from tijdloze_musicbrainz_spark.plans import cc_index as cc
-    from tijdloze_musicbrainz_spark.plans.lifecycle import (
-        current_snapshot,
+    from tijdloze_musicbrainz_spark.sources.commit_log import (
         current_store,
         publish_store,
-        vacuum_unreferenced,
     )
     from tijdloze_musicbrainz_spark.sources.bucketing import (
         exclusive_append,

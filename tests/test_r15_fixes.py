@@ -34,19 +34,19 @@ import subprocess
 
 import pytest
 
-from tijdloze_musicbrainz_spark.plans import lifecycle
-from tijdloze_musicbrainz_spark.plans.lifecycle import (
-    SnapshotConflict,
-    commit_snapshot,
-    current_snapshot,
-    vacuum_unreferenced,
-)
 from tijdloze_musicbrainz_spark.sources import bucketing as bk
+from tijdloze_musicbrainz_spark.sources import commit_log
 from tijdloze_musicbrainz_spark.sources.bucketing import (
     ConcurrentAppendError,
     FencedOut,
     exclusive_append,
     lock_payload,
+)
+from tijdloze_musicbrainz_spark.sources.commit_log import (
+    SnapshotConflict,
+    commit_snapshot,
+    current_snapshot,
+    vacuum_unreferenced,
 )
 from tijdloze_musicbrainz_spark.sources.store_io import get_store_io
 
@@ -231,7 +231,7 @@ def test_commit_renews_first_so_takeover_cannot_straddle_the_publish(
     test fails (B acquires inside the gap)."""
     root = str(tmp_path / "idx")
     commit_snapshot(root, {"state": "base"})
-    real_publish = lifecycle.publish_store
+    real_publish = commit_log.publish_store
 
     with exclusive_append(root, owner="a", lease_s=60.0) as lease_a:
         fake_clock["t"] += 59.5  # 0.5 s of runway left
@@ -245,7 +245,7 @@ def test_commit_renews_first_so_takeover_cannot_straddle_the_publish(
                     pass
             real_publish(r, target)
 
-        monkeypatch.setattr(lifecycle, "publish_store", descheduled_then_flip)
+        monkeypatch.setattr(commit_log, "publish_store", descheduled_then_flip)
         commit_snapshot(root, {"state": "a_safe"}, lease=lease_a)
         monkeypatch.undo()
     assert current_snapshot(root) == {"state": "a_safe"}

@@ -98,7 +98,7 @@ def fake_io():
 
 
 def test_pointer_publish_and_resolve_through_fake(fake_io):
-    from tijdloze_musicbrainz_spark.plans.lifecycle import (
+    from tijdloze_musicbrainz_spark.sources.commit_log import (
         current_store,
         publish_store,
     )
@@ -113,7 +113,8 @@ def test_pointer_publish_and_resolve_through_fake(fake_io):
 
 
 def test_snapshot_commit_chain_and_orphan_reclaim_through_fake(fake_io):
-    from tijdloze_musicbrainz_spark.plans.lifecycle import (
+    from tijdloze_musicbrainz_spark.sources.commit_log import (
+        SnapshotConflict,
         commit_snapshot,
         current_snapshot,
         current_snapshot_version,
@@ -131,9 +132,6 @@ def test_snapshot_commit_chain_and_orphan_reclaim_through_fake(fake_io):
     # Reclaim requires the tier lease (r15: lease-less callers lose
     # with SnapshotConflict instead of guessing) — acquiring it here
     # also drives the lock + conditional-delete flow through the fake.
-    from tijdloze_musicbrainz_spark.plans.lifecycle import (
-        SnapshotConflict,
-    )
     from tijdloze_musicbrainz_spark.sources.bucketing import (
         exclusive_append,
     )
@@ -185,3 +183,69 @@ def test_sidecar_and_partition_listing_through_fake(fake_io, spark):
     for key in ("part=3/f.parquet", "part=7/f.parquet", "_SUCCESS"):
         fake_io.put_atomic(f"/fake/store/{key}", "x")
     assert list_partition_ids("/fake/store") == {3, 7}
+
+
+def test_manifest_table_metadata_through_fake(fake_io, spark, tmp_path):
+    """Manifest tables commit through the same log: merges, time travel
+    and vacuum put every snapshot manifest, pointer and lock object in
+    the fake, and leave only parquet data on disk. (Data deletion is
+    not checked here: the fake lists metadata only, so vacuum's sweep
+    sees no data entries and drops only out-of-window manifests.)"""
+    import os
+
+    from tijdloze_musicbrainz_spark.operators.manifest import (
+        merge_upsert_manifest,
+        read_table,
+        vacuum,
+    )
+
+    conditional = []
+    real_put_if_absent = fake_io.put_if_absent
+
+    def recording_put_if_absent(path, text):
+        conditional.append(path)
+        return real_put_if_absent(path, text)
+
+    fake_io.put_if_absent = recording_put_if_absent
+    table = str(tmp_path / "t")
+    for seq in (1, 2, 3):
+        merge_upsert_manifest(
+            spark.range(10).selectExpr(
+                "id as k", f"{seq}L as seq", f"id * {seq} as v"
+            ),
+            table,
+            ["k"],
+            "seq",
+        )
+
+    assert fake_io.objs[f"{table}/_CURRENT"] == "v2"
+    snapshots = {f"{table}/_snapshots/v{v}.json" for v in range(3)}
+    assert snapshots <= set(fake_io.objs)
+    assert conditional.count(f"{table}/_APPEND_LOCK") == 3  # one per commit
+    assert f"{table}/_APPEND_LOCK" not in fake_io.objs  # each released
+    # time travel resolves through the fake's manifests
+    assert {r.v for r in read_table(spark, table, version=0).collect()} == set(
+        range(10)
+    )
+    assert {r.v for r in read_table(spark, table).collect()} == {
+        3 * i for i in range(10)
+    }
+
+    vacuum(table, keep_versions=1)
+    assert {k for k in fake_io.objs if "/_snapshots/" in k} == {
+        f"{table}/_snapshots/v2.json"
+    }
+    assert conditional.count(f"{table}/_APPEND_LOCK") == 4  # vacuum's lease
+    with pytest.raises(FileNotFoundError):
+        read_table(spark, table, version=0)
+    assert len(read_table(spark, table).collect()) == 10
+
+    on_disk = [
+        os.path.relpath(os.path.join(d, n), table)
+        for d, _, names in os.walk(table)
+        for n in names
+    ]
+    assert on_disk
+    for rel in on_disk:
+        assert rel.startswith("data/"), rel
+        assert rel.endswith((".parquet", ".parquet.crc")), rel

@@ -551,8 +551,10 @@ def test_clustered_sink_restart_commits_each_batch_once(
 
     from tijdloze_musicbrainz_spark.operators.manifest import (
         commit_clustered,
-        current_version,
         read_table,
+    )
+    from tijdloze_musicbrainz_spark.sources.commit_log import (
+        current_snapshot_version,
     )
 
     root = tmp_path_factory.mktemp("clustered_restart")
@@ -580,7 +582,7 @@ def test_clustered_sink_restart_commits_each_batch_once(
         q.awaitTermination()
 
     drain()
-    v1 = current_version(table)
+    v1 = current_snapshot_version(table)
     got1 = sorted(r.k for r in read_table(spark, table).collect())
     assert got1 == sorted(k for k, _f, _v in rows1)
 
@@ -590,6 +592,6 @@ def test_clustered_sink_restart_commits_each_batch_once(
         "append"
     ).parquet(src)
     drain()
-    assert current_version(table) > v1
+    assert current_snapshot_version(table) > v1
     got2 = sorted(r.k for r in read_table(spark, table).collect())
     assert got2 == sorted(k for k, _f, _v in rows1 + rows2)  # once each

@@ -5,41 +5,51 @@ the extent this container allows).
 ``merge_upsert_bucketed`` (upsert.py) swaps bucket directories one at
 a time, so a concurrent reader can observe bucket 3 new + bucket 7 old
 — the documented non-atomicity. Delta/Iceberg fix this with a commit
-LOG; their jars are absent here, so this module implements the same
-idea in its minimal form (the simplified _delta_log protocol):
+LOG; their jars are absent here, so a manifest table is one more
+client of the engine's own commit log (sources/commit_log.py):
 
 - data files are IMMUTABLE, written once under ``<table>/data/``;
-- a commit is a JSON manifest ``v<N>.json`` listing the table's
-  complete current file set, keyed by bucket;
-- ``_LATEST`` is a pointer file replaced with ``os.replace`` — atomic
-  on POSIX — so EVERY reader sees exactly one committed snapshot, no
-  matter how many buckets a merge rewrote;
-- a crash after writing data files but before the pointer swap leaves
-  orphan files, never a torn table (tests/test_manifest.py simulates
-  exactly that);
-- manifests are created with ``open(..., 'x')``: two concurrent
-  committers race on the version file and the loser gets an explicit
-  conflict error instead of silent lost updates (optimistic
-  concurrency, the Delta protocol's rule);
+- a commit is a snapshot manifest listing the table's complete
+  current file set, keyed by bucket, published by one pointer flip —
+  EVERY reader sees exactly one committed snapshot, no matter how
+  many buckets a merge rewrote;
+- writers do their Spark work (merge, staged write under
+  ``_staging_*``) without a lock, then take the table's lease
+  (``exclusive_append``) for the commit step only: under it they
+  re-check that the committed version is still the one they read
+  (else :class:`SnapshotConflict` — optimistic concurrency, the Delta
+  protocol's rule), rename the staged buckets into ``data/`` and
+  commit fenced on the lease;
+- a crash anywhere before the pointer flip leaves orphan files and
+  the old snapshot, never a torn table; the next leased commit
+  reclaims an orphaned manifest and :func:`vacuum` reclaims orphaned
+  data;
 - old manifests are retained → free time travel
-  (``read_table(..., version=N)``).
+  (``read_table(..., version=N)``) until :func:`vacuum` drops them.
 
 Reference analog: the per-artist ``ON CONFLICT DO UPDATE`` re-run
-(``/root/reference/src/main.py:298-323``) whose transactionality came
-from Postgres; here the commit protocol supplies it.
+(the reference's ``src/main.py:298-323``) whose transactionality came
+from Postgres; here the commit log supplies it.
 """
 
 from __future__ import annotations
 
-import json
 import os
 import shutil
 import uuid
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..sources.bucketing import ConcurrentAppendError, exclusive_append
+from ..sources.commit_log import (
+    SnapshotConflict,
+    commit_snapshot,
+    current_snapshot_version,
+    snapshot_at,
+    vacuum_unreferenced,
+)
 from .upsert import N_MERGE_BUCKETS, dedup_last_wins
 
 # Reserved column name under which CDC merges PERSIST each key's
@@ -51,48 +61,18 @@ from .upsert import N_MERGE_BUCKETS, dedup_last_wins
 OP_COL = "__op"
 
 
-class CommitConflict(RuntimeError):
-    """Another writer committed the same version first — re-read the
-    new snapshot and retry the merge (optimistic concurrency)."""
-
-
-def _manifest_dir(table: str) -> str:
-    return os.path.join(table, "_manifests")
-
-
-def _latest_path(table: str) -> str:
-    return os.path.join(table, "_LATEST")
-
-
-def current_version(table: str) -> int:
-    """-1 when the table has never been committed."""
-    try:
-        with open(_latest_path(table)) as f:
-            return int(f.read().strip())
-    except FileNotFoundError:
-        return -1
-
-
-def _read_manifest(table: str, version: int) -> dict:
-    with open(os.path.join(_manifest_dir(table), f"v{version}.json")) as f:
-        return json.load(f)
-
-
-def read_table(
-    spark: SparkSession, table: str, version: int | None = None
-) -> DataFrame | None:
-    """The committed snapshot as a DataFrame (``version=None`` →
-    latest; an explicit version time-travels). ``None`` when the table
-    has no commits yet.
+def _resolve(table: str, version: int | None = None) -> tuple[int, dict | None]:
+    """(version, manifest) of the committed snapshot — ``version=None``
+    → latest; manifest None when the table has no commits yet.
 
     An explicit ``version`` is validated against the committed
-    pointer: a manifest file beyond ``_LATEST`` is an ORPHAN left by a
-    crash between manifest write and pointer swap (uncommitted data)
-    and raises ValueError instead of being served as a snapshot
-    (r6, ADVICE item 2). CDC tombstone rows (``__op = 'D'``) are
-    filtered out here — they live in the files so that later merges
-    can see them, but they are not data."""
-    cur = current_version(table)
+    pointer: a manifest beyond it is an ORPHAN left by a crash between
+    manifest write and pointer flip (uncommitted data) and raises
+    ValueError instead of being served as a snapshot (r6, ADVICE item
+    2). A version dropped by :func:`vacuum` raises FileNotFoundError —
+    Delta's VACUUM breaks time travel past the retention window the
+    same way."""
+    cur = current_snapshot_version(table)
     if version is not None and version > cur:
         raise ValueError(
             f"{table}: version {version} is not committed "
@@ -100,21 +80,125 @@ def read_table(
         )
     v = cur if version is None else version
     if v < 0:
-        return None
-    m = _read_manifest(table, v)
-    paths = [os.path.join(table, p) for ps in m["files"].values() for p in ps]
-    if not paths:
-        return None
-    # mergeSchema: a MIXED table (some buckets CDC-written with __op,
-    # some upsert-written without) must still surface __op — without
-    # it Spark takes one file's schema and can silently drop the
-    # column, serving tombstones as live rows (r8). Cost is one footer
-    # read per file; the manifest bounds the file count per snapshot.
-    df = spark.read.option("mergeSchema", "true").parquet(*paths)
+        return v, None
+    snap = snapshot_at(table, v)
+    if snap is None:
+        raise FileNotFoundError(f"{table}: version {v} was vacuumed")
+    return v, snap
+
+
+def _read_entries(spark: SparkSession, table: str, entries: list[str]) -> DataFrame:
+    """Committed entries as one DataFrame, CDC tombstones dropped.
+
+    mergeSchema: a MIXED table (some buckets CDC-written with __op,
+    some upsert-written without) must still surface __op — without it
+    Spark takes one file's schema and can silently drop the column,
+    serving tombstones as live rows (r8). Cost is one footer read per
+    file; the manifest bounds the file count per snapshot. The filter
+    is null-safe: a NULL __op row is data, not a tombstone (r6
+    ADVICE)."""
+    df = spark.read.option("mergeSchema", "true").parquet(
+        *[os.path.join(table, p) for p in entries]
+    )
     if OP_COL in df.columns:
-        # null-safe: a NULL __op row is data, not a tombstone (r6 ADVICE)
         df = df.filter(~F.col(OP_COL).eqNullSafe("D")).drop(OP_COL)
     return df
+
+
+def read_table(
+    spark: SparkSession, table: str, version: int | None = None
+) -> DataFrame | None:
+    """The committed snapshot as a DataFrame (``version=None`` →
+    latest; an explicit version time-travels, validated by
+    :func:`_resolve`). ``None`` when the table has no commits yet.
+    CDC tombstone rows (``__op = 'D'``) are filtered out here — they
+    live in the files so that later merges can see them, but they are
+    not data."""
+    _, snap = _resolve(table, version)
+    if snap is None:
+        return None
+    paths = [p for ps in snap["files"].values() for p in ps]
+    return _read_entries(spark, table, paths) if paths else None
+
+
+def _minmax_aggs(stats_cols: Sequence[str]) -> list[Column]:
+    return [
+        agg
+        for c in stats_cols
+        for agg in (F.min(c).alias(f"__mn_{c}"), F.max(c).alias(f"__mx_{c}"))
+    ]
+
+
+def _minmax(row, stats_cols: Sequence[str]) -> dict[str, list]:
+    """One entry's data-skipping stats from a :func:`_minmax_aggs` row:
+    per column ``[min, max]`` as strings (None for an all-NULL
+    column)."""
+    return {
+        c: [
+            None if row[f"__mn_{c}"] is None else str(row[f"__mn_{c}"]),
+            None if row[f"__mx_{c}"] is None else str(row[f"__mx_{c}"]),
+        ]
+        for c in stats_cols
+    }
+
+
+def _commit_staged(
+    table: str,
+    base: int,
+    tmp: str,
+    files: dict[str, list[str]],
+    staged: list[tuple[str, str, str, dict | None]],
+    stats: dict | None = None,
+    append: bool = False,
+) -> int:
+    """THE commit point of every manifest writer: publish the entries
+    staged under ``tmp`` as version ``base + 1`` and return it.
+
+    ``files`` is the base snapshot's file map; each ``staged`` item is
+    ``(file key, dir under tmp, entry tag, entry stats or None)`` and
+    replaces the key's entry list (``append`` adds to it instead). A
+    missing staged dir means the bucket emptied: its key is dropped
+    (kept when appending). ``stats`` (None → the manifest carries no
+    stats) collects per-entry data-skipping stats.
+
+    The lease is held only for the re-check, the renames and the
+    commit: a writer whose base is no longer the committed version
+    raises :class:`SnapshotConflict` before renaming anything, so no
+    stale manifest — and no unreferenced entry — can ever land, even
+    when a vacuum already dropped the manifests the stale writer's
+    version number would collide with. Staging is removed either
+    way."""
+    try:
+        with exclusive_append(table, owner="manifest") as lease:
+            committed = current_snapshot_version(table)
+            if committed != base:
+                raise SnapshotConflict(
+                    f"{table}: merged over v{base} but v{committed} is "
+                    "committed — re-read the new snapshot and retry"
+                )
+            files = {k: list(ps) for k, ps in files.items()}
+            os.makedirs(os.path.join(table, "data"), exist_ok=True)
+            for key, part, tag, entry_stats in staged:
+                src = os.path.join(tmp, part)
+                if not os.path.exists(src):
+                    if not append:
+                        files.pop(key, None)
+                    continue
+                entry = f"data/v{base + 1}_{tag}_{uuid.uuid4().hex[:8]}"
+                os.rename(src, os.path.join(table, entry))
+                files[key] = (files.get(key, []) if append else []) + [entry]
+                if stats is not None:
+                    stats[entry] = entry_stats
+            snap = {"files": files}
+            if stats is not None:
+                snap["stats"] = stats
+            return commit_snapshot(table, snap, lease=lease)
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+
+
+def _staging(table: str) -> str:
+    return os.path.join(table, f"_staging_{uuid.uuid4().hex[:12]}")
 
 
 def merge_upsert_manifest(
@@ -129,14 +213,19 @@ def merge_upsert_manifest(
     1. bucket the batch, collect touched bucket ids (bounded),
     2. read ONLY the touched buckets' files from the current snapshot,
     3. dedup batch ∪ existing (highest ``priority_col`` wins),
-    4. write the merged buckets as NEW immutable files under data/,
-    5. write manifest v(N+1) = old manifest with touched entries
-       replaced (``open('x')`` — conflicting committers error out),
-    6. ``os.replace`` the _LATEST pointer — the single atomic instant
-       at which ALL touched buckets change together.
+    4. stage the merged buckets under ``_staging_*``,
+    5. :func:`_commit_staged` — the single atomic instant at which ALL
+       touched buckets change together.
 
     Work per merge is O(|touched buckets|), same as the non-atomic
-    variant; the extra cost is one small JSON per commit."""
+    variant; the extra cost is one small JSON per commit.
+
+    Upsert and CDC writes may mix in one table: when exactly one side
+    of the union carries ``__op`` (CDC-written files vs a plain
+    upsert batch, or the reverse), the other side is tagged 'I' and
+    the union stays strict (``allowMissingColumns=False``), so
+    tombstones still compete on priority while genuine data-column
+    drift fails loudly (r7 ADVICE). Returns the touched bucket ids."""
     spark = batch_df.sparkSession
     bucket = F.pmod(
         F.xxhash64(*[F.col(k) for k in keys]), F.lit(n_buckets)
@@ -148,10 +237,8 @@ def merge_upsert_manifest(
     if not touched:
         return []
 
-    v = current_version(table)
-    files: dict[str, list[str]] = (
-        dict(_read_manifest(table, v)["files"]) if v >= 0 else {}
-    )
+    v, snap = _resolve(table)
+    files: dict[str, list[str]] = dict(snap["files"]) if snap else {}
     old_paths = [
         os.path.join(table, p)
         for b in touched
@@ -166,48 +253,25 @@ def merge_upsert_manifest(
             .parquet(*old_paths)
             .withColumn("__bucket", bucket)
         )
-        if OP_COL in existing.columns:
-            # upserting into a CDC-written table: existing files carry
-            # __op (live rows + tombstones). Tag the batch 'I' so the
-            # union stays strict and tombstones still compete on
-            # priority in the dedup below (r7 ADVICE: mixed-table
-            # support must be bidirectional).
+        if OP_COL in existing.columns and OP_COL not in batch.columns:
             batch = batch.withColumn(OP_COL, F.lit("I"))
+        elif OP_COL in batch.columns and OP_COL not in existing.columns:
+            existing = existing.withColumn(OP_COL, F.lit("I"))
         merged = existing.unionByName(batch, allowMissingColumns=False)
     else:
         merged = batch
+    # winners keep their op: a winning 'D' lands on disk as a tombstone
     out = dedup_last_wins(merged, list(keys), [F.desc(priority_col)])
 
-    # stage the merged buckets, then move each under data/ with a
-    # unique immutable name (never overwriting a committed file)
-    tmp = os.path.join(table, f"_staging_{uuid.uuid4().hex[:12]}")
+    tmp = _staging(table)
     out.write.mode("overwrite").partitionBy("__bucket").parquet(tmp)
-    data_dir = os.path.join(table, "data")
-    os.makedirs(data_dir, exist_ok=True)
-    os.makedirs(_manifest_dir(table), exist_ok=True)
-    new_files = dict(files)
-    staged: list[str] = []
-    for b in touched:
-        src = os.path.join(tmp, f"__bucket={b}")
-        entry = f"data/v{v + 1}_b{b}_{uuid.uuid4().hex[:8]}"
-        if os.path.exists(src):
-            os.rename(src, os.path.join(table, entry))
-            staged.append(entry)
-            new_files[str(b)] = [entry]
-        else:
-            new_files.pop(str(b), None)  # bucket emptied (all rows lost)
-    shutil.rmtree(tmp, ignore_errors=True)
-    # THE commit point: readers flip from snapshot v to v+1 atomically.
-    # A losing committer must reclaim the files it renamed into data/ —
-    # no manifest ever references them, so vacuum() (which walks
-    # manifests only) would never find these orphans and a contended
-    # table would grow unboundedly (r8 ADVICE).
-    try:
-        _commit(table, v, new_files)
-    except CommitConflict:
-        for entry in staged:
-            shutil.rmtree(os.path.join(table, entry), ignore_errors=True)
-        raise
+    _commit_staged(
+        table,
+        v,
+        tmp,
+        files,
+        [(str(b), f"__bucket={b}", f"b{b}", None) for b in touched],
+    )
     return touched
 
 
@@ -234,95 +298,29 @@ def merge_cdc_manifest(
     retention boundary, same contract as Delta's delete-marker
     retention) forgets tombstones and re-admits late writers.
 
-    Commit protocol identical to merge_upsert_manifest."""
-    spark = changes.sparkSession
-    bucket = F.pmod(
-        F.xxhash64(*[F.col(k) for k in keys]), F.lit(n_buckets)
-    ).cast("int")
-    batch = (
-        changes.withColumnRenamed(op_col, OP_COL)
+    The validated change stream is merged and committed by
+    merge_upsert_manifest."""
+    batch = changes.withColumnRenamed(op_col, OP_COL).withColumn(
+        OP_COL,
         # Only NULL is coerced to upsert ('I') — read_table would
         # otherwise silently drop a NULL-__op row that still competes
         # in merges (r6 ADVICE). A NON-null code outside {'I','U','D'}
         # (lowercase 'd', Debezium 'c'/'u'/'r'…) fails LOUDLY instead
         # of turning deletes into live rows (r7 ADVICE).
-        .withColumn(
-            OP_COL,
-            F.when(F.col(OP_COL).isNull(), F.lit("I"))
-            .when(F.col(OP_COL).isin("I", "U", "D"), F.col(OP_COL))
-            .otherwise(
-                F.raise_error(
-                    F.concat(
-                        F.lit("merge_cdc_manifest: unknown op code '"),
-                        F.col(OP_COL),
-                        F.lit("' (expected I/U/D; map your source's "
-                              "encoding before merging)"),
-                    )
+        F.when(F.col(OP_COL).isNull(), F.lit("I"))
+        .when(F.col(OP_COL).isin("I", "U", "D"), F.col(OP_COL))
+        .otherwise(
+            F.raise_error(
+                F.concat(
+                    F.lit("merge_cdc_manifest: unknown op code '"),
+                    F.col(OP_COL),
+                    F.lit("' (expected I/U/D; map your source's "
+                          "encoding before merging)"),
                 )
-            ),
-        )
-        .withColumn("__bucket", bucket)
+            )
+        ),
     )
-    touched = sorted(
-        r["__bucket"] for r in batch.select("__bucket").distinct().collect()
-    )
-    if not touched:
-        return []
-    v = current_version(table)
-    files: dict[str, list[str]] = (
-        dict(_read_manifest(table, v)["files"]) if v >= 0 else {}
-    )
-    old_paths = [
-        os.path.join(table, p)
-        for b in touched
-        for p in files.get(str(b), [])
-    ]
-    if old_paths:
-        # committed files carry __op (live rows AND tombstones); files
-        # written by merge_upsert_manifest or pre-r6 CDC code lack the
-        # column — backfill ONLY __op='I' explicitly and keep the union
-        # strict, so genuine data-column drift still fails loudly
-        # instead of being NULL-filled (r7 ADVICE: the earlier
-        # allowMissingColumns=True tolerated ANY mismatch).
-        existing = (
-            spark.read.option("mergeSchema", "true")
-            .parquet(*old_paths)
-            .withColumn("__bucket", bucket)
-        )
-        if OP_COL not in existing.columns:
-            existing = existing.withColumn(OP_COL, F.lit("I"))
-        merged = existing.unionByName(batch, allowMissingColumns=False)
-    else:
-        merged = batch
-    # winners keep their op: a winning 'D' lands on disk as a tombstone
-    out = dedup_last_wins(merged, list(keys), [F.desc(priority_col)])
-
-    tmp = os.path.join(table, f"_staging_{uuid.uuid4().hex[:12]}")
-    out.write.mode("overwrite").partitionBy("__bucket").parquet(tmp)
-    data_dir = os.path.join(table, "data")
-    os.makedirs(data_dir, exist_ok=True)
-    os.makedirs(_manifest_dir(table), exist_ok=True)
-    new_files = dict(files)
-    staged: list[str] = []
-    for b in touched:
-        src = os.path.join(tmp, f"__bucket={b}")
-        entry = f"data/v{v + 1}_b{b}_{uuid.uuid4().hex[:8]}"
-        if os.path.exists(src):
-            os.rename(src, os.path.join(table, entry))
-            staged.append(entry)
-            new_files[str(b)] = [entry]
-        else:
-            new_files.pop(str(b), None)  # every key in the bucket deleted
-    shutil.rmtree(tmp, ignore_errors=True)
-    # reclaim this attempt's renamed files on a lost race — they are
-    # referenced by no manifest, so nothing else ever deletes them
-    try:
-        _commit(table, v, new_files)
-    except CommitConflict:
-        for entry in staged:
-            shutil.rmtree(os.path.join(table, entry), ignore_errors=True)
-        raise
-    return touched
+    return merge_upsert_manifest(batch, table, keys, priority_col, n_buckets)
 
 
 def merge_with_retry(
@@ -334,26 +332,28 @@ def merge_with_retry(
     max_retries: int = 5,
     **kwargs,
 ) -> list[int]:
-    """Optimistic-concurrency retry loop — the workflow CommitConflict
+    """Optimistic-concurrency retry loop — the workflow SnapshotConflict
     documents ('re-read the new snapshot and retry'), packaged (r8).
 
     ``merge_fn`` is merge_upsert_manifest or merge_cdc_manifest. On a
-    conflict the loser simply re-runs the merge: it re-reads
-    current_version (now the winner's commit), merges its batch over
-    the WINNER's files, and attempts the next version. Last-writer-
-    wins dedup makes the retried merge semantically identical to
-    having arrived second — no lost updates, no double-applies
-    (immutable inputs, deterministic dedup). Raises the final
-    CommitConflict after ``max_retries`` losses (persistent
-    contention is a scheduling problem, not a retry-harder problem).
+    conflict — a stale base, or the table's lease busy with another
+    writer's commit (ConcurrentAppendError) — the loser simply re-runs
+    the merge: it re-reads the committed snapshot (now the winner's),
+    merges its batch over the WINNER's files, and attempts the next
+    version. Last-writer-wins dedup makes the retried merge
+    semantically identical to having arrived second — no lost
+    updates, no double-applies (immutable inputs, deterministic
+    dedup). Raises the final conflict after ``max_retries`` losses
+    (persistent contention is a scheduling problem, not a
+    retry-harder problem).
     """
     if max_retries < 0:
         raise ValueError(f"max_retries must be >= 0, got {max_retries}")
-    last: CommitConflict | None = None
+    last: Exception | None = None
     for _ in range(max_retries + 1):
         try:
             return merge_fn(batch_df, table, keys, priority_col, **kwargs)
-        except CommitConflict as exc:
+        except (SnapshotConflict, ConcurrentAppendError) as exc:
             last = exc
     raise last
 
@@ -441,96 +441,48 @@ def compact(
     without it silently downgrades every read to unpruned (the
     conservative no-stats path); with it, OPTIMIZE keeps skipping
     intact, which is the Delta behavior."""
-    v = current_version(table)
-    if v < 0:
+    v, snap = _resolve(table)
+    if snap is None:
         raise ValueError(f"{table}: nothing to compact")
-    files = _read_manifest(table, v)["files"]
-    new_files: dict[str, list[str]] = {}
-    new_stats: dict[str, dict[str, list]] = {}
-    for bkey, ps in files.items():
+    tmp = _staging(table)
+    staged = []
+    for bkey, ps in snap["files"].items():
         df = spark.read.option("mergeSchema", "true").parquet(
             *[os.path.join(table, p) for p in ps]
         )
         if OP_COL in df.columns:
             df = df.filter(~F.col(OP_COL).eqNullSafe("D"))
-        tmp = os.path.join(table, f"_staging_{uuid.uuid4().hex[:12]}")
-        df.coalesce(1).write.mode("overwrite").parquet(tmp)
-        entry = f"data/v{v + 1}_compact_b{bkey}_{uuid.uuid4().hex[:8]}"
-        os.rename(tmp, os.path.join(table, entry))
-        new_files[bkey] = [entry]
-        if stats_cols:
-            r = df.agg(
-                *[
-                    agg
-                    for c in stats_cols
-                    for agg in (
-                        F.min(c).alias(f"__mn_{c}"),
-                        F.max(c).alias(f"__mx_{c}"),
-                    )
-                ]
-            ).first()
-            new_stats[entry] = {
-                c: [
-                    None if r[f"__mn_{c}"] is None else str(r[f"__mn_{c}"]),
-                    None if r[f"__mx_{c}"] is None else str(r[f"__mx_{c}"]),
-                ]
-                for c in stats_cols
-            }
-    _commit(table, v, new_files, stats=new_stats if stats_cols else None)
-    return v + 1
-
-
-def _commit(
-    table: str, base_version: int, new_files: dict, stats: dict | None = None
-) -> None:
-    manifest = {"version": base_version + 1, "files": new_files}
-    if stats is not None:
-        manifest["stats"] = stats
-    mpath = os.path.join(_manifest_dir(table), f"v{base_version + 1}.json")
-    try:
-        with open(mpath, "x") as f:
-            json.dump(manifest, f)
-    except FileExistsError as exc:
-        raise CommitConflict(
-            f"{table}: version {base_version + 1} already committed by "
-            "another writer"
-        ) from exc
-    ptmp = _latest_path(table) + f".{uuid.uuid4().hex[:8]}"
-    with open(ptmp, "w") as f:
-        f.write(str(base_version + 1))
-    os.replace(ptmp, _latest_path(table))
+        df.coalesce(1).write.mode("overwrite").parquet(
+            os.path.join(tmp, f"b{bkey}")
+        )
+        entry_stats = (
+            _minmax(df.agg(*_minmax_aggs(stats_cols)).first(), stats_cols)
+            if stats_cols
+            else None
+        )
+        staged.append((bkey, f"b{bkey}", f"compact_b{bkey}", entry_stats))
+    return _commit_staged(
+        table, v, tmp, {}, staged, stats={} if stats_cols else None
+    )
 
 
 def vacuum(table: str, keep_versions: int = 1) -> list[str]:
-    """VACUUM analog: delete data files referenced ONLY by manifests
-    older than the newest ``keep_versions`` commits, then drop those
-    manifests. The kept versions (and the live pointer) are untouched,
-    so readers of any retained snapshot are safe; time travel to a
-    vacuumed version afterwards raises FileNotFoundError — the same
-    contract as Delta's VACUUM breaking time travel past the retention
-    window. Returns the deleted file entries (observability)."""
-    v = current_version(table)
-    if v < 0:
-        return []
-    keep = range(max(0, v - keep_versions + 1), v + 1)
-    kept_files: set[str] = set()
-    for kv in keep:
-        for ps in _read_manifest(table, kv)["files"].values():
-            kept_files.update(ps)
-    deleted = []
-    for old in range(0, max(0, v - keep_versions + 1)):
-        mpath = os.path.join(_manifest_dir(table), f"v{old}.json")
-        if not os.path.exists(mpath):
-            continue  # already vacuumed
-        for ps in _read_manifest(table, old)["files"].values():
-            for p in ps:
-                if p not in kept_files and os.path.exists(
-                    os.path.join(table, p)
-                ):
-                    shutil.rmtree(os.path.join(table, p))
-                    deleted.append(p)
-        os.remove(mpath)
-    return deleted
+    """VACUUM analog: the commit log's leased
+    :func:`~..sources.commit_log.vacuum_unreferenced` over the
+    manifest's file mapping — data entries referenced by none of the
+    newest ``keep_versions`` snapshots are deleted (superseded
+    rewrites and crashed writers' debris alike), then the older
+    manifests. The kept versions (and the live pointer) are
+    untouched, so readers of any retained snapshot are safe; time
+    travel to a vacuumed version afterwards raises FileNotFoundError —
+    the same contract as Delta's VACUUM breaking time travel past the
+    retention window. Returns the deleted entries (observability)."""
+    return vacuum_unreferenced(
+        table,
+        lambda snap: {p for ps in snap["files"].values() for p in ps},
+        protected=(),
+        keep_snapshots=keep_versions,
+    )["deleted"]
 
 
 def commit_clustered(
@@ -563,22 +515,15 @@ def commit_clustered(
     committed version."""
     if mode not in ("overwrite", "append"):
         raise ValueError(f"commit_clustered: unknown mode {mode!r}")
-    spark = df.sparkSession  # noqa: F841  (symmetry with the merge paths)
-    v = current_version(table)
-    if mode == "append" and v >= 0:
-        prev = _read_manifest(table, v)
-        files = {k: list(ps) for k, ps in prev["files"].items()}
-        stats = dict(prev.get("stats", {}))
+    v, snap = _resolve(table)
+    if mode == "append" and snap is not None:
+        files = snap["files"]
+        stats = dict(snap.get("stats", {}))
     else:
         files, stats = {}, {}
-    stat_aggs = [
-        agg
-        for c in stats_cols
-        for agg in (F.min(c).alias(f"__mn_{c}"), F.max(c).alias(f"__mx_{c}"))
-    ]
-    stats_rows = df.groupBy(file_key_col).agg(*stat_aggs).collect()
+    stats_rows = df.groupBy(file_key_col).agg(*_minmax_aggs(stats_cols)).collect()
 
-    tmp = os.path.join(table, f"_staging_{uuid.uuid4().hex[:12]}")
+    tmp = _staging(table)
     # repartition by the file key before the dynamic-partition write:
     # off a single-split scan ONE task wrote every partition dir
     # sequentially (measured: the dominant stage of
@@ -598,31 +543,16 @@ def commit_clustered(
     df.repartition(n_write, F.col(file_key_col)).write.mode(
         "overwrite"
     ).partitionBy(file_key_col).parquet(tmp)
-    os.makedirs(os.path.join(table, "data"), exist_ok=True)
-    os.makedirs(_manifest_dir(table), exist_ok=True)
+    staged = []
     for r in stats_rows:
         key = r[file_key_col]
-        part = key if key is not None else "__HIVE_DEFAULT_PARTITION__"
-        src = os.path.join(tmp, f"{file_key_col}={part}")
-        if not os.path.exists(src):
-            continue
-        entry = f"data/v{v + 1}_f{part}_{uuid.uuid4().hex[:8]}"
-        os.rename(src, os.path.join(table, entry))
-        files.setdefault(str(part), [])
-        if mode == "overwrite":
-            files[str(part)] = [entry]
-        else:
-            files[str(part)].append(entry)
-        stats[entry] = {
-            c: [
-                None if r[f"__mn_{c}"] is None else str(r[f"__mn_{c}"]),
-                None if r[f"__mx_{c}"] is None else str(r[f"__mx_{c}"]),
-            ]
-            for c in stats_cols
-        }
-    shutil.rmtree(tmp, ignore_errors=True)
-    _commit(table, v, files, stats=stats)
-    return v + 1
+        part = str(key if key is not None else "__HIVE_DEFAULT_PARTITION__")
+        staged.append(
+            (part, f"{file_key_col}={part}", f"f{part}", _minmax(r, stats_cols))
+        )
+    return _commit_staged(
+        table, v, tmp, files, staged, stats=stats, append=mode == "append"
+    )
 
 
 def read_table_stats_pruned(
@@ -642,18 +572,11 @@ def read_table_stats_pruned(
     not row-exact (the Delta data-skipping contract). The pruning
     decision uses ZERO file opens: at 100 TB the manifest is the only
     thing the driver touches before the pruned scan launches."""
-    cur = current_version(table)
-    if version is not None and version > cur:
-        raise ValueError(
-            f"{table}: version {version} is not committed "
-            f"(latest committed version is {cur})"
-        )
-    v = cur if version is None else version
-    if v < 0:
+    _, snap = _resolve(table, version)
+    if snap is None:
         return None, 0, 0
-    m = _read_manifest(table, v)
-    files = m["files"]
-    stats = m.get("stats", {})
+    files = snap["files"]
+    stats = snap.get("stats", {})
     # stats are keyed per ENTRY path (the Delta add-file model, r8b);
     # the prune decision and the files_read/files_total counters are
     # per entry too, so an appended table skips old batches as well as
@@ -676,9 +599,4 @@ def read_table_stats_pruned(
                 n_read += 1
     if not keep:
         return None, 0, total
-    df = spark.read.option("mergeSchema", "true").parquet(
-        *[os.path.join(table, p) for p in keep]
-    )
-    if OP_COL in df.columns:
-        df = df.filter(~F.col(OP_COL).eqNullSafe("D")).drop(OP_COL)
-    return df, n_read, total
+    return _read_entries(spark, table, keep), n_read, total

@@ -9,7 +9,7 @@ a per-generation label write + a remap — never re-pairing history
 with itself, never re-running connected components over the full
 corpus. Each generation's five stores (block run, shingle payload,
 labels, remap journal, accounting/key stats) become visible in ONE
-snapshot commit (plans/lifecycle.py commit_snapshot), so a writer
+snapshot commit (sources/commit_log.py commit_snapshot), so a writer
 dying mid-generation leaves readers on the previous complete
 snapshot and recovery replays the generation idempotently
 (tests/test_crash_atomic_ingest.py — r13, the reference's per-artist
@@ -60,12 +60,16 @@ O(delta) accounting rule are shared via plans/lifecycle.py.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources.bucketing import exclusive_append, write_bucketed
+from ..sources.commit_log import (
+    commit_snapshot,
+    current_snapshot,
+    current_store,
+    publish_store,
+)
 from ..sources.store_io import get_store_io
 from .dedup import (
     _SHINGLES_SQL,
@@ -75,18 +79,14 @@ from .dedup import (
     words_col,
 )
 from .lifecycle import (
-    commit_snapshot,
-    current_snapshot,
-    current_store,
     index_root,
-    publish_store,
     pushdown_keys,
     read_delta_key_manifest,
     sf_tag,
     write_delta_key_manifest,
 )
 from .registry import register
-from .util import checkpointed_payload, t
+from .util import checkpointed_payload, fits_broadcast, t
 
 # Every CC_DELTA_MOD-th document "arrives" after the base clustering —
 # the same deterministic split as the MinHash index lifecycle. The
@@ -95,15 +95,11 @@ CC_DELTA_MOD = 10
 CC_BATCH_MOD = 20
 CC_INDEX_BUCKETS = 16
 
-# Broadcast budget for the base-vs-base blocked self-join's build
-# side. Same exact-count gating idea as the graph tier's
-# SPARK_GRAFT_EDGE_BCAST_MAX_BYTES: below the budget the payload
-# broadcasts (hash probes, no exchange), above it the plan falls back
-# to the sort-merge shape unchanged — scale-adaptive by an exact
-# count, not a stats estimate a checkpoint would erase. r16 (ADVICE):
-# the estimate now starts from the checkpoint's MEASURED block bytes
-# (checkpointed_payload metrics) scaled by the base-row fraction —
-# a long-document corpus can no longer sneak a force-broadcast past a
+# Broadcast sizing for the base-vs-base blocked self-join's build side
+# (util.fits_broadcast, the one gate and budget). r16 (ADVICE): the
+# estimate starts from the checkpoint's MEASURED block bytes
+# (checkpointed_payload metrics) scaled by the base-row fraction — a
+# long-document corpus can no longer sneak a force-broadcast past a
 # hardcoded per-row constant; CC_PAY_BCAST_ROW_BYTES survives only as
 # the fallback when block bytes are unavailable (reliable-checkpoint
 # deployments). CC_PAY_BCAST_INFLATION covers the deserialized
@@ -111,9 +107,6 @@ CC_INDEX_BUCKETS = 16
 # blocks the measurement sees.
 CC_PAY_BCAST_ROW_BYTES = 4096
 CC_PAY_BCAST_INFLATION = 4
-CC_PAY_BCAST_MAX_BYTES = int(
-    os.environ.get("SPARK_GRAFT_CC_PAY_BCAST_MAX_BYTES", str(256 << 20))
-)
 
 _CC_INC_ORACLE = f"""
 WITH RECURSIVE
@@ -198,13 +191,8 @@ def _pairs_of(
     mis-size long-document corpora."""
     a = payload.alias("a")
     b = payload.alias("b")
-    if est_bytes is not None:
-        fits = est_bytes * CC_PAY_BCAST_INFLATION <= CC_PAY_BCAST_MAX_BYTES
-    elif n_rows is not None:
-        fits = n_rows * CC_PAY_BCAST_ROW_BYTES <= CC_PAY_BCAST_MAX_BYTES
-    else:
-        fits = False
-    if fits:
+    measured = None if est_bytes is None else est_bytes * CC_PAY_BCAST_INFLATION
+    if fits_broadcast(measured, n_rows, CC_PAY_BCAST_ROW_BYTES):
         b = F.broadcast(b)
     jac = jaccard(F.col("a.sgs"), F.col("b.sgs"))
     return (
@@ -768,7 +756,7 @@ def dedup_cluster_label_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     # deleted inline (r13 ADVICE: a reader that resolved the old
     # pointer just before the flip can still be mid-scan of it) — it
     # stays on disk until scheduled GC past a grace period
-    # (plans/lifecycle.py vacuum_unreferenced, which this root gets
+    # (sources/commit_log.py vacuum_unreferenced, which this root gets
     # via the fresh-root wipe each registered run). The compactor runs
     # under the tier's lease like every other committed-state writer,
     # with the fencing check immediately before the publish.

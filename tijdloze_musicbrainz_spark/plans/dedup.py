@@ -206,14 +206,14 @@ def dedup_ngram_jaccard_blocked(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", words_col().alias("ws"))
     )
     # the tokenize+shingle fold is the profiled CPU hotspot and the
-    # self-join inlines it once per leg, single-task (one-row-group
-    # scan): fan out to cluster parallelism and checkpoint so the
+    # self-join would inline it once per leg: checkpoint it so the
     # gram CPU runs ONCE and both legs read the materialized frame
-    # (the exact-substring precedent, guide §2.4/§1.2); the checkpoint
-    # is then sized to its measured bytes (r16) so the join legs stop
-    # paying 32-task overhead on a few-MB frame
+    # (the exact-substring precedent, guide §2.4/§1.2).
+    # checkpointed_payload fans the projected frame out and sizes the
+    # checkpoint to its measured bytes (r16), so the join legs stop
+    # paying 32-task overhead on a few-MB frame.
     sh, _ = checkpointed_payload(
-        fan_out(docs).select(
+        docs.select(
             "doc_id",
             F.concat_ws(" ", F.slice(F.col("ws"), 1, 5)).alias("blk"),
             shingles_col(F.col("ws")).alias("sgs"),
@@ -329,11 +329,10 @@ def dedup_ngram_jaccard_meta_blocked(
     )
     # sh is consumed by FIVE subtrees (b1, kept1, over1->b2/kept2, and
     # the two bounded accounting actions) — without a checkpoint each
-    # one re-runs the single-task shingle fold; fanned out + pinned
-    # once (same rationale as dedup_ngram_jaccard_blocked), sized to
-    # its measured bytes (r16)
+    # one re-runs the shingle fold; pinned once by checkpointed_payload
+    # (same rationale as dedup_ngram_jaccard_blocked)
     sh, _ = checkpointed_payload(
-        fan_out(docs).select(
+        docs.select(
             "doc_id",
             F.element_at(F.col("ws"), 1).alias("blk1"),
             F.concat_ws(" ", F.slice(F.col("ws"), 1, 2)).alias("blk2"),

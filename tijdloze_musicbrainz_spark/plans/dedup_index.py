@@ -22,7 +22,7 @@ immutable generation — its own band run (a bucketed table with the
 same bucket spec; probes read every run bucket-aligned, compaction
 folds runs back to one, the LSM shape) plus its own shingle dir —
 and becomes visible in ONE snapshot commit
-(plans/lifecycle.py commit_snapshot: conditional-put manifest +
+(sources/commit_log.py commit_snapshot: conditional-put manifest +
 atomic pointer flip). Existing files are never touched; a writer
 dying mid-transaction leaves readers on the old complete snapshot
 (tests/test_crash_atomic_ingest.py).
@@ -34,10 +34,13 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources.bucketing import exclusive_append, write_bucketed
-from .lifecycle import (
-    compact_bucketed,
+from ..sources.commit_log import (
     commit_snapshot,
     current_snapshot,
+    vacuum_unreferenced,
+)
+from .lifecycle import (
+    compact_bucketed,
     index_root,
     pushdown_keys,
     read_delta_key_manifest,
@@ -149,7 +152,7 @@ def _ingest_generation(
     generation's band run + shingle payload at gen-unique paths no
     reader resolves yet, then make everything visible — bands, payload,
     accounting count, key stats — in ONE snapshot commit
-    (plans/lifecycle.py commit_snapshot: conditional-put manifest +
+    (sources/commit_log.py commit_snapshot: conditional-put manifest +
     atomic pointer flip, the batch twin of the streaming maintainers'
     idempotent-subtree replay). A writer dying between ANY two steps
     leaves the previous snapshot fully intact; recovery re-runs this
@@ -406,7 +409,7 @@ def _probe_index(
     "bucketed table with the same bucket spec, LSM-style) and payload "
     "land at gen-unique paths and become visible in ONE snapshot "
     "commit (conditional-put manifest + atomic pointer flip, "
-    "plans/lifecycle.py; a writer dying between any two store writes "
+    "sources/commit_log.py; a writer dying between any two store writes "
     "leaves readers on the old complete snapshot, recovery takes over "
     "the dead writer's lock and replays — "
     "tests/test_crash_atomic_ingest.py) — then "
@@ -507,7 +510,7 @@ def _mh_live_children(root: str, name: str, tag: str):
     (``{name}_bands_{tag}`` → ``bands_g0``, ``…_g{N}`` → ``bands_g{N}``,
     ``…_c`` → ``bands_c``), shingle dirs are recorded as paths and
     rel-pathed under the root. Per-tier because each tier owns its
-    store-name convention (plans/lifecycle.py vacuum_unreferenced)."""
+    store-name convention (sources/commit_log.py vacuum_unreferenced)."""
     import os  # noqa: PLC0415
 
     base_t = f"{name}_bands_{tag}"
@@ -550,8 +553,8 @@ def _mh_live_children(root: str, name: str, tag: str):
     "GC changed no visible byte. At 100 TB this is the missing LSM "
     "operability piece: without scheduled vacuum, crashed-writer "
     "debris and superseded compaction inputs accumulate unboundedly "
-    "(the manifest tier has operators/manifest.py vacuum; this is "
-    "the _snapshots tiers' twin). Extension surface — no reference "
+    "(sources/commit_log.py vacuum_unreferenced, the same vacuum the "
+    "manifest tables run). Extension surface — no reference "
     "twin; the reference's Postgres frees dead tuples via VACUUM, "
     "which is exactly the concept re-expressed for immutable runs.",
 )
@@ -562,7 +565,6 @@ def dedup_minhash_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..sources.bucketing import lock_payload  # noqa: PLC0415
     from ..sources.store_io import get_store_io  # noqa: PLC0415
-    from .lifecycle import vacuum_unreferenced  # noqa: PLC0415
 
     name = "mh_vacuum"
     tag = sf_tag(sf_dir)
@@ -770,7 +772,6 @@ def corpus_incremental_refresh_e2e(spark: SparkSession, sf_dir: str) -> DataFram
     # entry count grows by one band run + one shingle gen per day —
     # the LSM operability tax the nightly job must pay down itself.
     from ..sources.store_io import get_store_io  # noqa: PLC0415
-    from .lifecycle import vacuum_unreferenced  # noqa: PLC0415
 
     name, tag = "mh_refresh", sf_tag(sf_dir)
     band_runs, _sh, delta_path, _n = _build_and_ingest(spark, sf_dir, name)

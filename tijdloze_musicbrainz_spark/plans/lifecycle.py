@@ -22,14 +22,16 @@ genuinely identical:
   n_appended) are maintained INCREMENTALLY from the batches in hand
   at build/append time — never by re-scanning the stored index,
   which at 100 TB erases the O(delta) ingest win (r10 verdict item 1;
-  at scale the counter lives in manifest commit stats,
-  operators/manifest.py). There is no helper for this on purpose:
+  at scale the counter lives in the snapshot manifest). There is no helper for this on purpose:
   the rule is "``.count()`` the DataFrame you are already holding",
   and a wrapper would only obscure which DataFrame that is.
 
-The remaining shared pieces already have single homes: the
-single-writer append lock is ``sources.bucketing.exclusive_append``,
-and the torn-commit + checkpoint-restart proof driver is
+The remaining shared pieces already have single homes: the commit
+log every tier publishes through (``_CURRENT`` pointer, snapshot
+manifests, leased vacuum) is ``sources.commit_log`` — the same log
+the manifest tables commit through; the single-writer append lock is
+``sources.bucketing.exclusive_append``; and the torn-commit +
+checkpoint-restart proof driver is
 ``streaming.restart_harness.ingest_with_injected_restart``.
 
 What stays tier-specific is the payload itself (PQ codes + codebook +
@@ -66,289 +68,6 @@ def index_root(sf_dir: str, name: str, fresh: bool = True) -> str:
     return root
 
 
-# Compaction swap visibility: a compactor writes a FRESH store and
-# then flips one pointer; readers resolve the pointer first, then read
-# the (immutable, fully-written) store it names. The pointer flip is
-# StoreIO.put_atomic — os.replace (rename(2)) on the local default, a
-# single-key PUT on an object store (sources/store_io.py is the seam,
-# r12 verdict item 3) — so a reader concurrent with compaction sees
-# the OLD complete store or the NEW complete store, never a
-# half-written one (r11 verdict item 3; the two-thread proof is
-# tests/test_lifecycle_swap.py). At 100 TB the same contract is the
-# manifest version-file commit (operators/manifest.py) or a metastore
-# table-pointer repoint — the file here is the minimal faithful
-# stand-in for bucketed/flat stores that live outside the manifest
-# layer.
-_CURRENT_PTR = "_CURRENT"
-
-
-def publish_store(root: str, target: str) -> None:
-    """Atomically repoint ``root``'s current-store pointer at
-    ``target`` (a table name or a path — the tier's reader knows
-    which). MUST be called only after ``target`` is completely
-    written; the atomic put is what makes the swap safe, the
-    write-then-publish ordering is what makes the target legal."""
-    get_store_io().put_atomic(os.path.join(root, _CURRENT_PTR), target)
-
-
-def current_store(root: str, default: str) -> str:
-    """Resolve the current-store pointer; ``default`` (the pre-
-    compaction store) when nothing has been published yet. One
-    driver-side read, no Spark job — probe laziness holds."""
-    text = get_store_io().get_text(os.path.join(root, _CURRENT_PTR))
-    return default if text is None else text.strip()
-
-
-# ── Snapshot commits: the index tiers' mini commit log ──────────────
-# A multi-store ingest transaction (band/block files + shingle payload
-# + labels + remap journal + accounting + key stats) becomes VISIBLE
-# in one atomic step: the writer lands every store at gen-unique paths
-# that no reader resolves yet, writes an immutable snapshot manifest
-# v<N>.json naming the complete store set, and flips the _CURRENT
-# pointer to it. Readers resolve pointer -> manifest -> stores, so a
-# writer crashing ANYWHERE mid-transaction leaves orphan files and the
-# OLD snapshot — never a torn index (r12 verdict item 1: the batch
-# twin of operators/manifest.py's commit protocol, applied to the
-# bucketed index tiers whose stores live outside the manifest layer).
-# The manifest also carries the delta's key-stats entry, which is what
-# the probe pushdown reads at production scale (SCALE.md's "the
-# sidecar is the manifest key-stats entry" as an actual code path).
-_SNAPSHOT_DIR = "_snapshots"
-
-
-class SnapshotConflict(RuntimeError):
-    """Another writer committed this snapshot version first — re-read
-    the current snapshot and retry (optimistic concurrency, same rule
-    as operators/manifest.py's version-file race)."""
-
-
-# Minimum lease runway required to BEGIN the two-step publish
-# (manifest write + pointer flip). Renewing first makes expiry-based
-# takeover impossible for the whole window; capped at half the lease
-# inside Lease.ensure_margin so short test leases behave.
-COMMIT_MARGIN_S = 30.0
-
-
-def commit_snapshot(root: str, snap: dict, lease=None) -> int:
-    """Commit ``snap`` as the next snapshot version and publish it.
-
-    The manifest file is created with a conditional put — a lockless
-    concurrent committer loses explicitly (SnapshotConflict), never
-    silently. A version file BEYOND the committed pointer is an orphan
-    from a writer that died between manifest write and pointer flip —
-    reclaimed by overwrite, but ONLY after re-reading the pointer and
-    confirming it has not advanced to ``v`` meanwhile (r13 ADVICE: the
-    old ``v > committed`` check was computed from the same pre-put
-    read and therefore a tautology; a concurrent committer that lost
-    the conditional put would have silently overwritten the winner's
-    manifest and republished the pointer — the exact lost-commit the
-    conditional put exists to prevent).
-
-    ``lease`` (the :class:`~..sources.bucketing.Lease` yielded by
-    ``exclusive_append``) adds the FENCING check: the commit verifies
-    the lock still carries this writer's exact payload before touching
-    the manifest AND again immediately before the pointer flip, so a
-    zombie writer whose lease was taken over (expiry recovery on
-    another host, dead-pid recovery here) raises FencedOut instead of
-    publishing over its successor. The commit also refuses to BEGIN
-    unless the lease has a safety margin left (``Lease.ensure_margin``
-    — renew-first), so expiry-based takeover cannot land between the
-    manifest write and the pointer flip (r14 verdict item 8: the fence
-    re-check narrows that gap but a descheduled zombie could still
-    straddle it). Writers that mutate committed state — ingest
-    generations, compactions — MUST pass their lease; only first-build
-    commits into a root no other writer can know about may omit it."""
-    import json  # noqa: PLC0415
-
-    io = get_store_io()
-    if lease is not None:
-        lease.ensure_margin(COMMIT_MARGIN_S)
-        lease.assert_held("snapshot manifest write")
-    committed = current_snapshot_version(root)
-    v = committed + 1
-    path = os.path.join(root, _SNAPSHOT_DIR, f"v{v}.json")
-    text = json.dumps(snap, sort_keys=True)
-    if not io.put_if_absent(path, text):
-        if current_snapshot_version(root) >= v:
-            # the pointer advanced past our read: a concurrent writer
-            # committed v first — OUR work is stale, never overwrite
-            raise SnapshotConflict(
-                f"{root}: snapshot v{v} already committed by another "
-                "writer — re-read the current snapshot and retry"
-            )
-        if lease is None:
-            # orphan reclaim is safe ONLY under the exclusive lease: a
-            # lease-less committer that lost the conditional put could
-            # re-read the pointer BEFORE the winner flips it, conclude
-            # 'orphan', and overwrite the winner's manifest — a silent
-            # lost commit (r14 ADVICE). Without the lease we cannot
-            # distinguish a crashed predecessor's debris from a live
-            # competitor's in-flight commit, so lose explicitly.
-            raise SnapshotConflict(
-                f"{root}: manifest v{v} exists and no lease is held — "
-                "a concurrent committer may be mid-publish; acquire "
-                "the tier lease (exclusive_append) to reclaim orphans"
-            )
-        # pointer still behind v AND we hold the lease: the manifest
-        # is an orphan of a crashed predecessor (a live competitor
-        # would hold the lease and have advanced the pointer) —
-        # reclaim by overwrite, the recovery re-ingest path
-        io.put_atomic(path, text)
-    if lease is not None:
-        lease.assert_held("snapshot pointer flip")
-    publish_store(root, f"v{v}")
-    return v
-
-
-def current_snapshot_version(root: str) -> int:
-    """-1 when no snapshot has been committed yet."""
-    ptr = current_store(root, "")
-    if not ptr.startswith("v"):
-        return -1
-    try:
-        return int(ptr[1:])
-    except ValueError:
-        return -1
-
-
-def current_snapshot(root: str) -> dict | None:
-    """The committed snapshot manifest (driver-side JSON reads, no
-    Spark job — probe laziness holds). None before the first commit."""
-    import json  # noqa: PLC0415
-
-    v = current_snapshot_version(root)
-    if v < 0:
-        return None
-    text = get_store_io().get_text(
-        os.path.join(root, _SNAPSHOT_DIR, f"v{v}.json")
-    )
-    return None if text is None else json.loads(text)
-
-
-def vacuum_unreferenced(
-    root: str,
-    children_of,
-    protected: tuple[str, ...] = ("stage",),
-    keep_snapshots: int = 2,
-    lease=None,
-) -> dict:
-    """Garbage-collect a snapshot-tier index root (r13 verdict item 2
-    — the ``_snapshots`` twin of operators/manifest.py's vacuum): the
-    LSM-shaped generation layout accumulates run dirs that no committed
-    manifest references — a crashed-and-never-retried writer's debris,
-    and superseded runs after a compaction rewrote them into one store.
-    Recovery replay reclaims the FIRST kind only when the ingest is
-    retried; nothing reclaimed the second kind — the classic LSM
-    operability tax at 100 TB.
-
-    The walk: resolve the committed pointer, retain the last
-    ``keep_snapshots`` manifests (the time-travel window — a reader
-    holding any retained snapshot keeps every store it names), union
-    the root-relative store paths each retained manifest references
-    (``children_of(snap) -> set[str]``, the tier's store-name → dir
-    mapping; entries may be nested like ``shingles/gen=1``), then
-    delete (a) every non-internal root entry outside that live set —
-    recursing into an entry only when some live path lives UNDER it —
-    and (b) every manifest outside the retention window, including
-    orphans ABOVE the pointer (safe: vacuum runs under the tier's
-    exclusive lease, so an above-pointer manifest cannot belong to a
-    live in-flight committer; a future retry simply rewrites it).
-
-    Runs under :func:`~..sources.bucketing.exclusive_append` — vacuum
-    is a WRITER (it deletes files), and holding the lease is exactly
-    what makes above-pointer orphans provably dead. Pass an already-
-    held ``lease`` to run as a phase of a bigger leased transaction
-    (the nightly ingest+compact+vacuum job, r14 verdict item 3) —
-    the vacuum then fences on THAT lease instead of acquiring its
-    own. Underscore/dot
-    entries (``_snapshots``, ``_CURRENT``, ``_APPEND_LOCK``,
-    ``_FENCE``, CAS guards) are never touched; ``protected`` names the
-    tier's non-manifest-tracked dirs (the staged probe files). Deletes
-    go through ``StoreIO.delete_prefix`` (LIST + batched DELETE on an
-    object store). Returns ``{"deleted": [...], "retained_versions":
-    [...]}`` for the caller's accounting.
-
-    Reader-safety contract (r14 ADVICE — stated precisely): readers of
-    any RETAINED snapshot stay safe throughout — they resolve pointer
-    → manifest → stores, every store a retained manifest names
-    survives, and the pointer never moves (proven by the concurrent-
-    reader test in tests/test_r14_fixes.py). The retention window is
-    the ONLY reader grace: a reader still scanning a snapshot that has
-    fallen OUT of the window (e.g. resolved the previous version just
-    before a commit+vacuum with ``keep_snapshots=1``) can have its
-    stores deleted mid-scan — size ``keep_snapshots`` to cover the
-    longest reader, exactly as lakehouse table formats size their
-    snapshot-expiry age floor. ``keep_snapshots < 1`` would delete the
-    currently-published manifest out from under ``_CURRENT`` (a
-    bricked index) and is rejected with ValueError.
-
-    Metastore note: band-run TABLE entries whose files are vacuumed
-    remain in the session catalog until the next ``write_bucketed``
-    (which drops stale tables); at production scale the catalog entry
-    IS the manifest, so this is a local-session artifact only."""
-    import json  # noqa: PLC0415
-
-    from ..sources.bucketing import exclusive_append  # noqa: PLC0415
-
-    if keep_snapshots < 1:
-        raise ValueError(
-            f"keep_snapshots={keep_snapshots}: must retain at least "
-            "the currently-published snapshot — 0 would delete the "
-            "manifest and stores _CURRENT still points at"
-        )
-    io = get_store_io()
-
-    def _walk(lease) -> dict:
-        cur = current_snapshot_version(root)
-        if cur < 0:
-            return {"deleted": [], "retained_versions": []}
-        retained = list(range(max(0, cur - keep_snapshots + 1), cur + 1))
-        live: set[str] = set(protected)
-        for v in retained:
-            text = io.get_text(
-                os.path.join(root, _SNAPSHOT_DIR, f"v{v}.json")
-            )
-            if text is not None:
-                live |= {p.strip("/") for p in children_of(json.loads(text))}
-
-        deleted: list[str] = []
-
-        def sweep(rel: str) -> None:
-            base = os.path.join(root, rel) if rel else root
-            for name in io.list_names(base):
-                if name.startswith(("_", ".")):
-                    continue
-                child = f"{rel}/{name}" if rel else name
-                if child in live:
-                    continue
-                if any(p.startswith(child + "/") for p in live):
-                    sweep(child)  # something live below: descend
-                    continue
-                path = os.path.join(root, child)
-                io.delete_prefix(path)
-                io.delete(path)  # plain-file entry (no-op after rmtree)
-                deleted.append(child)
-
-        sweep("")
-        for mname in io.list_names(os.path.join(root, _SNAPSHOT_DIR)):
-            if not (mname.startswith("v") and mname.endswith(".json")):
-                continue
-            try:
-                mv = int(mname[1:-5])
-            except ValueError:
-                continue
-            if mv not in retained:
-                io.delete(os.path.join(root, _SNAPSHOT_DIR, mname))
-        lease.assert_held("vacuum completion")
-        return {"deleted": sorted(deleted), "retained_versions": retained}
-
-    if lease is not None:
-        lease.assert_held("vacuum start")
-        return _walk(lease)
-    with exclusive_append(root, owner="vacuum") as own:
-        return _walk(own)
-
-
 # Small-delta probe pushdown: a delta that touches a handful of
 # band/block keys should not force a full scan of the stored index.
 # The ingest records the delta's DISTINCT key set (capped) as a tiny
@@ -364,8 +83,8 @@ def vacuum_unreferenced(
 # bucketed scan — correct, and the right plan anyway: a delta with
 # >PROBE_PUSHDOWN_MAX_KEYS distinct keys touches most row groups, so
 # pushdown would only bloat the plan. At 100 TB the sidecar is the
-# per-commit key-stats entry in the manifest (operators/manifest.py
-# already records per-file stats at commit).
+# per-commit key-stats entry in the snapshot manifest (manifest tables
+# already record per-file stats there at commit).
 PROBE_PUSHDOWN_MAX_KEYS = 4096
 _DELTA_KEYS_SIDECAR = "_delta_keys.json"
 
@@ -496,7 +215,7 @@ def list_partition_ids(store_dir: str) -> set[int]:
     (O(#files) metadata ops against object storage), while the
     partition listing is one LIST call; on a managed table the same
     numbers come from manifest / metastore stats
-    (operators/manifest.py records them at commit).
+    (manifest tables record them at commit).
 
     Non-integer hive artifacts are SKIPPED, not fatal (r12 ADVICE): a
     ``__HIVE_DEFAULT_PARTITION__`` entry (the null partition value) or

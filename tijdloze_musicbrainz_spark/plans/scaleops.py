@@ -22,7 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .registry import register
-from .util import eager_checkpoint, money_sum, money_sum_sql, t
+from .util import eager_checkpoint, fits_broadcast, money_sum, money_sum_sql, t
 
 N_SALTS = 8
 N_BUCKETS = 8
@@ -33,23 +33,12 @@ N_BUCKETS = 8
 # the oracle so both engines derive the identical skew.
 _HOT_KEY_SQL = "CASE WHEN l_partkey % 2 = 0 THEN 1 ELSE l_partkey END"
 
-# Broadcast budget for the oriented edge list in the triangle closure
-# join (two long columns). 48 bytes/row covers the UnsafeRow plus
-# hash-relation overhead of the built side; the cap is sized to a
-# production executor's broadcast share, env-overridable so a cluster
-# with more headroom can raise it (or a constrained one lower it).
+# Per-row sizes for the broadcast gate (util.fits_broadcast): the
+# oriented edge list of the triangle closure join (two longs) and the
+# (node, hops) rows of the BFS frontier/visited sets (long + int), each
+# plus UnsafeRow + hash-relation overhead of the built side.
 _EDGE_BCAST_ROW_BYTES = 48
-_EDGE_BCAST_MAX_BYTES = int(
-    os.environ.get("SPARK_GRAFT_EDGE_BCAST_MAX_BYTES", str(256 << 20))
-)
-
-# (node, hops) rows in the BFS frontier/visited broadcasts: long + int
-# plus UnsafeRow + hash-relation overhead.
 _NODE_BCAST_ROW_BYTES = 40
-
-
-def _node_set_fits_bcast(n_rows: int) -> bool:
-    return n_rows * _NODE_BCAST_ROW_BYTES <= _EDGE_BCAST_MAX_BYTES
 
 
 @register(
@@ -566,9 +555,7 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     # so at production scale, where edges outgrow the budget, the plan
     # falls back to the bounded sort-merge shape unchanged.
     n_edges_exact = oriented.count()
-    bcast_edges = (
-        n_edges_exact * _EDGE_BCAST_ROW_BYTES <= _EDGE_BCAST_MAX_BYTES
-    )
+    bcast_edges = fits_broadcast(None, n_edges_exact, _EDGE_BCAST_ROW_BYTES)
     _side = F.broadcast if bcast_edges else (lambda d: d)
     # Deliberately NOT fanned out: raising the probe stage from the
     # checkpoint's 10 partitions to 32 slots left the wall unchanged
@@ -844,7 +831,10 @@ def graph_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_visited = visited.count()
     for _ in range(BFS_MAX_HOPS):
         new = _bfs_expand(
-            frontier, edges, visited, bcast=_node_set_fits_bcast(n_visited)
+            frontier,
+            edges,
+            visited,
+            bcast=fits_broadcast(None, n_visited, _NODE_BCAST_ROW_BYTES),
         )
         n_visited += new.count()  # cheap: `new` is already materialized
         # visited stays a lazy union of CHECKPOINTED blocks (seeds +
@@ -917,7 +907,10 @@ def graph_bfs_fixpoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_visited = visited.count()
     while True:
         new = _bfs_expand(
-            frontier, edges, visited, bcast=_node_set_fits_bcast(n_visited)
+            frontier,
+            edges,
+            visited,
+            bcast=fits_broadcast(None, n_visited, _NODE_BCAST_ROW_BYTES),
         )
         n_new = new.count()  # cheap: `new` is already materialized
         if n_new == 0:

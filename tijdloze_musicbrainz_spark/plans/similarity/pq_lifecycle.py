@@ -13,13 +13,8 @@ import pandas as pd  # noqa: F401,TC002  (pandas_udf resolves 'pd.Series' hints 
 from pyspark.sql import Column, DataFrame, SparkSession, Window  # noqa: F401
 from pyspark.sql import functions as F
 
-from ..lifecycle import (
-    commit_snapshot,
-    compact_partitioned,
-    current_snapshot,
-    index_root,
-    list_partition_ids,
-)
+from ...sources.commit_log import commit_snapshot, current_snapshot
+from ..lifecycle import compact_partitioned, index_root, list_partition_ids
 from ..registry import register
 from ..util import t  # noqa: F401
 

@@ -104,6 +104,29 @@ def values_df(spark: SparkSession, rows: list, schema: str) -> DataFrame:
     )
 
 
+# The one budget of the broadcast gate below, sized to a production
+# executor's broadcast share; a cluster with more headroom raises it.
+BCAST_MAX_BYTES = int(
+    os.environ.get("SPARK_GRAFT_EDGE_BCAST_MAX_BYTES", str(256 << 20))
+)
+
+
+def fits_broadcast(
+    measured_bytes: float | None, n_rows: int | None, row_bytes: int
+) -> bool:
+    """The broadcast-size gate for build sides AQE cannot size (a
+    checkpoint is a LogicalRDD without stats): True when the side fits
+    :data:`BCAST_MAX_BYTES` by ``measured_bytes`` (e.g. an observed
+    checkpoint's block bytes), else by ``n_rows * row_bytes``, the
+    caller's per-row estimate; with neither figure it refuses. Above
+    the budget the caller keeps its sort-merge plan."""
+    if measured_bytes is not None:
+        return measured_bytes <= BCAST_MAX_BYTES
+    if n_rows is not None:
+        return n_rows * row_bytes <= BCAST_MAX_BYTES
+    return False
+
+
 def fan_out(df: DataFrame) -> DataFrame:
     """Raise map-side parallelism of a CPU-heavy narrow pipeline when
     the upstream scan has FEWER partitions than the cluster has slots.

@@ -34,9 +34,9 @@ class ConcurrentAppendError(RuntimeError):
     maintains its own accounting (doc counts, ingest sequence), so the
     index silently drifts from both writers' view. The exclusive lock
     turns that silent interleave into this explicit error (r10 verdict
-    item 7 — the lakehouse manifest already had this property via its
-    version-file race; the bare ``saveAsTable(mode="append")`` index
-    paths did not)."""
+    item 7). Manifest tables take the same lease for their commit
+    step, so a busy lease there means "re-read and retry"
+    (operators.manifest.merge_with_retry)."""
 
 
 class FencedOut(RuntimeError):
@@ -289,7 +289,7 @@ def exclusive_append(
     deleted). Taking over is safe because ingest transactions are
     crash-atomic — the dead writer's partial store writes are
     invisible (readers resolve only snapshot-committed stores,
-    plans/lifecycle.py commit_snapshot), every per-generation write is
+    sources/commit_log.py commit_snapshot), every per-generation write is
     a deterministic-path overwrite, and an in-flight ZOMBIE holder
     (alive but expired — e.g. a GC-paused driver) is rejected at its
     commit by the fencing check. An in-process failure (exception, not
@@ -305,8 +305,7 @@ def exclusive_append(
             f"{location}: another writer holds {lock} "
             f"({(held or '').strip()!r}) — concurrent file-level "
             "appends to a bucketed index would interleave silently; "
-            "retry after the holder commits or its lease expires, or "
-            "use operators.manifest for optimistic concurrency"
+            "retry after the holder commits or its lease expires"
         )
 
     # reserve the fence BEFORE attempting the lock (CAS on _FENCE —

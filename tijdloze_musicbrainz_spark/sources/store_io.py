@@ -1,9 +1,10 @@
 """The store-IO seam: every metadata primitive the index/store layer
 leans on, behind one small interface (r12 verdict item 3).
 
-The engine's persisted-index tiers (plans/lifecycle.py,
-plans/dedup_index.py, plans/cc_index.py, operators/manifest.py) need
-exactly these primitives beyond bulk parquet IO, and each has a
+The engine's commit log (sources/commit_log.py — the one log the
+persisted-index tiers and the manifest tables both commit through),
+the append lease (sources/bucketing.py) and the index tiers' sidecars
+need exactly these primitives beyond bulk parquet IO, and each has a
 well-defined object-store equivalent:
 
 ===================  =========================  ======================
@@ -36,7 +37,8 @@ delta-key sidecars, partition listings. SCALE.md's prose mapping
 module: deploying against an object store means providing one
 ``StoreIO`` implementation, not auditing every call site
 (tests/test_store_io.py proves the contract is sufficient by running
-the pointer/lock/sidecar flows through an in-memory fake).
+the pointer/lock/sidecar flows and a manifest table's merges, time
+travel and vacuum through an in-memory fake).
 
 Swap the implementation process-wide with :func:`set_store_io`
 (tests) — call sites always go through :func:`get_store_io` so the

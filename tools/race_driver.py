@@ -63,13 +63,11 @@ def main() -> None:
 
     from tijdloze_musicbrainz_spark.plans import dedup_index as di
     from tijdloze_musicbrainz_spark.plans.dedup import words_col
-    from tijdloze_musicbrainz_spark.plans.lifecycle import (
-        current_snapshot,
-        sf_tag,
-    )
+    from tijdloze_musicbrainz_spark.plans.lifecycle import sf_tag
     from tijdloze_musicbrainz_spark.plans.util import t
     from tijdloze_musicbrainz_spark.session import get_spark
     from tijdloze_musicbrainz_spark.sources import bucketing as bk
+    from tijdloze_musicbrainz_spark.sources.commit_log import current_snapshot
 
     name = "mh_race2p"
     spark = get_spark(f"race_{role}", shuffle_partitions=4)
