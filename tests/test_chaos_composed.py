@@ -57,7 +57,12 @@ def test_chaos_three_generations_reader_loser_kill(
 
     # -- base build, snapshot v0 (same shape as _build_and_ingest) -----
     t_bands = f"{name}_bands_{tag}"
-    di._write_gen_bands(di._bands_of(base), t_bands, f"{root}/bands_g0")
+    # explicit, and not the data-sized 1: every generation must take
+    # its bucket spec from the manifest
+    num_buckets = 4
+    di._write_gen_bands(
+        di._bands_of(base), t_bands, f"{root}/bands_g0", num_buckets
+    )
     di._write_gen_shingles(di._shingle_sets(base), f"{root}/shingles/gen=0")
     n_base = base.count()
     commit_snapshot(
@@ -66,6 +71,7 @@ def test_chaos_three_generations_reader_loser_kill(
             "bands": [t_bands],
             "shingle_dirs": [f"{root}/shingles/gen=0"],
             "n_indexed": n_base,
+            "num_buckets": num_buckets,
             "key_stats": None,
         },
     )
@@ -153,6 +159,13 @@ def test_chaos_three_generations_reader_loser_kill(
         f"{t_bands}_g2",
         f"{t_bands}_g3",
     ]
+    assert final["num_buckets"] == num_buckets
+    for run in final["bands"]:
+        spec = {
+            r["col_name"]: r["data_type"]
+            for r in spark.sql(f"DESCRIBE TABLE EXTENDED {run}").collect()
+        }
+        assert spec["Num Buckets"] == str(num_buckets), (run, spec)
     # the survived index answers probes: batch-3 arrivals find their
     # planted near-dup partners across ALL generations
     pairs = di._probe_index(

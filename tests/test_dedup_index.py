@@ -58,10 +58,8 @@ def test_compaction_collapses_files_preserving_results(spark, sf_dir):
     import re
     from collections import Counter
 
-    from tijdloze_musicbrainz_spark.plans.dedup_index import (
-        DEDUP_INDEX_BUCKETS,
-    )
     from tijdloze_musicbrainz_spark.plans.etl import SINK_ROOT
+    from tijdloze_musicbrainz_spark.sources.commit_log import current_snapshot
 
     inc = {
         tuple(r)
@@ -97,10 +95,11 @@ def test_compaction_collapses_files_preserving_results(spark, sf_dir):
     # pre-compaction: TWO runs (base + ingested generation), each with
     # one-plus file per touched bucket; the compactor folds the run
     # set into one table with exactly one file per bucket
+    num_buckets = current_snapshot(root)["num_buckets"]
     n_before = layout(f"{root}/bands_g0")[0] + layout(f"{root}/bands_g1")[0]
     n_after, max_per_bucket = layout(f"{root}/bands_c")
-    assert n_before > DEDUP_INDEX_BUCKETS
-    assert n_after <= DEDUP_INDEX_BUCKETS
+    assert n_before > num_buckets
+    assert n_after <= num_buckets
     assert max_per_bucket == 1
 
 
@@ -277,7 +276,8 @@ def test_small_delta_probe_skips_row_groups(spark, tmp_path):
     from tijdloze_musicbrainz_spark.sources.bucketing import write_bucketed
 
     n_store = 500_000
-    nb = di.DEDUP_INDEX_BUCKETS
+    # an explicit multi-bucket store, so bucket pruning has files to skip
+    nb = 16
     store = spark.range(n_store).select(
         F.xxhash64("id").alias("band_key"), F.col("id").alias("doc_id")
     )
@@ -341,6 +341,7 @@ def test_small_delta_probe_skips_row_groups(spark, tmp_path):
         ),
         "band_key",
         delta_dir,
+        len(hit_keys),
     )
     pushed = probe_plan()
     scans = [l for l in pushed.splitlines() if "probe_skip_bands" in l]
@@ -348,7 +349,7 @@ def test_small_delta_probe_skips_row_groups(spark, tmp_path):
     sbc = re.search(r"SelectedBucketsCount: (\d+) out of (\d+)", pushed)
     assert sbc is not None, pushed[:4000]
     n_sel, n_tot = int(sbc.group(1)), int(sbc.group(2))
-    assert n_tot == di.DEDUP_INDEX_BUCKETS
+    assert n_tot == nb
     assert n_sel < n_tot, (n_sel, n_tot)
 
     # (c) row-group stats audit: rows in row groups whose [min,max]
@@ -369,3 +370,73 @@ def test_small_delta_probe_skips_row_groups(spark, tmp_path):
     assert eligible < n_store // 4, (eligible, total)
 
     spark.sql("DROP TABLE IF EXISTS probe_skip_bands")
+
+
+def test_split_count_sizes_to_target(spark):
+    """The bucket-count rule: ceil(bytes / target), at least one; the
+    target is the session's scan-split size, read back from Spark's
+    byte-string conf."""
+    from tijdloze_musicbrainz_spark.sources.bucketing import (
+        split_bytes,
+        split_count,
+    )
+
+    target = 128 << 20
+    assert split_count(0, target) == 1
+    assert split_count(target, target) == 1
+    assert split_count(target + 1, target) == 2
+    assert split_count(1000 * target, target) == 1000
+
+    key = "spark.sql.files.maxPartitionBytes"
+    old = spark.conf.get(key)
+    try:
+        assert split_bytes(spark) == target  # session.py pins 128 MB
+        spark.conf.set(key, "64m")
+        assert split_bytes(spark) == 64 << 20
+        spark.conf.set(key, "134217728b")
+        assert split_bytes(spark) == target
+    finally:
+        spark.conf.set(key, old)
+
+
+def test_vacuum_job_budget_and_data_sized_buckets(spark):
+    """Job budget of the index lifecycle (build, append, compaction,
+    vacuum, probe) at sf0.01, counted with statusTracker job groups.
+    The base run is ~115 KB, so the data-sized band index is ONE
+    bucket, and the key sidecar's over-cap pre-check rides the staged
+    write instead of launching a job."""
+    import os
+
+    from tijdloze_musicbrainz_spark.plans.lifecycle import index_root
+    from tijdloze_musicbrainz_spark.plans.util import t
+    from tijdloze_musicbrainz_spark.sources.commit_log import current_snapshot
+
+    sf = os.path.join(
+        os.path.dirname(os.path.abspath(__file__)),
+        "..", "perfbench", "data", "sf0.01",
+    )
+    # the catalog's one-time schema read belongs to the session, not
+    # to the lifecycle: take it before counting
+    t(spark, sf, "documents")
+    sc = spark.sparkContext
+
+    def jobs_of(group, fn):
+        sc.setJobGroup(group, "job-budget probe")
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    df, n_build = jobs_of(
+        "mh-vacuum-budget-build",
+        lambda: REGISTRY["dedup_minhash_vacuum"].builder(spark, sf),
+    )
+    _, n_exec = jobs_of(
+        "mh-vacuum-budget-exec",
+        lambda: df.write.format("noop").mode("overwrite").save(),
+    )
+    assert n_build <= 13, n_build
+    assert n_exec <= 4, n_exec
+    snap = current_snapshot(index_root(sf, "mh_vacuum", fresh=False))
+    assert snap["num_buckets"] == 1

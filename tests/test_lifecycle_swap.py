@@ -26,7 +26,8 @@ def test_concurrent_probe_during_band_index_compaction(spark, tmp_path):
     )
     from tijdloze_musicbrainz_spark.sources.bucketing import write_bucketed
 
-    nb = di.DEDUP_INDEX_BUCKETS
+    # an explicit multi-bucket store: the swap races a real compaction
+    nb = 16
     store = spark.range(200_000).select(
         F.xxhash64("id").alias("band_key"), F.col("id").alias("doc_id")
     )

@@ -426,8 +426,6 @@ DRIVER_MATERIALIZATION_ALLOWLIST = {
         "1-row compaction bounds",
     ("sources/bucketing.py", "desc", "collect"):
         "DESCRIBE TABLE metadata rows",
-    ("plans/lifecycle.py", "write_delta_key_manifest", "collect"):
-        "1-row approx_count_distinct over-cap guard (r12 verdict 6)",
     ("plans/lifecycle.py", "_exact_key_set", "collect"):
         "distinct delta keys, limit(PROBE_PUSHDOWN_MAX_KEYS + 1)",
     ("plans/dedup.py", "dedup_ngram_jaccard_meta_blocked", "first"):

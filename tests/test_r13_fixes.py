@@ -6,7 +6,9 @@ accounting row).
   (ADVICE: lifecycle.write_delta_key_manifest).
 - An over-cap delta must not pay the exact distinct SHUFFLE just to
   discard the key set (verdict item 6: approx_count_distinct guard) —
-  pinned by counting the Spark jobs the sidecar write launches.
+  pinned by counting the Spark jobs the sidecar write launches: the
+  approximate count is observed on the staged write and passed in, so
+  the over-cap path launches none.
 - Hive artifacts with non-integer partition values must be skipped by
   the catalog listing, not raise (ADVICE: lifecycle.list_partition_ids).
 - The meta-blocked Jaccard drop counters must reach the hashed result
@@ -56,7 +58,7 @@ def test_sidecar_drops_null_keys_instead_of_crashing(spark, tmp_path):
     )
     d = str(tmp_path)
     # pre-fix this raised TypeError from sorted([None, 10, 20])
-    write_delta_key_manifest(staged, "band_key", d)
+    write_delta_key_manifest(staged, "band_key", d, 2)
     m = _read_sidecar(d)
     assert m["complete"] is True
     # NULL keys can never equi-join a probe — dropping them is exact
@@ -83,7 +85,8 @@ def test_sidecar_overcap_delta_skips_exact_distinct_shuffle(
     d_over = str(tmp_path / "over")
     os.makedirs(d_over)
     n_over = _jobs_launched(
-        spark, lambda: write_delta_key_manifest(over, "band_key", d_over)
+        spark,
+        lambda: write_delta_key_manifest(over, "band_key", d_over, 20 * cap),
     )
     m = _read_sidecar(d_over)
     assert m["complete"] is False and m["keys"] == []
@@ -95,14 +98,15 @@ def test_sidecar_overcap_delta_skips_exact_distinct_shuffle(
     d_under = str(tmp_path / "under")
     os.makedirs(d_under)
     n_under = _jobs_launched(
-        spark, lambda: write_delta_key_manifest(under, "band_key", d_under)
+        spark,
+        lambda: write_delta_key_manifest(under, "band_key", d_under, 17),
     )
     m = _read_sidecar(d_under)
     assert m["complete"] is True and m["keys"] == list(range(17))
-    # relative job accounting (absolute counts are AQE-stage physics):
-    # the over-cap path runs only the approx sketch, so it must launch
-    # strictly fewer jobs than the under-cap path that pays both
-    assert n_over < n_under, (n_over, n_under)
+    # the over-cap decision uses only the count passed in: no job at
+    # all, while the under-cap path pays the exact distinct pass
+    assert n_over == 0, n_over
+    assert n_under > 0, n_under
 
 
 def test_list_partition_ids_skips_non_integer_hive_artifacts(tmp_path):

@@ -501,8 +501,8 @@ def test_pushdown_keys_cost_bound(tmp_path, spark):
         [(i, i) for i in range(n_over)], "doc_id bigint, band_key bigint"
     )
     d_small, d_big = str(tmp_path / "s"), str(tmp_path / "b")
-    write_delta_key_manifest(small, "band_key", d_small)
-    write_delta_key_manifest(big, "band_key", d_big)
+    write_delta_key_manifest(small, "band_key", d_small, 7)
+    write_delta_key_manifest(big, "band_key", d_big, n_over)
     # small set: pushed (and equals the sidecar record)
     assert pushdown_keys(d_small, "band_key") == sorted(range(7))
     # over-break-even: NOT pushed — even though the sidecar is

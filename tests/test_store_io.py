@@ -176,7 +176,7 @@ def test_sidecar_and_partition_listing_through_fake(fake_io, spark):
     staged = spark.createDataFrame(
         [(1, 10), (2, 20), (3, 10)], "doc_id bigint, band_key bigint"
     )
-    write_delta_key_manifest(staged, "band_key", "/fake/stage")
+    write_delta_key_manifest(staged, "band_key", "/fake/stage", 2)
     assert read_delta_key_manifest("/fake/stage", "band_key") == [10, 20]
     assert read_delta_key_manifest("/fake/stage", "other_col") is None
 

@@ -87,10 +87,11 @@ def _base(spark: SparkSession) -> DataFrame:
     7.1 s — literal rows copied into the plan at every reference,
     optimizer passes walk all copies; an eager localCheckpoint →
     7.0 s — the LogicalRDD loses size stats and the broadcasts
-    degrade to sort-merge.) The sink is rmtree'd and rebuilt inside
-    every build, so each bench trial still computes from the CSV —
-    nothing persists across runs."""
-    import shutil  # noqa: PLC0415
+    degrade to sort-merge.) Every build writes its own fresh sink
+    directory, so each bench trial still computes from the CSV, and a
+    second build never deletes files an earlier build's plan still
+    lists."""
+    import uuid  # noqa: PLC0415
 
     from .etl import SINK_ROOT  # noqa: PLC0415
 
@@ -107,8 +108,7 @@ def _base(spark: SparkSession) -> DataFrame:
         .alias("db_mb_id"),
         F.col("release_year").cast("long").alias("release_year"),
     )
-    path = f"{SINK_ROOT}/golden_base"
-    shutil.rmtree(path, ignore_errors=True)
+    path = f"{SINK_ROOT}/golden_base/{uuid.uuid4().hex}"
     parsed.write.parquet(path)
     return spark.read.schema(parsed.schema).parquet(path)
 

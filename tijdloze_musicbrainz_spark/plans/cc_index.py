@@ -358,9 +358,11 @@ def _ingest_batch(
     lands. Every write is a deterministic-path overwrite, so a
     recovery replay converges. Returns the batch's doc count (the
     O(delta) accounting term)."""
-    pay.filter(batch_pred).write.mode("overwrite").parquet(
-        f"{paths['stage']}/delta_{gen}"
-    )
+    # the key sidecar's over-cap pre-check rides the staging write
+    keys_obs = Observation()
+    pay.filter(batch_pred).observe(
+        keys_obs, F.approx_count_distinct("blk").alias("keys")
+    ).write.mode("overwrite").parquet(f"{paths['stage']}/delta_{gen}")
     batch_ids = docs_all.filter(batch_pred)
     # the accounting count rides the staged-ids write (same rows) —
     # one job instead of two (r15 verdict item 3)
@@ -374,7 +376,10 @@ def _ingest_batch(
     # probe-pushdown sidecar: the batch's distinct block keys, so the
     # later probe can push In(blk, ...) into the stored block scan
     # without launching a job (plans/lifecycle.py design note)
-    write_delta_key_manifest(staged, "blk", f"{paths['stage']}/delta_{gen}")
+    write_delta_key_manifest(
+        staged, "blk", f"{paths['stage']}/delta_{gen}",
+        int(keys_obs.get["keys"] or 0),
+    )
     _write_gen_blocks(
         staged, f"{t_blocks}_g{gen}", f"{paths['root']}/blocks_g{gen}"
     )

@@ -11,8 +11,12 @@ Storage layout (the 100 TB story):
   band_key (sources/bucketing.py) — the probe join co-locates against
   the stored side with NO shuffle of the index, the exact lever the
   reference's B-tree alias indexes pulled per-row (sql/2:17-18) lifted
-  to batch scale. Bucket count sizes to ~128-256 MB per bucket of the
-  index at target scale.
+  to batch scale. The bucket count is sized to the data once, at the
+  base build — one bucket per scan split
+  (``spark.sql.files.maxPartitionBytes``) of the base run — and
+  committed in the snapshot manifest as ``num_buckets``; every
+  generation run and every compaction read it from there, so all runs
+  of one index share one bucket spec.
 - ``shingles``: (doc_id, sgs) parquet — the verify payload, fetched by
   id ONLY for candidate pairs (the dedup twin of the ANN shortlist
   re-rank fetching exact vectors by id).
@@ -33,7 +37,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from ..sources.bucketing import exclusive_append, write_bucketed
+from ..sources.bucketing import (
+    exclusive_append,
+    split_bytes,
+    split_count,
+    write_bucketed,
+)
 from ..sources.commit_log import (
     commit_snapshot,
     current_snapshot,
@@ -50,6 +59,7 @@ from .lifecycle import (
 from .dedup import (
     JACCARD_PREFIX_CTES,
     JACCARD_VERIFY_SQL,
+    N_BANDS,
     band_key_cols,
     jaccard,
     minhash_agg_exprs,
@@ -69,9 +79,10 @@ from .util import checkpointed_payload, t
 # Every DEDUP_DELTA_MOD-th document "arrives" after the base index is
 # built — a deterministic split both engines can state.
 DEDUP_DELTA_MOD = 10
-# Toy-scale bucket count; at 100 TB size buckets to ~128-256 MB of
-# index each (e.g. ~4096 buckets for a 600 GB band table).
-DEDUP_INDEX_BUCKETS = 16
+# One band row is two longs (band_key, doc_id): the base run's size is
+# n_base x N_BANDS x 16 B, so sf0.01 and sf0.1 fit one 128 MB bucket
+# and a 600 GB band table gets ~4800.
+_BAND_ROW_BYTES = 16
 
 # The arriving-endpoint-restricted exact pair oracle, stated with the
 # shared prefix-filter CTEs (plans/dedup.py) instead of the exhaustive
@@ -115,10 +126,13 @@ def _shingle_sets(docs: DataFrame) -> DataFrame:
     return docs.select("doc_id", shingles_col(F.col("ws")).alias("sgs"))
 
 
-def _write_gen_bands(staged: DataFrame, table: str, location: str) -> None:
+def _write_gen_bands(
+    staged: DataFrame, table: str, location: str, num_buckets: int
+) -> None:
     """One generation's band run: an immutable bucketed table with the
-    SAME bucket spec as every other run (an LSM-style level — probes
-    read each run bucket-aligned; compaction folds runs back to one).
+    SAME bucket spec as every other run — ``num_buckets`` comes from
+    the snapshot manifest (an LSM-style level — probes read each run
+    bucket-aligned; compaction folds runs back to one).
     Deterministic path + drop-then-write = idempotent on recovery
     replay. Module-level so the crash test can fail the transaction
     between store writes."""
@@ -126,10 +140,21 @@ def _write_gen_bands(staged: DataFrame, table: str, location: str) -> None:
         staged,
         table,
         bucket_cols=["band_key"],
-        num_buckets=DEDUP_INDEX_BUCKETS,
+        num_buckets=num_buckets,
         sort_cols=["band_key"],
         location=location,
     )
+
+
+def _stage_delta_bands(delta: DataFrame, stage: str) -> int:
+    """Sign the arriving batch once into the staged probe files and
+    return its approximate distinct band-key count, observed on that
+    write — the key sidecar's over-cap pre-check launches no job."""
+    keys_obs = Observation()
+    _bands_of(delta).observe(
+        keys_obs, F.approx_count_distinct("band_key").alias("keys")
+    ).write.mode("overwrite").parquet(stage)
+    return int(keys_obs.get["keys"] or 0)
 
 
 def _write_gen_shingles(sh: DataFrame, path: str) -> None:
@@ -164,19 +189,21 @@ def _ingest_generation(
     stage = f"{root}/stage/delta_bands" if gen == 1 else (
         f"{root}/stage/delta_bands_g{gen}"
     )
-    _bands_of(delta).write.mode("overwrite").parquet(stage)
+    approx_keys = _stage_delta_bands(delta, stage)
     # record the delta's distinct band keys (capped) as the probe's
-    # pushdown sidecar — one bounded job here at ingest so the probe
+    # pushdown sidecar — bounded work here at ingest so the probe
     # itself can push an In(band_key, ...) filter into the stored scan
     # without launching any job (plans/lifecycle.py design note)
     staged = spark.read.schema("doc_id bigint, band_key bigint").parquet(
         stage
     )
-    write_delta_key_manifest(staged, "band_key", stage)
+    write_delta_key_manifest(staged, "band_key", stage, approx_keys)
     with exclusive_append(root, owner=name) as lease:
         snap = current_snapshot(root)
         t_gen = f"{name}_bands_{tag}_g{gen}"
-        _write_gen_bands(staged, t_gen, f"{root}/bands_g{gen}")
+        _write_gen_bands(
+            staged, t_gen, f"{root}/bands_g{gen}", snap["num_buckets"]
+        )
         # heartbeat between store writes: each phase runs Spark jobs
         # of data-dependent length, so the lease is renewed at phase
         # boundaries — margin stays >= lease_s however long the
@@ -202,6 +229,7 @@ def _ingest_generation(
                     f"{root}/shingles/gen={gen}",
                 ],
                 "n_indexed": snap["n_indexed"] + n_delta,
+                "num_buckets": snap["num_buckets"],
                 # the manifest's key-stats entry — what the probe
                 # pushdown reads at production scale; the staged-dir
                 # sidecar is its colocated twin for raw-path probes
@@ -286,14 +314,23 @@ def _build_base_index(
     tag = sf_tag(sf_dir)
     root = index_root(sf_dir, name)
     t_bands = f"{name}_bands_{tag}"
-    _write_gen_bands(_bands_of(base), t_bands, f"{root}/bands_g0")
+    n_base = int(docs_m["n_base"] or 0)
+    # one bucket per scan split of the base run, committed with it so
+    # every later run and compaction of this index reuses the spec
+    num_buckets = split_count(
+        n_base * N_BANDS * _BAND_ROW_BYTES, split_bytes(spark)
+    )
+    _write_gen_bands(
+        _bands_of(base), t_bands, f"{root}/bands_g0", num_buckets
+    )
     _write_gen_shingles(_shingle_sets(base), f"{root}/shingles/gen=0")
     commit_snapshot(
         root,
         {
             "bands": [t_bands],
             "shingle_dirs": [f"{root}/shingles/gen=0"],
-            "n_indexed": int(docs_m["n_base"] or 0),
+            "n_indexed": n_base,
+            "num_buckets": num_buckets,
             "key_stats": None,
         },
     )
@@ -335,8 +372,8 @@ def _probe_index(
     # cannot join, so results are identical; what changes is IO —
     # parquet skips row groups whose stats/dictionary miss every delta
     # key and Spark prunes non-matching bucket files
-    # (SelectedBucketsCount), instead of reading all
-    # DEDUP_INDEX_BUCKETS buckets end-to-end
+    # (SelectedBucketsCount), instead of reading every bucket
+    # end-to-end
     # (tests/test_dedup_index.py::test_small_delta_probe_skips_row_groups).
     # COST-BOUNDED (r14): pushed only below the measured break-even
     # key count — near-cap In lists cost more in optimizer + per-row-
@@ -478,12 +515,13 @@ def dedup_minhash_index_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     # paths used to call commit_snapshot lockless, so nothing guarded
     # the reclaim branch against a live concurrent committer)
     with exclusive_append(root, owner=name) as lease:
+        prev = current_snapshot(root)
         compact_bucketed(
             spark,
             band_runs,
             compacted,
             bucket_col="band_key",
-            num_buckets=DEDUP_INDEX_BUCKETS,
+            num_buckets=prev["num_buckets"],
             location=f"{root}/bands_c",
         )
         # write-then-publish: the compacted run is fully written, then
@@ -492,7 +530,6 @@ def dedup_minhash_index_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
         # with this compaction resolves either the multi-run or the
         # compacted COMPLETE snapshot, never a half-written one (r11
         # verdict item 3; race proof in tests/test_lifecycle_swap.py)
-        prev = current_snapshot(root)
         commit_snapshot(root, {**prev, "bands": [compacted]}, lease=lease)
     snap = current_snapshot(root)
     return _probe_index(
@@ -577,15 +614,15 @@ def dedup_minhash_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
     # -- compact (v2): supersedes the v0/v1 generation run dirs
     compacted = f"{name}_bands_{tag}_c"
     with exclusive_append(root, owner=name) as lease:
+        prev = current_snapshot(root)
         compact_bucketed(
             spark,
             band_runs,
             compacted,
             bucket_col="band_key",
-            num_buckets=DEDUP_INDEX_BUCKETS,
+            num_buckets=prev["num_buckets"],
             location=f"{root}/bands_c",
         )
-        prev = current_snapshot(root)
         commit_snapshot(root, {**prev, "bands": [compacted]}, lease=lease)
 
     # -- abandoned-writer debris, never retried: partial run dir,
@@ -778,15 +815,15 @@ def corpus_incremental_refresh_e2e(spark: SparkSession, sf_dir: str) -> DataFram
     root = index_root(sf_dir, name, fresh=False)
     compacted = f"{name}_bands_{tag}_c"
     with exclusive_append(root, owner=name) as lease:
+        prev = current_snapshot(root)
         compact_bucketed(
             spark,
             band_runs,
             compacted,
             bucket_col="band_key",
-            num_buckets=DEDUP_INDEX_BUCKETS,
+            num_buckets=prev["num_buckets"],
             location=f"{root}/bands_c",
         )
-        prev = current_snapshot(root)
         commit_snapshot(root, {**prev, "bands": [compacted]}, lease=lease)
         report = vacuum_unreferenced(
             root,
@@ -889,13 +926,16 @@ def dedup_minhash_ingest_recovery(spark: SparkSession, sf_dir: str) -> DataFrame
     # leaves it: staged files + sidecar + band run, no payload, an
     # orphan manifest one version past the pointer, and a stale lock
     stage = f"{root}/stage/delta_bands"
-    _bands_of(delta).write.mode("overwrite").parquet(stage)
+    approx_keys = _stage_delta_bands(delta, stage)
     staged = spark.read.schema("doc_id bigint, band_key bigint").parquet(
         stage
     )
-    write_delta_key_manifest(staged, "band_key", stage)
+    write_delta_key_manifest(staged, "band_key", stage, approx_keys)
     t_gen = f"{name}_bands_{tag}_g1"
-    _write_gen_bands(staged, t_gen, f"{root}/bands_g1")
+    _write_gen_bands(
+        staged, t_gen, f"{root}/bands_g1",
+        current_snapshot(root)["num_buckets"],
+    )
     io.put_if_absent(
         f"{root}/_snapshots/v1.json",
         json.dumps({"orphan": "written-but-never-published"}),

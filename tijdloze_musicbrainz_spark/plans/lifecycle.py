@@ -90,7 +90,7 @@ _DELTA_KEYS_SIDECAR = "_delta_keys.json"
 
 
 def write_delta_key_manifest(
-    staged_delta, key_col: str, staged_dir: str,
+    staged_delta, key_col: str, staged_dir: str, approx_keys: int,
     cap: int = PROBE_PUSHDOWN_MAX_KEYS,
 ) -> None:
     """Record the staged delta's distinct key set as a ``_``-prefixed
@@ -104,25 +104,22 @@ def write_delta_key_manifest(
       equi-join a probe, so dropping it is semantically free — and
       ``sorted([None, ...])`` would raise TypeError at ingest if a
       null-keyed row ever reached staging.
-    - An ``approx_count_distinct`` pre-check skips the exact distinct
-      SHUFFLE when the delta is clearly over-cap: the approximate
-      aggregate is map-side-partial with a constant-size sketch, while
-      the exact pass pays a full distinct shuffle only to throw the
-      key set away. The 1.1x slack absorbs HLL error (rsd ~5%): an
-      over-estimate past the slack with a true count <= cap is a
-      >~2-sigma event, and the only cost of that miss is a lost
-      pushdown, never a wrong answer — an under-estimate falls through
-      to the exact pass, whose limit(cap+1) still decides correctly.
+    - ``approx_keys`` is the delta's ``approx_count_distinct(key_col)``,
+      observed on the write that staged it (an ``Observation`` — the
+      pre-check launches no job of its own). It skips the exact
+      distinct SHUFFLE when the delta is clearly over-cap. The 1.1x
+      slack absorbs HLL error (rsd ~5%): an over-estimate past the
+      slack with a true count <= cap is a >~2-sigma event, and the
+      only cost of that miss is a lost pushdown, never a wrong answer
+      — an under-estimate falls through to the exact pass, whose
+      limit(cap+1) still decides correctly.
     """
     import json  # noqa: PLC0415
 
-    non_null = staged_delta.filter(F.col(key_col).isNotNull())
-    approx = non_null.agg(
-        F.approx_count_distinct(key_col).alias("c")
-    ).collect()[0]["c"]
-    if approx > cap * 1.1:
+    if approx_keys > cap * 1.1:
         keys, complete = [], False
     else:
+        non_null = staged_delta.filter(F.col(key_col).isNotNull())
         keys = _exact_key_set(non_null, key_col, cap)
         complete = len(keys) <= cap
     get_store_io().put_atomic(

@@ -9,13 +9,13 @@ floats rounded, timestamps as epoch BIGINT, arrays sorted+joined.
 
 from __future__ import annotations
 
-import math
 import os
 
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
+from ..sources.bucketing import split_count
 
 
 def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -218,7 +218,7 @@ def checkpointed_payload(
             os.environ.get("SPARK_GRAFT_CKPT_PART_BYTES", str(1 << 20))
         )
         nparts = ck.rdd.getNumPartitions()
-        ideal = max(1, math.ceil(nbytes / max(1, target)))
+        ideal = split_count(nbytes, target)
         if ideal < nparts:
             ck = ck.coalesce(ideal)
     return ck, metrics

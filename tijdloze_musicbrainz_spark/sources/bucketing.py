@@ -10,13 +10,17 @@ at READ time needs no shuffle at all — the 100 TB co-location lever.
 Bucket-count sizing at scale: pick buckets so one bucket of the
 larger table is ~128-256 MB compressed (e.g. 600 GB lineitem → ~4096
 buckets). Both join sides must share the bucket count (or one must
-be a multiple — Spark 3.1+ bucket coalescing).
+be a multiple — Spark 3.1+ bucket coalescing). :func:`split_count`
+is the rule, and :func:`split_bytes` the per-bucket target a store
+sized to its data uses (one bucket per scan split).
 """
 
 from __future__ import annotations
 
 import contextlib
+import math
 import os
+import re
 import socket
 import time
 from collections.abc import Sequence
@@ -389,6 +393,30 @@ def write_bucketed(
     if sort_cols:
         writer = writer.sortBy(*sort_cols)
     writer.saveAsTable(table)
+
+
+def split_count(nbytes: float, target_bytes: int) -> int:
+    """How many ~``target_bytes`` units hold ``nbytes``:
+    ``ceil(nbytes / target_bytes)``, at least one. The one sizing
+    rounding shared by bucket counts and the shared-payload
+    checkpoint's partition count (plans/util.checkpointed_payload)."""
+    return max(1, math.ceil(nbytes / max(1, target_bytes)))
+
+
+_BYTE_UNITS = {"": 0, "b": 0, "k": 10, "kb": 10, "m": 20, "mb": 20,
+               "g": 30, "gb": 30, "t": 40, "tb": 40, "p": 50, "pb": 50}
+
+
+def split_bytes(spark: SparkSession) -> int:
+    """The session's scan-split size
+    (``spark.sql.files.maxPartitionBytes``) in bytes. The conf reads
+    back as Spark's byte string (``134217728b``, ``128m``), so the
+    unit suffix is parsed here."""
+    text = spark.conf.get("spark.sql.files.maxPartitionBytes")
+    m = re.fullmatch(r"(\d+)\s*([a-z]*)", text.strip().lower())
+    if m is None or m.group(2) not in _BYTE_UNITS:
+        raise ValueError(f"unparseable maxPartitionBytes: {text!r}")
+    return int(m.group(1)) << _BYTE_UNITS[m.group(2)]
 
 
 def register_bucketed(

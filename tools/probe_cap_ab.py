@@ -9,10 +9,13 @@ groups, nothing more is skipped) depends on the STORE SHAPE, so the
 cap is a conf (``SPARK_GRAFT_PROBE_MAX_IN``) and this tool commits
 the decision curve next to it.
 
-Method — fixed-work A/B, identical scan target per point: build a
-bucketed band-key store from the real documents corpus at TWO shapes
-(the sf0.1 corpus, and the same corpus replicated 4x with the scale
-harness's salting so the store has 4x the rows/row-groups), then time
+Method — fixed-work A/B, identical scan target per point: build the
+band index's base run (plans/dedup_index._build_base_index — the
+bucketed band-key store the probe reads, with the bucket count sized
+to the data and read back from its snapshot) from the real documents
+corpus at TWO shapes (the sf0.1 corpus, and the same corpus
+replicated 4x with the scale harness's salting so the store has 4x
+the rows/row-groups), then time
 ``store.filter(band_key IN (k sampled stored keys)).count()`` for a
 ladder of k against the unfiltered ``count()``. Keys are sampled FROM
 the store so every list hits real row groups the way a real delta
@@ -20,7 +23,8 @@ does. Best-of-N wall times; one shape per process run is fine (the
 two shapes share the session).
 
 Writes PROBE_CAP_AB.json:
-  {"shapes": {"m1": {"rows": ..., "unfiltered_sec": ...,
+  {"shapes": {"m1": {"rows": ..., "num_buckets": ...,
+                     "unfiltered_sec": ...,
                      "in_k_sec": {"128": ..., ...}},
               "m4": {...}},
    "default_cap": <the shipped conf>}
@@ -37,40 +41,21 @@ import sys
 import time
 
 
-def _bands(spark, sf_dir: str):
-    from pyspark.sql import functions as F
-
-    from tijdloze_musicbrainz_spark.plans.dedup import words_col
-    from tijdloze_musicbrainz_spark.plans.dedup_index import _bands_of
-    from tijdloze_musicbrainz_spark.plans.util import t
-
-    docs = (
-        t(spark, sf_dir, "documents")
-        .filter(F.col("text").isNotNull())
-        .select("doc_id", words_col().alias("ws"))
-    )
-    return _bands_of(docs)
-
-
 def _measure_shape(spark, sf_dir: str, label: str, trials: int) -> dict:
     from pyspark.sql import functions as F
 
     from tijdloze_musicbrainz_spark.plans.dedup_index import (
-        DEDUP_INDEX_BUCKETS,
+        _build_base_index,
     )
-    from tijdloze_musicbrainz_spark.plans.etl import SINK_ROOT
-    from tijdloze_musicbrainz_spark.sources.bucketing import write_bucketed
+    from tijdloze_musicbrainz_spark.sources.commit_log import current_snapshot
 
-    table = f"probe_cap_ab_{label}"
-    write_bucketed(
-        _bands(spark, sf_dir),
-        table,
-        bucket_cols=["band_key"],
-        num_buckets=DEDUP_INDEX_BUCKETS,
-        sort_cols=["band_key"],
-        location=f"{SINK_ROOT}/{table}",
+    # the band index's own base build: the store, and its data-sized
+    # bucket count, are exactly what the probe reads at this shape
+    root, _tag, _base, _delta = _build_base_index(
+        spark, sf_dir, f"probe_cap_ab_{label}"
     )
-    store = spark.table(table)
+    snap = current_snapshot(root)
+    store = spark.table(snap["bands"][0])
     rows = store.count()
     # deterministic stored-key sample, largest ladder first
     ladder = [128, 256, 512, 1024, 2048, 3968]
@@ -89,6 +74,7 @@ def _measure_shape(spark, sf_dir: str, label: str, trials: int) -> dict:
 
     out = {
         "rows": rows,
+        "num_buckets": snap["num_buckets"],
         "unfiltered_sec": best_of(store),
         "in_k_sec": {},
     }

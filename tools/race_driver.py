@@ -119,13 +119,14 @@ def main() -> None:
             root = f.read().strip()
         tag = sf_tag(sf_dir)
         # catalog-per-session: attach the committed base run from the
-        # shared store before replaying the generation
+        # shared store before replaying the generation, with the bucket
+        # spec the committed snapshot records
         bk.register_bucketed(
             spark,
             f"{name}_bands_{tag}",
             "doc_id BIGINT, band_key BIGINT",
             ["band_key"],
-            di.DEDUP_INDEX_BUCKETS,
+            current_snapshot(root)["num_buckets"],
             ["band_key"],
             f"{root}/bands_g0",
         )
