@@ -26,6 +26,7 @@ from tijdloze_musicbrainz_spark.plans.cc_index import (
     _probe_pairs,
 )
 from tijdloze_musicbrainz_spark.plans.util import BCAST_MAX_BYTES
+from tijdloze_musicbrainz_spark.sources.commit_log import current_snapshot
 
 
 def _plan(df) -> str:
@@ -47,6 +48,7 @@ def test_probe_reads_stored_blocks_bucketed(spark, sf_dir):
         pay,
         F.col("doc_id") % CC_DELTA_MOD == 0,
         gen=1,
+        num_buckets=current_snapshot(paths["root"])["num_buckets"],
     )
     plan = _plan(_probe_pairs(spark, _block_runs(t_blocks, [1]), paths, gen=1))
     assert "Bucketed: true" in plan
@@ -246,3 +248,52 @@ def test_base_pairs_gate_falls_back_to_row_count_without_bytes(spark):
     assert hinted({"bytes": None, "n_rows": 3, "n_base_pay": 3})
     too_many = BCAST_MAX_BYTES // CC_PAY_BCAST_ROW_BYTES + 1
     assert not hinted({"bytes": None, "n_rows": too_many, "n_base_pay": too_many})
+
+
+def test_cc_job_budget_and_data_sized_buckets(spark):
+    """Job budget of the cluster lifecycle (base build, ingest, merge,
+    commit, label read) at sf0.01, counted with statusTracker job
+    groups, and the block index's bucket spec: the base run is ~450
+    rows x 64 B, so the data-sized block index is ONE bucket, committed
+    in the snapshot and carried by every block run."""
+    import os
+
+    from tijdloze_musicbrainz_spark.plans.lifecycle import index_root
+    from tijdloze_musicbrainz_spark.plans.util import t
+
+    sf = os.path.join(
+        os.path.dirname(os.path.abspath(__file__)),
+        "..", "perfbench", "data", "sf0.01",
+    )
+    # the catalog's one-time schema read belongs to the session, not
+    # to the lifecycle: take it before counting
+    t(spark, sf, "documents")
+    sc = spark.sparkContext
+
+    def jobs_of(group, fn):
+        sc.setJobGroup(group, "job-budget probe")
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    df, n_build = jobs_of(
+        "cc-inc-budget-build",
+        lambda: REGISTRY["dedup_cluster_incremental"].builder(spark, sf),
+    )
+    _, n_exec = jobs_of(
+        "cc-inc-budget-exec",
+        lambda: df.write.format("noop").mode("overwrite").save(),
+    )
+    assert n_build <= 68, n_build
+    assert n_exec <= 2, n_exec
+    snap = current_snapshot(index_root(sf, "cc_index", fresh=False))
+    assert snap["num_buckets"] == 1
+    assert len(snap["blocks"]) == 2
+    for run in snap["blocks"]:
+        spec = {
+            r["col_name"]: r["data_type"]
+            for r in spark.sql(f"DESCRIBE TABLE EXTENDED {run}").collect()
+        }
+        assert spec["Num Buckets"] == str(snap["num_buckets"]), (run, spec)

@@ -60,10 +60,11 @@ def test_chaos_three_generations_reader_loser_kill(
     # explicit, and not the data-sized 1: every generation must take
     # its bucket spec from the manifest
     num_buckets = 4
-    di._write_gen_bands(
-        di._bands_of(base), t_bands, f"{root}/bands_g0", num_buckets
+    di.write_run(
+        di.band_rows(base), t_bands, f"{root}/bands_g0", "band_key",
+        num_buckets,
     )
-    di._write_gen_shingles(di._shingle_sets(base), f"{root}/shingles/gen=0")
+    di.write_payload(di._shingle_sets(base), f"{root}/shingles/gen=0")
     n_base = base.count()
     commit_snapshot(
         root,
@@ -129,13 +130,13 @@ def test_chaos_three_generations_reader_loser_kill(
     assert current_snapshot_version(root) == 2
 
     # -- gen 3: kill mid-transaction, verify old snapshot, recover -----
-    real = di._write_gen_shingles
+    real = di.write_payload
 
     def crash_once(sh, path):
-        monkeypatch.setattr(di, "_write_gen_shingles", real)
+        monkeypatch.setattr(di, "write_payload", real)
         raise RuntimeError("injected gen-3 crash")
 
-    monkeypatch.setattr(di, "_write_gen_shingles", crash_once)
+    monkeypatch.setattr(di, "write_payload", crash_once)
     with pytest.raises(RuntimeError, match="injected gen-3 crash"):
         di._ingest_generation(spark, root, name, tag, batches[2], gen=3)
     assert check_invariant() == 2  # readers still on the gen-2 snapshot

@@ -186,7 +186,7 @@ def test_chaos_ann_three_generations_reader_loser_kill(
     append operator's — index content is ingest-batching-invariant."""
     base = pq._pq_vecs(spark, sf_dir)
     subs = pq._pq_subs(base)
-    root = pq._pq_index_root(sf_dir, "ivfpq_chaos")
+    root = index_root(sf_dir, "ivfpq_chaos")
     pq._pq_write_index(
         base, subs, pq._pq_seed_codebook(base, subs), pq._ivf_cents(base),
         root,
@@ -277,7 +277,7 @@ def test_concurrent_multi_tier_ingest_snapshot_isolation(spark, sf_dir):
 
     base = pq._pq_vecs(spark, sf_dir)
     subs = pq._pq_subs(base)
-    pq_root = pq._pq_index_root(sf_dir, "ivfpq_conc")
+    pq_root = index_root(sf_dir, "ivfpq_conc")
     pq._pq_write_index(
         base, subs, pq._pq_seed_codebook(base, subs), pq._ivf_cents(base),
         pq_root,

@@ -105,7 +105,7 @@ def test_mh_kill_mid_ingest_leaves_old_snapshot_then_recovery_converges(
     from tijdloze_musicbrainz_spark.plans import dedup_index as di
 
     name = "mh_crash"
-    real = di._write_gen_shingles
+    real = di.write_payload
     calls = {"n": 0}
 
     def flaky(sh, path):
@@ -114,7 +114,7 @@ def test_mh_kill_mid_ingest_leaves_old_snapshot_then_recovery_converges(
             raise RuntimeError("injected crash between store writes")
         real(sh, path)
 
-    monkeypatch.setattr(di, "_write_gen_shingles", flaky)
+    monkeypatch.setattr(di, "write_payload", flaky)
     with pytest.raises(RuntimeError, match="injected crash"):
         di._build_and_ingest(spark, sf_dir, name)
     monkeypatch.undo()
@@ -254,7 +254,7 @@ def test_ann_kill_mid_ingest_leaves_old_snapshot_then_recovery_converges(
 
     base = pq._pq_vecs(spark, sf_dir)
     subs = pq._pq_subs(base)
-    root = pq._pq_index_root(sf_dir, "ivfpq_crash")
+    root = index_root(sf_dir, "ivfpq_crash")
     pq._pq_write_index(
         base, subs, pq._pq_seed_codebook(base, subs), pq._ivf_cents(base), root
     )

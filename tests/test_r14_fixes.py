@@ -438,16 +438,16 @@ def test_mh_ingest_fenced_after_mid_transaction_takeover(
         "exclusive_append",
         lambda loc, owner="": exclusive_append(loc, owner=owner, lease_s=30.0),
     )
-    real_write = di._write_gen_shingles
+    real_write = di.write_payload
 
     def stall_and_lose(sh, path):
         real_write(sh, path)
-        monkeypatch.setattr(di, "_write_gen_shingles", real_write)
+        monkeypatch.setattr(di, "write_payload", real_write)
         fake_clock["t"] += 31.0  # A's lease expires mid-transaction
         with exclusive_append(root, owner="usurper", lease_s=600.0):
             pass  # takeover + clean release — A's payload is gone
 
-    monkeypatch.setattr(di, "_write_gen_shingles", stall_and_lose)
+    monkeypatch.setattr(di, "write_payload", stall_and_lose)
     with pytest.raises(FencedOut):
         di._ingest_generation(spark, root, name, tag, delta)
 
@@ -522,13 +522,14 @@ def test_vacuum_ann_tier_after_compaction(spark, sf_dir):
     must answer identically from the compacted snapshot."""
     from pyspark.sql import functions as F
 
+    from tijdloze_musicbrainz_spark.plans.lifecycle import index_root
     from tijdloze_musicbrainz_spark.plans.similarity import (
         pq_lifecycle as pq,
     )
 
     base = pq._pq_vecs(spark, sf_dir)
     subs = pq._pq_subs(base)
-    root = pq._pq_index_root(sf_dir, "ivfpq_vac")
+    root = index_root(sf_dir, "ivfpq_vac")
     pq._pq_write_index(
         base, subs, pq._pq_seed_codebook(base, subs), pq._ivf_cents(base),
         root,

@@ -19,7 +19,11 @@ Storage layout (the 100 TB story):
 - ``blocks``: (blk, doc_id), a BUCKETED table on blk
   (sources/bucketing.py) — the probe join co-locates against the
   stored side with NO shuffle of the index (same lever as the band
-  table in dedup_index.py).
+  table in dedup_index.py). The bucket count follows the band index's
+  rule — one bucket per scan split (``spark.sql.files.
+  maxPartitionBytes``) of the base run, n_base x 64 B — and is
+  committed in the snapshot manifest as ``num_buckets``, which every
+  generation run reads back.
 - ``shingles``: (doc_id, sgs) parquet — the verify payload, fetched
   by id only for blk-colliding candidate pairs.
 - ``labels``: (doc_id, cluster_id) parquet — every indexed document's
@@ -63,7 +67,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from ..sources.bucketing import exclusive_append, write_bucketed
+from ..sources.bucketing import exclusive_append, split_bytes, split_count
 from ..sources.commit_log import (
     commit_snapshot,
     current_snapshot,
@@ -80,10 +84,13 @@ from .dedup import (
 )
 from .lifecycle import (
     index_root,
-    pushdown_keys,
+    probe_frames,
+    probe_runs,
     read_delta_key_manifest,
     sf_tag,
-    write_delta_key_manifest,
+    stage_delta,
+    write_payload,
+    write_run,
 )
 from .registry import register
 from .util import checkpointed_payload, fits_broadcast, t
@@ -93,7 +100,13 @@ from .util import checkpointed_payload, fits_broadcast, t
 # two-batch variant splits the arrivals further by CC_BATCH_MOD.
 CC_DELTA_MOD = 10
 CC_BATCH_MOD = 20
-CC_INDEX_BUCKETS = 16
+# One block row is a long doc_id plus the 5-token key string (26.5
+# chars on average at sf0.01 and sf0.1), rounded up to 64 B: the base
+# run's size is n_base x 64 B, so sf0.01 and sf0.1 fit one 128 MB
+# bucket and a 600 GB block table gets ~4800.
+_BLOCK_ROW_BYTES = 64
+# The staged delta: the arriving batch's payload rows.
+_STAGED_PAY = "doc_id bigint, blk string, sgs array<string>"
 
 # Broadcast sizing for the base-vs-base blocked self-join's build side
 # (util.fits_broadcast, the one gate and budget). r16 (ADVICE): the
@@ -220,16 +233,13 @@ def _base_pairs(base_pay: DataFrame, pay_metrics: dict) -> DataFrame:
     )
 
 
-def _build_base(
-    spark: SparkSession, sf_dir: str, name: str
-) -> tuple[str, dict[str, str], DataFrame, DataFrame, int]:
-    """Build the base cluster store (bucketed blocks + shingle payload
-    + labels) over the non-arriving 90% and commit it as the index's
-    first snapshot. Returns (blocks_table, paths, docs_all_ids,
-    payload, n_base). ``n_base`` follows the shared accounting rule
-    (plans/lifecycle.py): counted from the DataFrame in hand at build
-    time, never by re-scanning the store — and since r13 it lives in
-    the snapshot manifest (the commit stats the rule always named)."""
+def _cluster_base(
+    spark: SparkSession, sf_dir: str, labels_dir: str
+) -> tuple[DataFrame, DataFrame, DataFrame, int]:
+    """The ONE corpus-linear clustering pass over the non-arriving 90%,
+    shared by the batch store and the streaming maintainer: writes the
+    base labels to ``labels_dir`` and returns (docs_all_ids, payload,
+    base_payload, n_base)."""
     docs_all = t(spark, sf_dir, "documents").select("doc_id")
     # Payload is computed ONCE: this pipeline issues ~40 separate
     # write/count actions per run, and without the checkpoint every
@@ -256,7 +266,29 @@ def _build_base(
         ],
     )
     base_pay = pay.filter(F.col("doc_id") % CC_DELTA_MOD != 0)
+    base_labels, _ = connected_components(
+        _base_pairs(base_pay, pay_m)
+        .select(F.col("doc_a").alias("u"), F.col("doc_b").alias("v"))
+    )
+    base_ids = docs_all.filter(F.col("doc_id") % CC_DELTA_MOD != 0)
+    # the labels write preserves base_ids 1:1 (left join on a unique
+    # key), so observing its row count IS the n_base accounting count
+    # — one job instead of two (r15 verdict item 3: batch the counts)
+    n_base_obs = Observation()
+    _labels_of(base_ids, base_labels).observe(
+        n_base_obs, F.count(F.lit(1)).alias("n")
+    ).write.parquet(labels_dir)
+    return docs_all, pay, base_pay, int(n_base_obs.get["n"] or 0)
 
+
+def _build_base(
+    spark: SparkSession, sf_dir: str, name: str
+) -> tuple[str, dict[str, str], DataFrame, DataFrame, int]:
+    """Build the base cluster store (bucketed blocks + shingle payload
+    + labels) over the non-arriving 90% and commit it as the index's
+    first snapshot. Returns (blocks_table, paths, docs_all_ids,
+    payload, n_base); ``n_base`` and the block index's data-sized
+    ``num_buckets`` live in the snapshot manifest."""
     tag = sf_tag(sf_dir)
     root = index_root(sf_dir, name)
     t_blocks = f"{name}_blocks_{tag}"
@@ -268,42 +300,25 @@ def _build_base(
         "remaps": f"{root}/remaps",
         "stage": f"{root}/stage",
     }
-
-    # -- build: the ONE corpus-linear clustering pass over the base ----
-    base_labels, _ = connected_components(
-        _base_pairs(base_pay, pay_m)
-        .select(F.col("doc_a").alias("u"), F.col("doc_b").alias("v"))
+    docs_all, pay, base_pay, n_base = _cluster_base(
+        spark, sf_dir, f"{paths['labels']}/gen=0"
     )
-    base_ids = docs_all.filter(F.col("doc_id") % CC_DELTA_MOD != 0)
-    # the labels write preserves base_ids 1:1 (left join on a unique
-    # key), so observing its row count IS the n_base accounting count
-    # — one job instead of two (r15 verdict item 3: batch the counts)
-    n_base_obs = Observation()
-    base_ids.join(
-        base_labels, base_ids.doc_id == base_labels.id, "left"
-    ).select(
-        "doc_id", F.coalesce("label", "doc_id").alias("cluster_id")
-    ).observe(
-        n_base_obs, F.count(F.lit(1)).alias("n")
-    ).write.parquet(f"{paths['labels']}/gen=0")
-    write_bucketed(
-        base_pay.select("blk", "doc_id"),
-        t_blocks,
-        bucket_cols=["blk"],
-        num_buckets=CC_INDEX_BUCKETS,
-        sort_cols=["blk"],
-        location=paths["blocks"],
+    # the band index's rule: one bucket per scan split of the base run
+    num_buckets = split_count(n_base * _BLOCK_ROW_BYTES, split_bytes(spark))
+    write_run(
+        base_pay.select("blk", "doc_id"), t_blocks, paths["blocks"], "blk",
+        num_buckets,
     )
-    base_pay.select("doc_id", "sgs").write.parquet(
-        f"{paths['shingles']}/gen=0"
+    write_payload(
+        base_pay.select("doc_id", "sgs"), f"{paths['shingles']}/gen=0"
     )
-    n_base = int(n_base_obs.get["n"] or 0)
     commit_snapshot(
         root,
         {
             "blocks": [t_blocks],
             "gens": [],
             "n_indexed": n_base,
+            "num_buckets": num_buckets,
             "key_stats": None,
         },
     )
@@ -323,24 +338,6 @@ def _shingle_dirs(paths: dict[str, str], gens: list[int]) -> list[str]:
     ]
 
 
-def _write_gen_blocks(staged: DataFrame, table: str, location: str) -> None:
-    """One generation's block run — deterministic path, drop-then-
-    write (idempotent on recovery replay). Module-level so the crash
-    test can fail the transaction between store writes."""
-    write_bucketed(
-        staged.select("blk", "doc_id"),
-        table,
-        bucket_cols=["blk"],
-        num_buckets=CC_INDEX_BUCKETS,
-        sort_cols=["blk"],
-        location=location,
-    )
-
-
-def _write_gen_shingles(staged: DataFrame, path: str) -> None:
-    staged.select("doc_id", "sgs").write.mode("overwrite").parquet(path)
-
-
 def _ingest_batch(
     spark: SparkSession,
     t_blocks: str,
@@ -349,87 +346,35 @@ def _ingest_batch(
     pay: DataFrame,
     batch_pred,
     gen: int,
+    num_buckets: int,
 ) -> int:
     """Stage the arriving batch's payload ONCE (both the generation's
     block run and the later probe read the staged files) and land the
     generation's stores at gen-unique paths NO READER RESOLVES YET —
     visibility comes only from the snapshot commit that
     :func:`_ingest_and_merge_generation` issues after the merge also
-    lands. Every write is a deterministic-path overwrite, so a
-    recovery replay converges. Returns the batch's doc count (the
-    O(delta) accounting term)."""
-    # the key sidecar's over-cap pre-check rides the staging write
-    keys_obs = Observation()
-    pay.filter(batch_pred).observe(
-        keys_obs, F.approx_count_distinct("blk").alias("keys")
-    ).write.mode("overwrite").parquet(f"{paths['stage']}/delta_{gen}")
-    batch_ids = docs_all.filter(batch_pred)
+    lands. ``num_buckets`` is the committed snapshot's bucket spec.
+    Every write is a deterministic-path overwrite, so a recovery
+    replay converges. Returns the batch's doc count (the O(delta)
+    accounting term)."""
+    staged = stage_delta(
+        spark, pay.filter(batch_pred), "blk",
+        f"{paths['stage']}/delta_{gen}", _STAGED_PAY,
+    )
     # the accounting count rides the staged-ids write (same rows) —
     # one job instead of two (r15 verdict item 3)
     n_batch_obs = Observation()
-    batch_ids.observe(n_batch_obs, F.count(F.lit(1)).alias("n")).write.mode(
-        "overwrite"
-    ).parquet(f"{paths['stage']}/delta_ids_{gen}")
-    staged = spark.read.schema(
-        "doc_id bigint, blk string, sgs array<string>"
-    ).parquet(f"{paths['stage']}/delta_{gen}")
-    # probe-pushdown sidecar: the batch's distinct block keys, so the
-    # later probe can push In(blk, ...) into the stored block scan
-    # without launching a job (plans/lifecycle.py design note)
-    write_delta_key_manifest(
-        staged, "blk", f"{paths['stage']}/delta_{gen}",
-        int(keys_obs.get["keys"] or 0),
+    docs_all.filter(batch_pred).observe(
+        n_batch_obs, F.count(F.lit(1)).alias("n")
+    ).write.mode("overwrite").parquet(f"{paths['stage']}/delta_ids_{gen}")
+    write_run(
+        staged.select("blk", "doc_id"), f"{t_blocks}_g{gen}",
+        f"{paths['root']}/blocks_g{gen}", "blk", num_buckets,
     )
-    _write_gen_blocks(
-        staged, f"{t_blocks}_g{gen}", f"{paths['root']}/blocks_g{gen}"
+    write_payload(
+        staged.select("doc_id", "sgs"), f"{paths['shingles']}/gen={gen}"
     )
-    _write_gen_shingles(staged, f"{paths['shingles']}/gen={gen}")
     return int(n_batch_obs.get["n"] or 0)
-
-
-def _candidate_pairs(probes: DataFrame, stored_blocks: DataFrame) -> DataFrame:
-    """Oriented candidate pairs from one store's blk equi-join (no
-    dedup here — callers union runs first, then distinct once)."""
-    return (
-        probes.join(stored_blocks, "blk")
-        .filter(F.col("probe_id") != F.col("doc_id"))
-        .select(
-            F.least("probe_id", "doc_id").alias("doc_a"),
-            F.greatest("probe_id", "doc_id").alias("doc_b"),
-        )
-    )
-
-
-def _verify_pairs(cand: DataFrame, stored_sh: DataFrame) -> DataFrame:
-    """Exact-Jaccard verification over (doc_id, sgs) shingle sets
-    fetched by id for candidate pairs only."""
-    sh_a = stored_sh.select(
-        F.col("doc_id").alias("doc_a"), F.col("sgs").alias("sgs_a")
-    )
-    sh_b = stored_sh.select(
-        F.col("doc_id").alias("doc_b"), F.col("sgs").alias("sgs_b")
-    )
-    return (
-        cand.join(sh_a, "doc_a")
-        .join(sh_b, "doc_b")
-        .filter(jaccard(F.col("sgs_a"), F.col("sgs_b")) >= 0.9)
-        .select("doc_a", "doc_b")
-    )
-
-
-def _verified_pairs(
-    probes: DataFrame, stored_blocks: DataFrame, stored_sh: DataFrame
-) -> DataFrame:
-    """Verified near-dup pairs with at least one probe endpoint, from
-    whatever store the caller reads: candidates = one equi-join of
-    probe (probe_id, blk) rows against the stored (blk, doc_id) index,
-    verification = exact Jaccard over (doc_id, sgs) shingle sets
-    fetched by id. Shared by the batch path (bucketed runs + merge
-    hint, via _probe_pairs) and the streaming path (ingest_batch
-    subtrees) so the merge semantics live once."""
-    return _verify_pairs(
-        _candidate_pairs(probes, stored_blocks).distinct(), stored_sh
-    )
 
 
 def _probe_pairs(
@@ -438,41 +383,32 @@ def _probe_pairs(
     paths: dict[str, str],
     gen: int,
 ) -> DataFrame:
-    """Batch-path probe: the staged delta blocks (signed once at
-    ingest) merge-join each bucketed block run in place — no shuffle
-    of the index; candidates union across runs (band-key equality
-    distributes over the run set), one distinct, one verify. Pure plan
-    construction (the bucketed-scan + sort-merge shape is pinned in
+    """The block tier's probe: generation ``gen``'s staged blocks
+    through the shared run-set probe (lifecycle.probe_runs) at Jaccard
+    >= 0.9 (the bucketed-scan + sort-merge shape is pinned in
     tests/test_cc_index.py)."""
-    runs = [blocks_runs] if isinstance(blocks_runs, str) else list(blocks_runs)
-    probes = (
-        spark.read.schema("doc_id bigint, blk string")
-        .parquet(f"{paths['stage']}/delta_{gen}")
-        .select(F.col("doc_id").alias("probe_id"), "blk")
+    return probe_runs(
+        spark, blocks_runs, "blk", f"{paths['stage']}/delta_{gen}",
+        _STAGED_PAY, _shingle_dirs(paths, list(range(1, gen + 1))), 0.9,
     )
-    stored_sh = spark.read.schema("doc_id bigint, sgs array<string>").parquet(
-        *_shingle_dirs(paths, list(range(1, gen + 1)))
-    )
-    # small-delta pushdown: the ingest-time key sidecar becomes a
-    # literal In(blk, ...) predicate on every stored run's scan —
-    # identical results (non-matching blocks cannot join a probe), row
-    # groups and bucket files outside the batch's key set skipped
-    # (see dedup_index._probe_index for the full story). COST-BOUNDED
-    # (r14): pushed only below the measured break-even key count —
-    # a near-cap In list made this probe ~9x slower than the full
-    # bucketed scan (plans/lifecycle.py PROBE_PUSHDOWN_MAX_IN).
-    batch_keys = pushdown_keys(f"{paths['stage']}/delta_{gen}", "blk")
 
-    def _run_cand(table: str) -> DataFrame:
-        stored = spark.table(table)
-        if batch_keys:
-            stored = stored.filter(F.col("blk").isin(batch_keys))
-        return _candidate_pairs(probes, stored.hint("merge"))
 
-    cand = _run_cand(runs[0])
-    for run in runs[1:]:
-        cand = cand.unionByName(_run_cand(run))
-    return _verify_pairs(cand.distinct(), stored_sh)
+def _fold_remaps(
+    spark: SparkSession, labels: DataFrame, remaps: str, gens: list[int]
+) -> DataFrame:
+    """Fold (doc_id, cluster_id) labels through the remap generations
+    IN ORDER (each generation's domain is the previous generation's
+    resolved labels) — one broadcast-sized join per generation."""
+    for g in gens:
+        rm = spark.read.schema("old_label bigint, new_label bigint").parquet(
+            f"{remaps}/gen={g}"
+        )
+        labels = labels.join(
+            F.broadcast(rm), labels.cluster_id == rm.old_label, "left"
+        ).select(
+            "doc_id", F.coalesce("new_label", "cluster_id").alias("cluster_id")
+        )
+    return labels
 
 
 def _resolve_labels(
@@ -498,16 +434,7 @@ def _resolve_labels(
     cur = spark.read.schema("doc_id bigint, cluster_id bigint").parquet(
         *label_dirs
     )
-    for g in gens:
-        rm = spark.read.schema("old_label bigint, new_label bigint").parquet(
-            f"{paths['remaps']}/gen={g}"
-        )
-        cur = cur.join(
-            F.broadcast(rm), cur.cluster_id == rm.old_label, "left"
-        ).select(
-            "doc_id", F.coalesce("new_label", "cluster_id").alias("cluster_id")
-        )
-    return cur
+    return _fold_remaps(spark, cur, paths["remaps"], gens)
 
 
 def _merge_generation(
@@ -541,14 +468,13 @@ def _merge_generation(
     # dependency local and regression-proof (r11 ADVICE).
     merged = _contract_and_merge(new_pairs, current).localCheckpoint()
 
-    batch_ids = spark.read.schema("doc_id bigint").parquet(
-        f"{paths['stage']}/delta_ids_{gen}"
-    )
-    batch_ids.join(merged, batch_ids.doc_id == merged.id, "left").select(
-        "doc_id", F.coalesce("label", "doc_id").alias("cluster_id")
-    ).write.mode("overwrite").parquet(f"{paths['labels']}/gen={gen}")
-    _journal_moves(merged, batch_ids).write.mode("overwrite").parquet(
-        f"{paths['remaps']}/gen={gen}"
+    _land_merge(
+        merged,
+        spark.read.schema("doc_id bigint").parquet(
+            f"{paths['stage']}/delta_ids_{gen}"
+        ),
+        f"{paths['labels']}/gen={gen}",
+        f"{paths['remaps']}/gen={gen}",
     )
 
 
@@ -579,7 +505,8 @@ def _ingest_and_merge_generation(
         snap = current_snapshot(root)
         gens_done = snap["gens"]
         n_batch = _ingest_batch(
-            spark, t_blocks, paths, docs_all, pay, batch_pred, gen
+            spark, t_blocks, paths, docs_all, pay, batch_pred, gen,
+            snap["num_buckets"],
         )
         # heartbeat at the phase boundary (ingest jobs done, merge
         # jobs ahead) — the renewal is a conditional swap, so a
@@ -592,6 +519,7 @@ def _ingest_and_merge_generation(
                 "blocks": _block_runs(t_blocks, [*gens_done, gen]),
                 "gens": [*gens_done, gen],
                 "n_indexed": snap["n_indexed"] + n_batch,
+                "num_buckets": snap["num_buckets"],
                 "key_stats": {
                     "blk": read_delta_key_manifest(
                         f"{paths['stage']}/delta_{gen}", "blk"
@@ -627,6 +555,26 @@ def _contract_and_merge(
     )
     merged, _ = connected_components(contracted)
     return merged
+
+
+def _labels_of(ids: DataFrame, merged: DataFrame) -> DataFrame:
+    """(doc_id, cluster_id) for ``ids``: the merged component label, or
+    the doc's own id when no pair touched it."""
+    return ids.join(merged, ids.doc_id == merged.id, "left").select(
+        "doc_id", F.coalesce("label", "doc_id").alias("cluster_id")
+    )
+
+
+def _land_merge(
+    merged: DataFrame, batch_ids: DataFrame, labels_dir: str, remaps_dir: str
+) -> None:
+    """Write one merged generation: the batch's labels and the remap
+    journal of the stored labels it moved. Both are deterministic-path
+    overwrites, so a replayed generation converges."""
+    _labels_of(batch_ids, merged).write.mode("overwrite").parquet(labels_dir)
+    _journal_moves(merged, batch_ids).write.mode("overwrite").parquet(
+        remaps_dir
+    )
 
 
 def _journal_moves(merged: DataFrame, batch_ids: DataFrame) -> DataFrame:
@@ -825,50 +773,20 @@ def streaming_cluster_ingest_restart(
     )
 
     root = index_root(sf_dir, "cc_stream")
-    docs_all = t(spark, sf_dir, "documents").select("doc_id")
-    # Payload computed ONCE (sized checkpoint) — same rationale as
-    # _build_base: every micro-batch action re-ran the tokenize+
-    # shingle subtree single-task without it.
-    docs = (
-        t(spark, sf_dir, "documents")
-        .filter(F.col("text").isNotNull())
-        .select("doc_id", words_col().alias("ws"))
-    )
-    pay, pay_m = checkpointed_payload(
-        _payload(docs),
-        [
-            F.sum(
-                (F.col("doc_id") % CC_DELTA_MOD != 0).cast("long")
-            ).alias("n_base_pay")
-        ],
-    )
-
     # -- base build, under the same ingest_batch=<id> subtree layout
     # as the streamed batches (one consistent partition scheme; the
     # streaming variant trades the batch operator's bucketed blocks
     # for per-batch subtrees because idempotent replay needs a
     # deterministic OVERWRITE unit, which a bucketed append is not).
-    base_pay = pay.filter(F.col("doc_id") % CC_DELTA_MOD != 0)
-    base_labels, _ = connected_components(
-        _base_pairs(base_pay, pay_m)
-        .select(F.col("doc_a").alias("u"), F.col("doc_b").alias("v"))
+    docs_all, pay, base_pay, n_base = _cluster_base(
+        spark, sf_dir, f"{root}/labels/ingest_batch=base"
     )
-    base_ids = docs_all.filter(F.col("doc_id") % CC_DELTA_MOD != 0)
-    n_base_obs = Observation()
-    base_ids.join(
-        base_labels, base_ids.doc_id == base_labels.id, "left"
-    ).select(
-        "doc_id", F.coalesce("label", "doc_id").alias("cluster_id")
-    ).observe(
-        n_base_obs, F.count(F.lit(1)).alias("n")
-    ).write.parquet(f"{root}/labels/ingest_batch=base")
     base_pay.select("blk", "doc_id").write.parquet(
         f"{root}/blocks/ingest_batch=base"
     )
-    base_pay.select("doc_id", "sgs").write.parquet(
-        f"{root}/shingles/ingest_batch=base"
+    write_payload(
+        base_pay.select("doc_id", "sgs"), f"{root}/shingles/ingest_batch=base"
     )
-    n_base = int(n_base_obs.get["n"] or 0)
 
     # -- stage the arrivals as 3 files -> 3 micro-batches. The staged
     # rows are the SIGNED payload (blk + shingles computed once here);
@@ -916,17 +834,7 @@ def streaming_cluster_ingest_restart(
             .filter(F.col("ingest_batch").isin(allowed))
             .select("doc_id", "cluster_id")
         )
-        for g in gens:
-            rm = spark.read.schema(
-                "old_label bigint, new_label bigint"
-            ).parquet(f"{root}/remaps/gen={g}")
-            cur = cur.join(
-                F.broadcast(rm), cur.cluster_id == rm.old_label, "left"
-            ).select(
-                "doc_id",
-                F.coalesce("new_label", "cluster_id").alias("cluster_id"),
-            )
-        return cur
+        return _fold_remaps(spark, cur, f"{root}/remaps", gens)
 
     def ingest(b: DataFrame, bid: int) -> None:
         # Idempotent generation merge: every write overwrites this
@@ -938,32 +846,29 @@ def streaming_cluster_ingest_restart(
             signed.select("blk", "doc_id").write.mode("overwrite").parquet(
                 f"{root}/blocks/ingest_batch=b{bid}"
             )
-            signed.select("doc_id", "sgs").write.mode("overwrite").parquet(
-                f"{root}/shingles/ingest_batch=b{bid}"
+            write_payload(
+                signed.select("doc_id", "sgs"),
+                f"{root}/shingles/ingest_batch=b{bid}",
             )
-            # Same merge semantics as the batch path — shared helpers,
-            # only the store IO differs (subtree reads vs bucketed
-            # table; subtree overwrite vs append).
-            new_pairs = _verified_pairs(
+            # Same probe and merge semantics as the batch path —
+            # shared helpers, only the store IO differs (subtree reads
+            # vs bucketed runs; subtree overwrite vs append).
+            new_pairs = probe_frames(
                 signed.select(F.col("doc_id").alias("probe_id"), "blk"),
-                spark.read.parquet(f"{root}/blocks").select("blk", "doc_id"),
+                [spark.read.parquet(f"{root}/blocks").select("blk", "doc_id")],
+                "blk",
                 spark.read.parquet(f"{root}/shingles").select(
                     "doc_id", "sgs"
                 ),
+                0.9,
             )
-            merged = _contract_and_merge(
-                new_pairs, _labels_through(list(range(bid)))
-            )
-            batch_ids = b.select("doc_id")
-            batch_ids.join(
-                merged, batch_ids.doc_id == merged.id, "left"
-            ).select(
-                "doc_id", F.coalesce("label", "doc_id").alias("cluster_id")
-            ).write.mode("overwrite").parquet(
-                f"{root}/labels/ingest_batch=b{bid}"
-            )
-            _journal_moves(merged, batch_ids).write.mode("overwrite").parquet(
-                f"{root}/remaps/gen={bid}"
+            _land_merge(
+                _contract_and_merge(
+                    new_pairs, _labels_through(list(range(bid)))
+                ),
+                b.select("doc_id"),
+                f"{root}/labels/ingest_batch=b{bid}",
+                f"{root}/remaps/gen={bid}",
             )
 
     schema = StructType(

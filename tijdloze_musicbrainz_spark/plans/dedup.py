@@ -131,8 +131,52 @@ def band_key_cols() -> list:
     ]
 
 
+def band_rows(docs: DataFrame) -> DataFrame:
+    """(doc_id, band_key), 16 rows per doc, from (doc_id, ws) token
+    rows: (doc, shingle) rows -> 64 permutation-mins in ONE codegen'd
+    hash aggregate (map-side partial min), then 16 band keys. Both
+    explodes take their array expression INLINE: exploding a NAMED
+    array column lets InferFiltersFromGenerate plant a size(col) > 0
+    predicate that project-collapse expands back into the full
+    interpreted shingle transform inside the Filter — the shingle
+    build then runs twice per row (the text_contamination_overlap
+    lesson, r4c; pinned by tests/test_plans.py::
+    test_no_duplicated_lambda_in_filter)."""
+    exploded_sh = docs.select(
+        "doc_id", F.explode(shingles_col(F.col("ws"))).alias("shingle")
+    )
+    sig = exploded_sh.groupBy("doc_id").agg(*minhash_agg_exprs())
+    return sig.select(
+        "doc_id", F.explode(F.array(*band_key_cols())).alias("band_key")
+    )
+
+
 def jaccard(a, b) -> object:
     return F.size(F.array_intersect(a, b)) / F.size(F.array_union(a, b))
+
+
+def verify_pairs(
+    cand: DataFrame, sh: DataFrame, threshold: float, *carry: Column
+) -> DataFrame:
+    """Exact-Jaccard verification of (doc_a, doc_b) candidate pairs over
+    (doc_id, sgs) shingle sets fetched by id: pairs at or above
+    ``threshold`` as (doc_a, doc_b, jaccard), ``carry`` columns riding
+    the output projection.
+
+    Two PLAIN shuffled equi-joins (cand ⋈ sh on doc_a, then ⋈ sh on
+    doc_b), no broadcast hint: the intermediate cand⋈shingles relation
+    grows O(n·dup_rate) WITH full shingle payloads — at 100 TB a forced
+    broadcast of it blows the driver/executor broadcast limit and kills
+    the job, while these two shuffles are linear in |cand| + |sh| and
+    AQE may still pick a broadcast at runtime when the actual size is
+    genuinely small."""
+    sh_a = sh.select(F.col("doc_id").alias("doc_a"), F.col("sgs").alias("sgs_a"))
+    sh_b = sh.select(F.col("doc_id").alias("doc_b"), F.col("sgs").alias("sgs_b"))
+    verified = cand.join(sh_a, "doc_a").join(sh_b, "doc_b")
+    jac = jaccard(F.col("sgs_a"), F.col("sgs_b"))
+    return verified.filter(jac >= threshold).select(
+        "doc_a", "doc_b", F.round(jac, 4).alias("jaccard"), *carry
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -482,24 +526,8 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", words_col().alias("ws"))
     )
     sh = docs.select("doc_id", shingles_col(F.col("ws")).alias("sgs"))
-
-    # (doc, shingle) rows -> 64 permutation-mins in ONE codegen'd hash
-    # aggregate (map-side partial min), then 16 band keys. Both
-    # explodes take their array expression INLINE: exploding a NAMED
-    # array column lets InferFiltersFromGenerate plant a size(col) > 0
-    # predicate that project-collapse expands back into the full
-    # interpreted shingle transform inside the Filter — the shingle
-    # build then runs twice per row in BOTH self-join branches
-    # (the text_contamination_overlap lesson, r4c; lint-pinned).
-    exploded_sh = docs.select(
-        "doc_id", F.explode(shingles_col(F.col("ws"))).alias("shingle")
-    )
-    sig = exploded_sh.groupBy("doc_id").agg(*minhash_agg_exprs())
-
     # (band_key, doc) — 16 rows per doc, shuffled once on band_key.
-    exploded = sig.select(
-        "doc_id", F.explode(F.array(*band_key_cols())).alias("band_key")
-    )
+    exploded = band_rows(docs)
     a = exploded.alias("a")
     b = exploded.alias("b")
     cand = (
@@ -515,21 +543,7 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         # same pair can collide in several bands — dedupe before verify
         .distinct()
     )
-    # Verify bucket candidates with exact Jaccard: join the candidate
-    # pairs back to the shingle arrays with two PLAIN shuffled equi-joins
-    # (cand ⋈ sh on doc_a, then ⋈ sh on doc_b). No broadcast hint: the
-    # intermediate cand⋈shingles relation grows O(n·dup_rate) WITH full
-    # shingle payloads — at 100 TB a forced broadcast of it blows the
-    # driver/executor broadcast limit and kills the job, while these two
-    # shuffles are linear in |cand| + |sh| and AQE may still pick a
-    # broadcast at runtime when the actual size is genuinely small.
-    sh_a = sh.select(F.col("doc_id").alias("doc_a"), F.col("sgs").alias("sgs_a"))
-    sh_b = sh.select(F.col("doc_id").alias("doc_b"), F.col("sgs").alias("sgs_b"))
-    verified = cand.join(sh_a, "doc_a").join(sh_b, "doc_b")
-    jac = jaccard(F.col("sgs_a"), F.col("sgs_b"))
-    return verified.filter(jac >= 0.8).select(
-        "doc_a", "doc_b", F.round(jac, 4).alias("jaccard")
-    )
+    return verify_pairs(cand, sh, 0.8)
 
 
 # SimHash bit family: bit k of a token's 64-bit signature is

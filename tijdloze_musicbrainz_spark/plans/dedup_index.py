@@ -34,35 +34,40 @@ dying mid-transaction leaves readers on the old complete snapshot
 
 from __future__ import annotations
 
+import json
+import os
+import subprocess
+
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources.bucketing import (
     exclusive_append,
+    lock_payload,
     split_bytes,
     split_count,
-    write_bucketed,
 )
 from ..sources.commit_log import (
     commit_snapshot,
     current_snapshot,
     vacuum_unreferenced,
 )
+from ..sources.store_io import get_store_io
 from .lifecycle import (
     compact_bucketed,
     index_root,
-    pushdown_keys,
+    probe_runs,
     read_delta_key_manifest,
     sf_tag,
-    write_delta_key_manifest,
+    stage_delta,
+    write_payload,
+    write_run,
 )
 from .dedup import (
     JACCARD_PREFIX_CTES,
     JACCARD_VERIFY_SQL,
     N_BANDS,
-    band_key_cols,
-    jaccard,
-    minhash_agg_exprs,
+    band_rows,
     shingles_col,
     words_col,
 )
@@ -83,6 +88,8 @@ DEDUP_DELTA_MOD = 10
 # n_base x N_BANDS x 16 B, so sf0.01 and sf0.1 fit one 128 MB bucket
 # and a 600 GB band table gets ~4800.
 _BAND_ROW_BYTES = 16
+# The staged delta: the arriving batch's signature, one row per band.
+_STAGED_BANDS = "doc_id bigint, band_key bigint"
 
 # The arriving-endpoint-restricted exact pair oracle, stated with the
 # shared prefix-filter CTEs (plans/dedup.py) instead of the exhaustive
@@ -90,8 +97,7 @@ _BAND_ROW_BYTES = 16
 # lands in the candidate CTE, a superset-preserving cut), ~185 s ->
 # seconds at sf0.1 (r12; the skip-list burn-down's trick applied to
 # the lifecycle oracles too).
-_MH_INC_ORACLE = f"""
-WITH w AS (
+_ARRIVING_CANDIDATES = f"""w AS (
   SELECT doc_id, string_split(text, ' ') AS ws FROM documents
   WHERE text IS NOT NULL
 ),
@@ -101,7 +107,9 @@ ppcand AS (
   FROM pppref a JOIN pppref b ON a.s = b.s AND a.doc_id < b.doc_id
   WHERE a.doc_id % {DEDUP_DELTA_MOD} = 0 OR b.doc_id % {DEDUP_DELTA_MOD} = 0
   GROUP BY 1, 2
-),
+)"""
+_MH_INC_ORACLE = f"""
+WITH {_ARRIVING_CANDIDATES},
 pairs AS ({JACCARD_VERIFY_SQL}
 )
 SELECT doc_a, doc_b, jaccard,
@@ -110,58 +118,8 @@ FROM pairs
 """
 
 
-def _bands_of(docs: DataFrame) -> DataFrame:
-    """(band_key, doc_id): signature aggregate + 16 band keys — the
-    same codegen'd minhash pipeline as dedup_minhash_lsh."""
-    exploded_sh = docs.select(
-        "doc_id", F.explode(shingles_col(F.col("ws"))).alias("shingle")
-    )
-    sig = exploded_sh.groupBy("doc_id").agg(*minhash_agg_exprs())
-    return sig.select(
-        "doc_id", F.explode(F.array(*band_key_cols())).alias("band_key")
-    )
-
-
 def _shingle_sets(docs: DataFrame) -> DataFrame:
     return docs.select("doc_id", shingles_col(F.col("ws")).alias("sgs"))
-
-
-def _write_gen_bands(
-    staged: DataFrame, table: str, location: str, num_buckets: int
-) -> None:
-    """One generation's band run: an immutable bucketed table with the
-    SAME bucket spec as every other run — ``num_buckets`` comes from
-    the snapshot manifest (an LSM-style level — probes read each run
-    bucket-aligned; compaction folds runs back to one).
-    Deterministic path + drop-then-write = idempotent on recovery
-    replay. Module-level so the crash test can fail the transaction
-    between store writes."""
-    write_bucketed(
-        staged,
-        table,
-        bucket_cols=["band_key"],
-        num_buckets=num_buckets,
-        sort_cols=["band_key"],
-        location=location,
-    )
-
-
-def _stage_delta_bands(delta: DataFrame, stage: str) -> int:
-    """Sign the arriving batch once into the staged probe files and
-    return its approximate distinct band-key count, observed on that
-    write — the key sidecar's over-cap pre-check launches no job."""
-    keys_obs = Observation()
-    _bands_of(delta).observe(
-        keys_obs, F.approx_count_distinct("band_key").alias("keys")
-    ).write.mode("overwrite").parquet(stage)
-    return int(keys_obs.get["keys"] or 0)
-
-
-def _write_gen_shingles(sh: DataFrame, path: str) -> None:
-    """One generation's verify payload at its gen-unique dir —
-    overwrite mode so a recovery replay converges. Module-level for
-    the same crash-injection reason as _write_gen_bands."""
-    sh.write.mode("overwrite").parquet(path)
 
 
 def _ingest_generation(
@@ -189,20 +147,15 @@ def _ingest_generation(
     stage = f"{root}/stage/delta_bands" if gen == 1 else (
         f"{root}/stage/delta_bands_g{gen}"
     )
-    approx_keys = _stage_delta_bands(delta, stage)
-    # record the delta's distinct band keys (capped) as the probe's
-    # pushdown sidecar — bounded work here at ingest so the probe
-    # itself can push an In(band_key, ...) filter into the stored scan
-    # without launching any job (plans/lifecycle.py design note)
-    staged = spark.read.schema("doc_id bigint, band_key bigint").parquet(
-        stage
+    staged = stage_delta(
+        spark, band_rows(delta), "band_key", stage, _STAGED_BANDS
     )
-    write_delta_key_manifest(staged, "band_key", stage, approx_keys)
     with exclusive_append(root, owner=name) as lease:
         snap = current_snapshot(root)
         t_gen = f"{name}_bands_{tag}_g{gen}"
-        _write_gen_bands(
-            staged, t_gen, f"{root}/bands_g{gen}", snap["num_buckets"]
+        write_run(
+            staged, t_gen, f"{root}/bands_g{gen}", "band_key",
+            snap["num_buckets"],
         )
         # heartbeat between store writes: each phase runs Spark jobs
         # of data-dependent length, so the lease is renewed at phase
@@ -213,7 +166,7 @@ def _ingest_generation(
         # one shingle row per delta doc, so the accounting count rides
         # the shingle write as an observation (r15 verdict item 3)
         n_delta_obs = Observation()
-        _write_gen_shingles(
+        write_payload(
             _shingle_sets(delta).observe(
                 n_delta_obs, F.count(F.lit(1)).alias("n")
             ),
@@ -320,10 +273,11 @@ def _build_base_index(
     num_buckets = split_count(
         n_base * N_BANDS * _BAND_ROW_BYTES, split_bytes(spark)
     )
-    _write_gen_bands(
-        _bands_of(base), t_bands, f"{root}/bands_g0", num_buckets
+    write_run(
+        band_rows(base), t_bands, f"{root}/bands_g0", "band_key",
+        num_buckets,
     )
-    _write_gen_shingles(_shingle_sets(base), f"{root}/shingles/gen=0")
+    write_payload(_shingle_sets(base), f"{root}/shingles/gen=0")
     commit_snapshot(
         root,
         {
@@ -344,93 +298,72 @@ def _probe_index(
     delta_bands_path: str,
     n_indexed: int,
 ) -> DataFrame:
-    """Pure-lazy probe: builds the candidate/verify DataFrame without
-    launching a single Spark job (pinned by
-    tests/test_dedup_index.py::test_probe_is_lazy_and_scans_index_once)
-    and with exactly ONE scan of EACH stored band run in the plan.
-
-    ``t_bands`` is the snapshot's band-run list (an LSM-style level
-    set: the base table plus one immutable bucketed table per ingested
-    generation, folded back to one by compaction) — a probe joins each
-    run bucket-aligned and unions the CANDIDATES, which is exactly the
-    candidate set a single merged table would produce (band-key
-    equality distributes over the union of runs). A plain str is the
-    single-run case."""
-    # -- probe: arrivals vs the stored index ----------------------------
-    # Each stored run is bucketed on band_key, so these equi-joins read
-    # the index in place; only the O(delta) probe side (the staged
-    # signature files, signed once at ingest) moves. least/greatest
-    # orientation + distinct collapses multi-band collisions and the
-    # (delta x delta) pair seen from both sides; the snapshot INCLUDES
-    # the ingested generation's run, so delta-vs-delta pairs in the
-    # output prove the ingest landed in the snapshot being queried.
-    band_runs = [t_bands] if isinstance(t_bands, str) else list(t_bands)
-    # small-delta row-group skipping: the ingest-time key sidecar
-    # (read here with stdlib json — still zero Spark jobs) becomes a
-    # literal In(band_key, ...) predicate pushed into every stored
-    # run's scan. Rows whose band_key is not in the delta's key set
-    # cannot join, so results are identical; what changes is IO —
-    # parquet skips row groups whose stats/dictionary miss every delta
-    # key and Spark prunes non-matching bucket files
-    # (SelectedBucketsCount), instead of reading every bucket
-    # end-to-end
-    # (tests/test_dedup_index.py::test_small_delta_probe_skips_row_groups).
-    # COST-BOUNDED (r14): pushed only below the measured break-even
-    # key count — near-cap In lists cost more in optimizer + per-row-
-    # group evaluation than they prune (plans/lifecycle.py
-    # PROBE_PUSHDOWN_MAX_IN; the diagnosed r13 label-compact spike)
-    delta_keys = pushdown_keys(delta_bands_path, "band_key")
-    # explicit schemas: a schema-inference footer read is a (small)
-    # Spark job, and the probe path is pinned to launch NONE
-    probes = (
-        spark.read.schema("doc_id bigint, band_key bigint")
-        .parquet(delta_bands_path)
-        .select(F.col("doc_id").alias("probe_id"), "band_key")
+    """The band tier's probe: the shared run-set probe
+    (lifecycle.probe_runs) on band_key at Jaccard >= 0.8. The snapshot
+    INCLUDES the ingested generation's run, so delta-vs-delta pairs in
+    the output prove the ingest landed in the snapshot being queried.
+    ``n_indexed`` is the incrementally-maintained doc count (build +
+    append, see _build_and_ingest) — NOT a scan of the index."""
+    return probe_runs(
+        spark, t_bands, "band_key", delta_bands_path, _STAGED_BANDS,
+        shingle_path, 0.8, F.lit(n_indexed).cast("long").alias("n_indexed"),
     )
 
-    def _cand_of(run: str) -> DataFrame:
-        stored = spark.table(run)
-        if delta_keys:
-            stored = stored.filter(F.col("band_key").isin(delta_keys))
-        return probes.join(stored.hint("merge"), "band_key").select(
-            "probe_id", "doc_id"
-        )
 
-    all_runs = _cand_of(band_runs[0])
-    for run in band_runs[1:]:
-        all_runs = all_runs.unionByName(_cand_of(run))
-    cand = (
-        all_runs.filter(F.col("probe_id") != F.col("doc_id"))
-        .select(
-            F.least("probe_id", "doc_id").alias("doc_a"),
-            F.greatest("probe_id", "doc_id").alias("doc_b"),
-        )
-        .distinct()
+def _probe_committed(spark: SparkSession, root: str, stage: str) -> DataFrame:
+    """The band probe over the COMMITTED snapshot's run set, payloads
+    and accounting — the result provably consumes only published
+    state."""
+    snap = current_snapshot(root)
+    return _probe_index(
+        spark, snap["bands"], snap["shingle_dirs"], stage, snap["n_indexed"]
     )
 
-    # -- verify: exact Jaccard over shingle sets fetched by id ---------
-    sh_dirs = (
-        [shingle_path] if isinstance(shingle_path, str) else list(shingle_path)
-    )
-    stored_sh = spark.read.schema("doc_id bigint, sgs array<string>").parquet(
-        *sh_dirs
-    )
-    sh_a = stored_sh.select(
-        F.col("doc_id").alias("doc_a"), F.col("sgs").alias("sgs_a")
-    )
-    sh_b = stored_sh.select(
-        F.col("doc_id").alias("doc_b"), F.col("sgs").alias("sgs_b")
-    )
-    verified = cand.join(sh_a, "doc_a").join(sh_b, "doc_b")
-    jac = jaccard(F.col("sgs_a"), F.col("sgs_b"))
 
-    # bounded accounting: the incrementally-maintained doc count
-    # (build + append, see _build_and_ingest) — NOT a scan of the index
-    return verified.filter(jac >= 0.8).select(
-        "doc_a",
-        "doc_b",
-        F.round(jac, 4).alias("jaccard"),
-        F.lit(n_indexed).cast("long").alias("n_indexed"),
+def _compact_and_commit(
+    spark: SparkSession, root: str, name: str, tag: str, lease
+) -> None:
+    """Fold the committed snapshot's band runs into ONE bucketed table
+    with one file per bucket and publish it as a new snapshot. The
+    compactor is a WRITER mutating committed state, so the caller holds
+    the tier's lease (r13 ADVICE: compaction paths used to call
+    commit_snapshot lockless, so nothing guarded the reclaim branch
+    against a live concurrent committer). Write-then-publish: the
+    compacted run is fully written, then ONE snapshot commit
+    (conditional-put manifest + atomic pointer flip) replaces the
+    whole run set — a probe concurrent with this compaction resolves
+    either the multi-run or the compacted COMPLETE snapshot, never a
+    half-written one (r11 verdict item 3; race proof in
+    tests/test_lifecycle_swap.py)."""
+    prev = current_snapshot(root)
+    compacted = f"{name}_bands_{tag}_c"
+    compact_bucketed(
+        spark,
+        prev["bands"],
+        compacted,
+        bucket_col="band_key",
+        num_buckets=prev["num_buckets"],
+        location=f"{root}/bands_c",
+    )
+    commit_snapshot(root, {**prev, "bands": [compacted]}, lease=lease)
+
+
+def _abandon_writer(root: str, owner: str, version: int, fence: int) -> None:
+    """A dead writer's debris: its orphan manifest at ``version`` (one
+    past the pointer — written, never published) and its lease,
+    byte-faithful (r14 lease format — EXPIRED, from a pid that no
+    longer exists, so the next writer exercises both takeover clauses:
+    expiry for the multi-host case, pid-death as the same-host fast
+    path)."""
+    io = get_store_io()
+    io.put_if_absent(
+        f"{root}/_snapshots/v{version}.json", json.dumps({"orphan": owner})
+    )
+    dead = subprocess.Popen(["true"])
+    dead.wait()
+    io.put_atomic(
+        os.path.join(root, "_APPEND_LOCK"),
+        lock_payload(dead.pid, owner, fence=fence, expires_at=0.0),
     )
 
 
@@ -505,40 +438,11 @@ def dedup_minhash_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def dedup_minhash_index_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     name = "mh_compact"
-    band_runs, shingle_dirs, delta_path, n_indexed = _build_and_ingest(
-        spark, sf_dir, name
-    )
+    _runs, _sh, delta_path, _n = _build_and_ingest(spark, sf_dir, name)
     root = index_root(sf_dir, name, fresh=False)
-    compacted = f"{name}_bands_{sf_tag(sf_dir)}_c"
-    # the compactor is a WRITER mutating committed state, so it runs
-    # under the same lease as the ingests (r13 ADVICE: compaction
-    # paths used to call commit_snapshot lockless, so nothing guarded
-    # the reclaim branch against a live concurrent committer)
     with exclusive_append(root, owner=name) as lease:
-        prev = current_snapshot(root)
-        compact_bucketed(
-            spark,
-            band_runs,
-            compacted,
-            bucket_col="band_key",
-            num_buckets=prev["num_buckets"],
-            location=f"{root}/bands_c",
-        )
-        # write-then-publish: the compacted run is fully written, then
-        # ONE snapshot commit (conditional-put manifest + atomic
-        # pointer flip) replaces the whole run set — a probe concurrent
-        # with this compaction resolves either the multi-run or the
-        # compacted COMPLETE snapshot, never a half-written one (r11
-        # verdict item 3; race proof in tests/test_lifecycle_swap.py)
-        commit_snapshot(root, {**prev, "bands": [compacted]}, lease=lease)
-    snap = current_snapshot(root)
-    return _probe_index(
-        spark,
-        snap["bands"],
-        snap["shingle_dirs"],
-        delta_path,
-        snap["n_indexed"],
-    )
+        _compact_and_commit(spark, root, name, sf_tag(sf_dir), lease)
+    return _probe_committed(spark, root, delta_path)
 
 
 def _mh_live_children(root: str, name: str, tag: str):
@@ -548,8 +452,6 @@ def _mh_live_children(root: str, name: str, tag: str):
     ``…_c`` → ``bands_c``), shingle dirs are recorded as paths and
     rel-pathed under the root. Per-tier because each tier owns its
     store-name convention (sources/commit_log.py vacuum_unreferenced)."""
-    import os  # noqa: PLC0415
-
     base_t = f"{name}_bands_{tag}"
 
     def children(snap: dict) -> set[str]:
@@ -596,48 +498,21 @@ def _mh_live_children(root: str, name: str, tag: str):
     "which is exactly the concept re-expressed for immutable runs.",
 )
 def dedup_minhash_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import json  # noqa: PLC0415
-    import os  # noqa: PLC0415
-    import subprocess  # noqa: PLC0415
-
-    from ..sources.bucketing import lock_payload  # noqa: PLC0415
-    from ..sources.store_io import get_store_io  # noqa: PLC0415
-
     name = "mh_vacuum"
     tag = sf_tag(sf_dir)
-    band_runs, _shingle_dirs, delta_path, _n = _build_and_ingest(
-        spark, sf_dir, name
-    )
+    _runs, _sh, delta_path, _n = _build_and_ingest(spark, sf_dir, name)
     root = index_root(sf_dir, name, fresh=False)
-    io = get_store_io()
 
     # -- compact (v2): supersedes the v0/v1 generation run dirs
-    compacted = f"{name}_bands_{tag}_c"
     with exclusive_append(root, owner=name) as lease:
-        prev = current_snapshot(root)
-        compact_bucketed(
-            spark,
-            band_runs,
-            compacted,
-            bucket_col="band_key",
-            num_buckets=prev["num_buckets"],
-            location=f"{root}/bands_c",
-        )
-        commit_snapshot(root, {**prev, "bands": [compacted]}, lease=lease)
+        _compact_and_commit(spark, root, name, tag, lease)
 
     # -- abandoned-writer debris, never retried: partial run dir,
     # above-pointer manifest, expired dead-pid lease
-    io.put_atomic(f"{root}/bands_g9/part-00000.tmp", "partial-run-debris")
-    io.put_if_absent(
-        f"{root}/_snapshots/v3.json",
-        json.dumps({"orphan": "abandoned, never retried"}),
+    get_store_io().put_atomic(
+        f"{root}/bands_g9/part-00000.tmp", "partial-run-debris"
     )
-    dead = subprocess.Popen(["true"])
-    dead.wait()
-    io.put_atomic(
-        os.path.join(root, "_APPEND_LOCK"),
-        lock_payload(dead.pid, f"{name}_abandoned", fence=9, expires_at=0.0),
-    )
+    _abandon_writer(root, f"{name}_abandoned", version=3, fence=9)
 
     # -- vacuum under the tier lease (takes over the expired debris
     # lease), aggressive retention: only the current snapshot survives
@@ -662,14 +537,7 @@ def dedup_minhash_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # -- the probe reads the committed snapshot AFTER GC: the driver
     # hash against the incremental oracle proves bit-identical reads
-    snap = current_snapshot(root)
-    return _probe_index(
-        spark,
-        snap["bands"],
-        snap["shingle_dirs"],
-        delta_path,
-        snap["n_indexed"],
-    )
+    return _probe_committed(spark, root, delta_path)
 
 
 _REFRESH_ORACLE = f"""
@@ -699,17 +567,7 @@ ex AS (
   SELECT d.doc_id, (s.any_base OR s.min_delta_id < d.doc_id) AS exact_dup
   FROM hashed d JOIN hstats s USING (h) WHERE d.is_delta
 ),
-w AS (
-  SELECT doc_id, string_split(text, ' ') AS ws FROM documents
-  WHERE text IS NOT NULL
-),
-{JACCARD_PREFIX_CTES},
-ppcand AS (
-  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
-  FROM pppref a JOIN pppref b ON a.s = b.s AND a.doc_id < b.doc_id
-  WHERE a.doc_id % {DEDUP_DELTA_MOD} = 0 OR b.doc_id % {DEDUP_DELTA_MOD} = 0
-  GROUP BY 1, 2
-),
+{_ARRIVING_CANDIDATES},
 nd_pairs AS (
   SELECT doc_a, doc_b FROM ({JACCARD_VERIFY_SQL}
   )
@@ -808,23 +666,11 @@ def corpus_incremental_refresh_e2e(spark: SparkSession, sf_dir: str) -> DataFram
     # probe from the post-GC snapshot. Without the GC phase the root's
     # entry count grows by one band run + one shingle gen per day —
     # the LSM operability tax the nightly job must pay down itself.
-    from ..sources.store_io import get_store_io  # noqa: PLC0415
-
     name, tag = "mh_refresh", sf_tag(sf_dir)
-    band_runs, _sh, delta_path, _n = _build_and_ingest(spark, sf_dir, name)
+    _runs, _sh, delta_path, _n = _build_and_ingest(spark, sf_dir, name)
     root = index_root(sf_dir, name, fresh=False)
-    compacted = f"{name}_bands_{tag}_c"
     with exclusive_append(root, owner=name) as lease:
-        prev = current_snapshot(root)
-        compact_bucketed(
-            spark,
-            band_runs,
-            compacted,
-            bucket_col="band_key",
-            num_buckets=prev["num_buckets"],
-            location=f"{root}/bands_c",
-        )
-        commit_snapshot(root, {**prev, "bands": [compacted]}, lease=lease)
+        _compact_and_commit(spark, root, name, tag, lease)
         report = vacuum_unreferenced(
             root,
             _mh_live_children(root, name, tag),
@@ -844,11 +690,7 @@ def corpus_incremental_refresh_e2e(spark: SparkSession, sf_dir: str) -> DataFram
     if entries != ["bands_c", "shingles", "stage"]:
         raise RuntimeError(f"root entry count not bounded: {entries}")
 
-    snap = current_snapshot(root)
-    pairs = _probe_index(
-        spark, snap["bands"], snap["shingle_dirs"], delta_path,
-        snap["n_indexed"],
-    ).select("doc_a", "doc_b")
+    pairs = _probe_committed(spark, root, delta_path).select("doc_a", "doc_b")
     d_a, d_b = (
         F.col("doc_a") % DEDUP_DELTA_MOD == 0,
         F.col("doc_b") % DEDUP_DELTA_MOD == 0,
@@ -912,55 +754,23 @@ def corpus_incremental_refresh_e2e(spark: SparkSession, sf_dir: str) -> DataFram
     "re-expressed for immutable batch storage.",
 )
 def dedup_minhash_ingest_recovery(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import json  # noqa: PLC0415
-    import os  # noqa: PLC0415
-    import subprocess  # noqa: PLC0415
-
-    from ..sources.store_io import get_store_io  # noqa: PLC0415
-
     name = "mh_recover"
     root, tag, _base, delta = _build_base_index(spark, sf_dir, name)
-    io = get_store_io()
 
     # -- the dead writer's debris, exactly as a mid-transaction kill
     # leaves it: staged files + sidecar + band run, no payload, an
     # orphan manifest one version past the pointer, and a stale lock
     stage = f"{root}/stage/delta_bands"
-    approx_keys = _stage_delta_bands(delta, stage)
-    staged = spark.read.schema("doc_id bigint, band_key bigint").parquet(
-        stage
+    staged = stage_delta(
+        spark, band_rows(delta), "band_key", stage, _STAGED_BANDS
     )
-    write_delta_key_manifest(staged, "band_key", stage, approx_keys)
-    t_gen = f"{name}_bands_{tag}_g1"
-    _write_gen_bands(
-        staged, t_gen, f"{root}/bands_g1",
+    write_run(
+        staged, f"{name}_bands_{tag}_g1", f"{root}/bands_g1", "band_key",
         current_snapshot(root)["num_buckets"],
     )
-    io.put_if_absent(
-        f"{root}/_snapshots/v1.json",
-        json.dumps({"orphan": "written-but-never-published"}),
-    )
-    # the dead writer's lease, byte-faithful (r14: lease format — an
-    # EXPIRED lease from a pid that no longer exists, so recovery
-    # exercises both takeover clauses: expiry for the multi-host case,
-    # pid-death as the same-host fast path)
-    from ..sources.bucketing import lock_payload  # noqa: PLC0415
-
-    dead = subprocess.Popen(["true"])
-    dead.wait()
-    io.put_atomic(
-        os.path.join(root, "_APPEND_LOCK"),
-        lock_payload(dead.pid, f"{name}_crashed", fence=1, expires_at=0.0),
-    )
+    _abandon_writer(root, f"{name}_crashed", version=1, fence=1)
 
     # -- recovery: take over the lock, replay the generation, commit
     _ingest_generation(spark, root, name, tag, delta)
 
-    snap = current_snapshot(root)
-    return _probe_index(
-        spark,
-        snap["bands"],
-        snap["shingle_dirs"],
-        stage,
-        snap["n_indexed"],
-    )
+    return _probe_committed(spark, root, stage)

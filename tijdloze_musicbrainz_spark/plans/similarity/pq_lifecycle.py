@@ -572,7 +572,7 @@ FROM topk t CROSS JOIN probed pr CROSS JOIN parts pa
 def sim_ann_ivf_pq_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = _pq_vecs(spark, sf_dir)
     subs = _pq_subs(base)
-    root = _pq_index_root(sf_dir, "ivfpq_index")
+    root = index_root(sf_dir, "ivfpq_index")
     _pq_write_index(base, subs, _pq_seed_codebook(base, subs), _ivf_cents(base), root)
     topk, _, _, probed_ids = _pq_query_stored(spark, base, subs, root, base)
     # Accounting from the CATALOG (the hive-style partition listing),
@@ -651,13 +651,7 @@ _PQA_ORACLE = (
 # append, compacted, streaming ingest): a fix like the r9 parts_read
 # correction lands once, not four times. Store-root naming and the
 # compaction driver are shared with the dedup tier's band index
-# (plans/lifecycle.py — r10 verdict item 8); _pq_index_root survives
-# as the ANN-flavored alias.
-
-
-def _pq_index_root(sf_dir: str, name: str) -> str:
-    """Fresh per-(query, sf) directory under the sink root."""
-    return index_root(sf_dir, name, fresh=True)
+# (plans/lifecycle.py — r10 verdict item 8).
 
 
 def _pq_write_index(
@@ -852,7 +846,7 @@ def _pq_n_appended_stored(stored: DataFrame) -> int:
 def sim_ann_ivf_pq_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = _pq_vecs(spark, sf_dir)
     subs = _pq_subs(base)
-    root = _pq_index_root(sf_dir, "ivfpq_append")
+    root = index_root(sf_dir, "ivfpq_append")
     _pq_write_index(
         base, subs, _pq_seed_codebook(base, subs), _ivf_cents(base), root
     )
@@ -897,7 +891,7 @@ def sim_ann_ivf_pq_append(spark: SparkSession, sf_dir: str) -> DataFrame:
 def sim_ann_ivf_pq_compacted(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = _pq_vecs(spark, sf_dir)
     subs = _pq_subs(base)
-    root = _pq_index_root(sf_dir, "ivfpq_compact")
+    root = index_root(sf_dir, "ivfpq_compact")
     _pq_write_index(
         base, subs, _pq_seed_codebook(base, subs), _ivf_cents(base), root
     )
@@ -973,7 +967,7 @@ def streaming_ann_index_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     base = _pq_vecs(spark, sf_dir)
     subs = _pq_subs(base)
-    root = _pq_index_root(sf_dir, "ivfpq_stream")
+    root = index_root(sf_dir, "ivfpq_stream")
     _pq_write_index(
         base, subs, _pq_seed_codebook(base, subs), _ivf_cents(base), root
     )
@@ -1071,7 +1065,7 @@ def sim_ann_ivf_pq_retrain(spark: SparkSession, sf_dir: str) -> DataFrame:
     # base-derived even when sourced from the union; the refinement
     # then trains over the WHOLE union
     cb1 = _pq_lloyd_refine(usubs, _pq_seed_codebook(union, usubs))
-    root = _pq_index_root(sf_dir, "ivfpq_retrain")
+    root = index_root(sf_dir, "ivfpq_retrain")
     # rewrite: refined codebook + union re-encode, centroids frozen
     _pq_write_index(union, usubs, cb1, _ivf_cents(base), root)
     n_appended = delta.count()
@@ -1119,7 +1113,7 @@ def streaming_ann_ingest_restart(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     base = _pq_vecs(spark, sf_dir)
     subs = _pq_subs(base)
-    root = _pq_index_root(sf_dir, "ivfpq_restart")
+    root = index_root(sf_dir, "ivfpq_restart")
 
     # Base build, under the SAME two-level layout as the ingested
     # batches (ingest_batch=base/cent_id=N) so the whole lists tree

@@ -1717,10 +1717,15 @@ def _bpe_train_chain(
     checkpoint inherits the partitioning of its input, so a 1-task
     head serializes the whole chain) and materializes it once, so
     round 1's two consumers (pair counts + rewrite) don't re-tokenize.
-    fan_out is partition-count-gated: a no-op at production scale."""
-    from .util import fan_out  # noqa: PLC0415
+    fan_out is partition-count-gated: a no-op at production scale.
 
-    docs = _round_checkpoint(fan_out(docs))
+    Every round is EAGER-checkpointed (r6, measured 6.6 -> 4.7 s at
+    sf0.1 for the composed spans query): the lazy chain made every
+    downstream action re-evaluate ALL prior rounds' interpreted merge
+    folds (O(R^2) fold evaluations); the checkpoint caps it at O(R)."""
+    from .util import eager_checkpoint, fan_out  # noqa: PLC0415
+
+    docs = eager_checkpoint(fan_out(docs))
     merge_fold = F.expr(
         """
 aggregate(tk,
@@ -1773,32 +1778,11 @@ aggregate(tk,
                 F.col("wcnt").alias("pair_count"),
             )
         )
-        docs = _round_checkpoint(
+        docs = eager_checkpoint(
             docs.crossJoin(F.broadcast(winner))
             .select("doc_id", merge_fold.alias("tk"))
         )
     return winners, docs
-
-
-def _round_checkpoint(df: DataFrame) -> DataFrame:
-    """EAGER checkpoint per BPE round (r6, measured 6.6 -> 4.7 s at
-    sf0.1 for the composed spans query): the lazy chain made every
-    downstream action re-evaluate ALL prior rounds' interpreted merge
-    folds (O(R^2) fold evaluations); the checkpoint caps it at O(R).
-    eager=True per the r5 lesson — a lazy localCheckpoint still
-    recomputes on first use.
-
-    Executor-loss semantics (r8, SCALE.md): localCheckpoint blocks
-    live on executor-local storage — on a real cluster an executor
-    loss triggers recompute of prior rounds, never failure. When a
-    RELIABLE checkpoint dir is configured
-    (``sc.setCheckpointDir(...)``), rounds checkpoint to shared
-    storage instead: loss-proof blocks at the cost of one distributed
-    write per round. Shared with the graph plans via
-    util.eager_checkpoint."""
-    from .util import eager_checkpoint  # noqa: PLC0415
-
-    return eager_checkpoint(df)
 
 
 @register(

@@ -148,6 +148,11 @@ def fan_out(df: DataFrame) -> DataFrame:
     return df.repartition(n)
 
 
+# Target real checkpoint bytes per downstream task (the measured sizing
+# is in checkpointed_payload's docstring).
+CKPT_PART_BYTES = 1 << 20
+
+
 def checkpointed_payload(
     df: DataFrame,
     aggs: list[Column] | None = None,
@@ -169,7 +174,7 @@ def checkpointed_payload(
        the CHECKPOINT job instead of costing separate count actions,
     3. eager-checkpoints,
     4. coalesces the materialized blocks so one downstream task
-       carries ~``SPARK_GRAFT_CKPT_PART_BYTES`` of REAL checkpoint
+       carries ~``CKPT_PART_BYTES`` of REAL checkpoint
        bytes (read from the block manager's storage info — measured,
        not estimated). Narrow and cheap: the blocks are already
        materialized; at production volume ``bytes/target >=
@@ -214,9 +219,7 @@ def checkpointed_payload(
             nbytes = int(info.memSize() + info.diskSize())
     metrics["bytes"] = nbytes
     if nbytes is not None:
-        target = part_bytes or int(
-            os.environ.get("SPARK_GRAFT_CKPT_PART_BYTES", str(1 << 20))
-        )
+        target = part_bytes or CKPT_PART_BYTES
         nparts = ck.rdd.getNumPartitions()
         ideal = split_count(nbytes, target)
         if ideal < nparts:

@@ -218,12 +218,10 @@ def sessionize_stream(stream: DataFrame, gap_seconds: int = 1800) -> DataFrame:
 # same box, same results — grouped-agg output is partition-count
 # independent). State partitioning is a real sizing decision at
 # production (partitions ~ state volume / target store size, fixed at
-# first checkpoint), so it is its own knob, decoupled from the batch
-# shuffle default and fixed across SPARK_GRAFT_CPUS values so the
+# first checkpoint), so it is its own constant, decoupled from the
+# batch shuffle default and fixed across SPARK_GRAFT_CPUS values so the
 # driver's low-core bench sees the same stream plan.
-STREAM_STATE_PARTITIONS = int(
-    os.environ.get("SPARK_GRAFT_STREAM_STATE_PARTITIONS", "8")
-)
+STREAM_STATE_PARTITIONS = 8
 
 
 def run_stream_to_memory(
@@ -746,7 +744,11 @@ def _mh_index_pairs(
     """Candidate/verify query against the MAINTAINED index: band
     self-join on the compact (doc_id, band_key) store, exact-Jaccard
     verification over shingle sets recomputed from the corpus rows."""
-    from ..plans.dedup import jaccard, shingles_col, words_col  # noqa: PLC0415
+    from ..plans.dedup import (  # noqa: PLC0415
+        shingles_col,
+        verify_pairs,
+        words_col,
+    )
 
     index = spark.read.parquet(path).select("doc_id", "band_key")
     a = index.alias("a")
@@ -763,13 +765,7 @@ def _mh_index_pairs(
         .distinct()
     )
     sh = corpus.select("doc_id", shingles_col(words_col()).alias("sgs"))
-    sh_a = sh.select(F.col("doc_id").alias("doc_a"), F.col("sgs").alias("sgs_a"))
-    sh_b = sh.select(F.col("doc_id").alias("doc_b"), F.col("sgs").alias("sgs_b"))
-    verified = cand.join(sh_a, "doc_a").join(sh_b, "doc_b")
-    jac = jaccard(F.col("sgs_a"), F.col("sgs_b"))
-    return verified.filter(jac >= 0.8).select(
-        "doc_a", "doc_b", F.round(jac, 4).alias("jaccard")
-    )
+    return verify_pairs(cand, sh, 0.8)
 
 
 @register(

@@ -92,7 +92,7 @@ def main() -> None:
         # inject the stall only AFTER the base build (the build also
         # writes a shingle payload; the race targets the leased gen-1
         # transaction)
-        real_write = di._write_gen_shingles
+        real_write = di.write_payload
 
         def stall_then_write(sh, path):
             with open(os.path.join(shared, "in_critical"), "w") as f:
@@ -100,7 +100,7 @@ def main() -> None:
             _wait_for(os.path.join(shared, "go"))
             real_write(sh, path)
 
-        di._write_gen_shingles = stall_then_write
+        di.write_payload = stall_then_write
         try:
             di._ingest_generation(spark, root, name, tag, delta)
         except bk.FencedOut:
