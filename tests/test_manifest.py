@@ -111,6 +111,30 @@ def test_merge_and_snapshot_versions(spark, tmp_path_factory):
     assert (7, 1, 7) in v0 and (13, 1, 13) in v0
 
 
+def test_one_key_merge_rewrites_only_its_bucket(spark, tmp_path_factory):
+    """A batch whose one key hashes to one bucket rewrites that bucket's
+    entry and leaves every other bucket's committed entry list as it
+    was (round-3 verdict #3: per-batch work is O(touched buckets), not
+    O(table))."""
+    from tijdloze_musicbrainz_spark.operators.manifest import N_MERGE_BUCKETS
+    from tijdloze_musicbrainz_spark.sources.commit_log import snapshot_at
+
+    table = str(tmp_path_factory.mktemp("manifest_isolation") / "t")
+    full = spark.range(500).selectExpr("id as k", "id as seq", "id * 2 as v")
+    touched = merge_upsert_manifest(full, table, ["k"], "seq")
+    assert touched == list(range(N_MERGE_BUCKETS))  # 500 keys cover all buckets
+
+    one = spark.createDataFrame([(7, 10_000, 99)], "k long, seq long, v long")
+    (b,) = merge_upsert_manifest(one, table, ["k"], "seq")
+    v0, v1 = snapshot_at(table, 0)["files"], snapshot_at(table, 1)["files"]
+    assert set(v0) == set(v1) == {str(i) for i in range(N_MERGE_BUCKETS)}
+    assert {k for k in v0 if v0[k] != v1[k]} == {str(b)}
+
+    got = _rows(spark, table)
+    assert (7, 10_000, 99) in got
+    assert len(got) == 500  # every other key survived the one-bucket merge
+
+
 def test_crash_before_pointer_swap_leaves_old_snapshot(
     spark, tmp_path_factory, monkeypatch
 ):

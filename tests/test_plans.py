@@ -416,8 +416,6 @@ DRIVER_MATERIALIZATION_ALLOWLIST = {
         "limit(MAX_QUERIES + 1) with loud over-limit error",
     ("streaming/jobs.py", "_staged_events_with_flush", "first"):
         "1-row max-timestamp for the staged flush row",
-    ("operators/upsert.py", "merge_upsert_bucketed", "collect"):
-        "distinct touched bucket ids (<= num_buckets)",
     ("operators/manifest.py", "merge_upsert_manifest", "collect"):
         "distinct touched bucket ids (<= num_buckets)",
     ("operators/manifest.py", "commit_clustered", "collect"):

@@ -42,6 +42,7 @@ def test_sessionize_stream_matches_batch(spark, sf_dir):
 def test_stream_upsert_sink(spark, sf_dir, tmp_path_factory):
     import shutil
 
+    from tijdloze_musicbrainz_spark.operators.manifest import read_table
     from tijdloze_musicbrainz_spark.streaming import stream_events
     from tijdloze_musicbrainz_spark.streaming.jobs import stream_upsert_to_parquet
 
@@ -59,7 +60,7 @@ def test_stream_upsert_sink(spark, sf_dir, tmp_path_factory):
     )
     got = {
         (r["user_id"], r["event_id"])
-        for r in spark.read.parquet(target).collect()
+        for r in read_table(spark, target).collect()
     }
 
     from tijdloze_musicbrainz_spark.plans.util import t as load
@@ -70,45 +71,6 @@ def test_stream_upsert_sink(spark, sf_dir, tmp_path_factory):
         for r in ev.groupBy("user_id").agg({"event_id": "max"}).collect()
     }
     assert got == want
-
-
-def test_bucketed_upsert_touches_only_its_buckets(spark, tmp_path_factory):
-    """A micro-batch whose keys hash to one bucket must rewrite that
-    one bucket directory and leave every other bucket's files alone
-    (round-3 verdict #3: per-batch work is O(touched buckets), not
-    O(target))."""
-    import os
-
-    from tijdloze_musicbrainz_spark.operators.upsert import (
-        N_MERGE_BUCKETS as N_UPSERT_BUCKETS,
-        merge_upsert_bucketed as merge_batch_into_bucketed_parquet,
-    )
-
-    base = str(tmp_path_factory.mktemp("bucketed_upsert"))
-    target = f"{base}/t"
-    full = spark.range(500).selectExpr("id as k", "id as seq", "id * 2 as v")
-    touched = merge_batch_into_bucketed_parquet(full, target, ["k"], "seq")
-    assert touched == list(range(N_UPSERT_BUCKETS))  # 500 keys cover all buckets
-
-    def bucket_sig(d):
-        p = os.path.join(target, d)
-        return sorted((f, os.path.getmtime(os.path.join(p, f))) for f in os.listdir(p))
-
-    before = {d: bucket_sig(d) for d in os.listdir(target) if d.startswith("__bucket=")}
-
-    one = spark.createDataFrame([(7, 10_000, 99)], "k long, seq long, v long")
-    touched2 = merge_batch_into_bucketed_parquet(one, target, ["k"], "seq")
-    assert len(touched2) == 1
-    changed = {
-        d
-        for d in before
-        if bucket_sig(d) != before[d]
-    }
-    assert changed == {f"__bucket={touched2[0]}"}
-
-    got = {(r["k"], r["seq"]) for r in spark.read.parquet(target).collect()}
-    assert (7, 10_000) in got
-    assert len(got) == 500  # every other key survived the single-bucket merge
 
 
 def test_checkpoint_restart_processes_only_new_files(spark, sf_dir, tmp_path_factory):
@@ -165,7 +127,7 @@ def test_stateful_sessionize_state_survives_restart(spark, tmp_path_factory):
     resume a NEW query instance on the same checkpoint. Sessions that
     were OPEN at the stop must be restored from the state store —
     neither lost (drain 2 closing them with the full count/start) nor
-    duplicated (the emissions log stays key-unique) — and the bucketed
+    duplicated (the emissions log stays key-unique) — and the manifest
     upsert target must converge to the hand-derived batch truth.
 
     The reference analog is per-artist commit restartability
@@ -175,7 +137,10 @@ def test_stateful_sessionize_state_survives_restart(spark, tmp_path_factory):
 
     import pandas as pd
 
-    from tijdloze_musicbrainz_spark.operators.upsert import merge_upsert_bucketed
+    from tijdloze_musicbrainz_spark.operators.manifest import (
+        merge_upsert_manifest,
+        read_table,
+    )
     from tijdloze_musicbrainz_spark.streaming.jobs import sessionize_stream
 
     root = tmp_path_factory.mktemp("sess_ckpt")
@@ -215,7 +180,7 @@ def test_stateful_sessionize_state_survives_restart(spark, tmp_path_factory):
         def sink(batch_df, batch_id):
             batch_df.persist()
             batch_df.write.mode("append").parquet(log)
-            merge_upsert_bucketed(
+            merge_upsert_manifest(
                 batch_df, target, ["user_id", "session_start_epoch"], "n_events"
             )
             batch_df.unpersist()
@@ -253,10 +218,10 @@ def test_stateful_sessionize_state_survives_restart(spark, tmp_path_factory):
     assert len(logged) == len(set(logged)) == 3
     # not lost: the spanning sessions carry their FULL pre-stop prefix
     assert set(logged) == expected
-    # and the bucketed upsert target converged to the same truth
+    # and the manifest upsert target converged to the same truth
     got = {
         (r.user_id, r.session_start_epoch, r.n_events, r.total_value)
-        for r in spark.read.parquet(target).collect()
+        for r in read_table(spark, target).collect()
     }
     assert got == expected
 
@@ -315,6 +280,59 @@ def test_minhash_index_absorbs_increment(spark, tmp_path_factory):
         (r.doc_a, r.doc_b) for r in spec.builder(spark, sf).collect()
     }
     assert pairs == {(1, 3)}
+
+
+def test_minhash_index_reingest_replaces_bands(spark, tmp_path_factory):
+    """A re-ingested document's new bands REPLACE its old ones: document
+    3 first arrives as a near-dup of document 1, then a later increment
+    re-ingests it as a near-dup of document 2. The index must pair it
+    with 2 only — a store that kept the old bands would still serve
+    the (1, 3) candidate, and the corpus still holds document 3's old
+    text, so that pair would verify."""
+    import os
+    import shutil
+
+    import duckdb
+
+    from tijdloze_musicbrainz_spark.plans import REGISTRY
+    from tijdloze_musicbrainz_spark.plans.etl import SINK_ROOT
+
+    sf = str(tmp_path_factory.mktemp("minhash_reingest"))
+    tag = os.path.basename(os.path.normpath(sf))
+    shutil.rmtree(f"{SINK_ROOT}/minhash_index_{tag}", ignore_errors=True)
+    shutil.rmtree(
+        f"{SINK_ROOT}/minhash_index_{tag}__checkpoint", ignore_errors=True
+    )
+
+    def write_increment(rows, fname):
+        con = duckdb.connect()
+        con.execute(
+            "CREATE TABLE d (doc_id BIGINT, text VARCHAR, lang VARCHAR, "
+            "source VARCHAR, n_chars BIGINT)"
+        )
+        con.executemany("INSERT INTO d VALUES (?, ?, ?, ?, ?)", rows)
+        con.execute(f"COPY d TO '{sf}/{fname}' (FORMAT parquet)")
+
+    base = "the quick brown fox jumps over the lazy dog again and again today"
+    far = "completely different words about spark shuffles and parquet files"
+    write_increment(
+        [(1, base, "en", "s0", len(base)), (2, far, "en", "s0", len(far))],
+        "documents.parquet",
+    )
+    neardup = base.replace("today", "tonight")
+    write_increment(
+        [(3, neardup, "en", "s0", len(neardup))], "documents_b2.parquet"
+    )
+    spec = REGISTRY["streaming_minhash_index"]
+    assert {(r.doc_a, r.doc_b) for r in spec.builder(spark, sf).collect()} == {
+        (1, 3)
+    }
+
+    # document 3 re-ingested in a LATER batch, now nearly document 2
+    redone = far + " today"
+    write_increment([(3, redone, "en", "s0", len(redone))], "documents_b3.parquet")
+    pairs = {(r.doc_a, r.doc_b) for r in spec.builder(spark, sf).collect()}
+    assert pairs == {(2, 3)}
 
 
 def test_minhash_ingest_restart_equals_batch_lsh(spark, sf_dir):

@@ -1,12 +1,10 @@
-"""Manifest-committed parquet tables — ATOMIC multi-bucket MERGE
-without lakehouse jars (r5; closes VERDICT r4 "What's missing #2" to
-the extent this container allows).
+"""Manifest-committed parquet tables — the engine's one incremental,
+ATOMIC multi-bucket MERGE without lakehouse jars (r5; closes VERDICT r4
+"What's missing #2" to the extent this container allows).
 
-``merge_upsert_bucketed`` (upsert.py) swaps bucket directories one at
-a time, so a concurrent reader can observe bucket 3 new + bucket 7 old
-— the documented non-atomicity. Delta/Iceberg fix this with a commit
-LOG; their jars are absent here, so a manifest table is one more
-client of the engine's own commit log (sources/commit_log.py):
+Delta/Iceberg make a multi-file MERGE atomic with a commit LOG; their
+jars are absent here, so a manifest table is one more client of the
+engine's own commit log (sources/commit_log.py):
 
 - data files are IMMUTABLE, written once under ``<table>/data/``;
 - a commit is a snapshot manifest listing the table's complete
@@ -50,7 +48,11 @@ from ..sources.commit_log import (
     snapshot_at,
     vacuum_unreferenced,
 )
-from .upsert import N_MERGE_BUCKETS, dedup_last_wins
+from .upsert import dedup_last_wins
+
+# Key-hash buckets per manifest table: a merge reads and rewrites only
+# the buckets its batch touches.
+N_MERGE_BUCKETS = 16
 
 # Reserved column name under which CDC merges PERSIST each key's
 # winning op ('I'/'U'/'D') inside the committed data files. Tombstones
@@ -206,7 +208,6 @@ def merge_upsert_manifest(
     table: str,
     keys: Sequence[str],
     priority_col: str,
-    n_buckets: int = N_MERGE_BUCKETS,
 ) -> list[int]:
     """Incremental last-writer-wins MERGE with an ATOMIC commit:
 
@@ -217,8 +218,8 @@ def merge_upsert_manifest(
     5. :func:`_commit_staged` — the single atomic instant at which ALL
        touched buckets change together.
 
-    Work per merge is O(|touched buckets|), same as the non-atomic
-    variant; the extra cost is one small JSON per commit.
+    Work per merge is O(|touched buckets|), not O(|table|): a
+    one-key re-run rewrites one bucket; the commit adds one small JSON.
 
     Upsert and CDC writes may mix in one table: when exactly one side
     of the union carries ``__op`` (CDC-written files vs a plain
@@ -228,7 +229,7 @@ def merge_upsert_manifest(
     drift fails loudly (r7 ADVICE). Returns the touched bucket ids."""
     spark = batch_df.sparkSession
     bucket = F.pmod(
-        F.xxhash64(*[F.col(k) for k in keys]), F.lit(n_buckets)
+        F.xxhash64(*[F.col(k) for k in keys]), F.lit(N_MERGE_BUCKETS)
     ).cast("int")
     batch = batch_df.withColumn("__bucket", bucket)
     touched = sorted(
@@ -281,7 +282,6 @@ def merge_cdc_manifest(
     keys: Sequence[str],
     priority_col: str,
     op_col: str = "op",
-    n_buckets: int = N_MERGE_BUCKETS,
 ) -> list[int]:
     """CDC MERGE: apply an insert/update/delete change stream to the
     manifest table. ``op_col`` holds 'I'/'U'/'D' (insert and update
@@ -320,7 +320,7 @@ def merge_cdc_manifest(
             )
         ),
     )
-    return merge_upsert_manifest(batch, table, keys, priority_col, n_buckets)
+    return merge_upsert_manifest(batch, table, keys, priority_col)
 
 
 def merge_with_retry(

@@ -13,8 +13,10 @@ the Spark-native equivalents are set-oriented dedup-before-write:
   (or the same window with the order flipped).
 
 On a real lakehouse table (Delta/Iceberg) the incremental equivalent
-is ``MERGE INTO``; those jars are not in this image, so the writers
-below gate on availability and fall back to overwrite.
+is ``MERGE INTO``; those jars are not in this image, so the full-table
+sink below overwrites, and the one incremental MERGE is
+``operators.manifest.merge_upsert_manifest`` (touched buckets only,
+one atomic commit through ``sources/commit_log.py``).
 """
 
 from __future__ import annotations
@@ -54,8 +56,9 @@ def write_upsert(
 ) -> None:
     """Dedup-then-atomic-overwrite parquet sink (full rewrite — for
     when the batch IS the whole table). For incremental merges into an
-    existing large target use ``merge_upsert_bucketed`` below, which
-    touches only the key-hash buckets the batch hits."""
+    existing large target use ``operators.manifest.merge_upsert_manifest``,
+    which rewrites only the key-hash buckets the batch hits and commits
+    them atomically."""
     deduped = dedup_last_wins(df, keys, priority)
     writer = deduped.write.mode("overwrite")
     if partition_by:
@@ -63,73 +66,6 @@ def write_upsert(
             "partitionOverwriteMode", "dynamic"
         )
     writer.parquet(path)
-
-
-N_MERGE_BUCKETS = 16
-
-
-def merge_upsert_bucketed(
-    batch_df: DataFrame,
-    path: str,
-    keys: Sequence[str],
-    priority_col: str,
-    n_buckets: int = N_MERGE_BUCKETS,
-) -> list[int]:
-    """Incremental MERGE into a key-hash-bucketed parquet target — the
-    engine's stand-in for the reference's per-artist ``ON CONFLICT DO
-    UPDATE`` re-run (src/main.py:298-323) and for Delta/Iceberg
-    ``MERGE INTO`` (those jars are not in this image).
-
-    Target layout: ``__bucket=<pmod(xxhash64(keys), N)>`` partition
-    directories. A batch (1) computes its rows' buckets, (2) reads
-    back ONLY the touched bucket partitions (partition pruning on the
-    ``__bucket`` filter), (3) last-writer-wins-dedups
-    batch ∪ touched-existing rows, and (4) swaps in only the touched
-    bucket directories. Work per merge is O(|touched buckets|), not
-    O(|target|) — a one-artist re-run on a 100 TB table touches one
-    bucket.
-
-    Atomicity: each bucket swap is a per-directory rmtree+rename, so a
-    concurrent reader can observe one bucket mid-swap; on a real
-    lakehouse table the same layout maps onto dynamic partition
-    overwrite or a transactional MERGE. For the ATOMIC multi-bucket
-    variant (single pointer-swap commit, snapshot isolation, time
-    travel) use ``operators.manifest.merge_upsert_manifest`` (r5).
-
-    Returns the sorted touched bucket ids (tests/observability)."""
-    import os  # noqa: PLC0415
-    import shutil  # noqa: PLC0415
-
-    spark = batch_df.sparkSession
-    bucket = F.pmod(
-        F.xxhash64(*[F.col(k) for k in keys]), F.lit(n_buckets)
-    ).cast("int")
-    batch = batch_df.withColumn("__bucket", bucket)
-    # bounded collect: at most n_buckets distinct values
-    touched = sorted(
-        r["__bucket"] for r in batch.select("__bucket").distinct().collect()
-    )
-    if not touched:
-        return []
-    if os.path.exists(path):
-        existing = spark.read.parquet(path).filter(
-            F.col("__bucket").isin([int(b) for b in touched])
-        )
-        merged = existing.unionByName(batch, allowMissingColumns=False)
-    else:
-        merged = batch
-    out = dedup_last_wins(merged, list(keys), [F.desc(priority_col)])
-    tmp = f"{path}__tmp"
-    out.write.mode("overwrite").partitionBy("__bucket").parquet(tmp)
-    os.makedirs(path, exist_ok=True)
-    for b in touched:
-        src = os.path.join(tmp, f"__bucket={b}")
-        dst = os.path.join(path, f"__bucket={b}")
-        if os.path.exists(src):
-            shutil.rmtree(dst, ignore_errors=True)
-            os.rename(src, dst)
-    shutil.rmtree(tmp, ignore_errors=True)
-    return touched
 
 
 def accuracy_report(

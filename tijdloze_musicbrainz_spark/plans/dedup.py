@@ -151,6 +151,27 @@ def band_rows(docs: DataFrame) -> DataFrame:
     )
 
 
+def band_candidates(bands: DataFrame) -> DataFrame:
+    """Distinct (doc_a, doc_b) pairs, doc_a < doc_b, that share a band
+    key: the LSH candidate step, a band_key self-join over (doc_id,
+    band_key) rows."""
+    a = bands.alias("a")
+    b = bands.alias("b")
+    return (
+        a.join(
+            b,
+            (F.col("a.band_key") == F.col("b.band_key"))
+            & (F.col("a.doc_id") < F.col("b.doc_id")),
+        )
+        .select(
+            F.col("a.doc_id").alias("doc_a"),
+            F.col("b.doc_id").alias("doc_b"),
+        )
+        # same pair can collide in several bands — dedupe before verify
+        .distinct()
+    )
+
+
 def jaccard(a, b) -> object:
     return F.size(F.array_intersect(a, b)) / F.size(F.array_union(a, b))
 
@@ -527,23 +548,7 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     sh = docs.select("doc_id", shingles_col(F.col("ws")).alias("sgs"))
     # (band_key, doc) — 16 rows per doc, shuffled once on band_key.
-    exploded = band_rows(docs)
-    a = exploded.alias("a")
-    b = exploded.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band_key") == F.col("b.band_key"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-        )
-        # same pair can collide in several bands — dedupe before verify
-        .distinct()
-    )
-    return verify_pairs(cand, sh, 0.8)
+    return verify_pairs(band_candidates(band_rows(docs)), sh, 0.8)
 
 
 # SimHash bit family: bit k of a token's 64-bit signature is

@@ -400,8 +400,9 @@ def _abandon_writer(root: str, owner: str, version: int, fence: int) -> None:
     "n_indexed. At 100 TB this replaces re-running batch dedup over "
     "history+delta (O(corpus) per batch) with O(delta) sign+probe "
     "and a file-level append, history never re-read. Sibling of "
-    "streaming_minhash_index (r5), which maintains the index via "
-    "foreachBatch micro-batches and re-emits ALL pairs from it; this "
+    "streaming_minhash_index (r5), which maintains the index as a "
+    "manifest table through foreachBatch merges and re-emits ALL "
+    "pairs from it; this "
     "operator is the batch-ingest read path — O(delta) probe, "
     "arriving-endpoint output only, zero-shuffle bucketed store. No "
     "reference twin (extension surface); the lifecycle pattern "

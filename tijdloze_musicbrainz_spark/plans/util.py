@@ -9,8 +9,6 @@ floats rounded, timestamps as epoch BIGINT, arrays sorted+joined.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
@@ -105,10 +103,8 @@ def values_df(spark: SparkSession, rows: list, schema: str) -> DataFrame:
 
 
 # The one budget of the broadcast gate below, sized to a production
-# executor's broadcast share; a cluster with more headroom raises it.
-BCAST_MAX_BYTES = int(
-    os.environ.get("SPARK_GRAFT_EDGE_BCAST_MAX_BYTES", str(256 << 20))
-)
+# executor's broadcast share.
+BCAST_MAX_BYTES = 256 << 20
 
 
 def fits_broadcast(
