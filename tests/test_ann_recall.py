@@ -304,6 +304,57 @@ def test_streaming_ann_ingest_is_multi_batch_and_equivalent(
     assert len([o for o in offsets if not o.startswith(".")]) == 3, offsets
 
 
+def test_streaming_ann_restart_commits_through_the_log(spark, sf_dir):
+    """The ANN restart proof runs the index's committed ingest: after
+    the torn commit and the replay, the snapshot names the base run
+    and one lists_b<id> run per staged arrival file, the replayed
+    batch once."""
+    import os
+
+    from tijdloze_musicbrainz_spark.plans import REGISTRY
+    from tijdloze_musicbrainz_spark.plans.lifecycle import index_root
+    from tijdloze_musicbrainz_spark.sources.commit_log import (
+        current_snapshot,
+    )
+
+    REGISTRY["streaming_ann_ingest_restart"].builder(spark, sf_dir)
+    root = index_root(sf_dir, "ivfpq_restart", fresh=False)
+    n_files = len(
+        [f for f in os.listdir(f"{root}/arrivals") if f.endswith(".parquet")]
+    )
+    assert n_files >= 2, n_files
+    assert current_snapshot(root)["list_dirs"] == ["lists"] + [
+        f"lists_b{i}" for i in range(n_files)
+    ]
+
+
+def test_ivf_partitioned_lists_job_budget(spark):
+    """Job budget of the IVF list-store build at sf0.01, counted with
+    statusTracker job groups: the lists write, the probed-ids collect
+    and the payload checkpoint. parts_total/parts_read come from the
+    partition listing, so no count job rides the build."""
+    import os
+
+    from tijdloze_musicbrainz_spark.plans import REGISTRY
+    from tijdloze_musicbrainz_spark.plans.util import t
+
+    sf = os.path.join(
+        os.path.dirname(os.path.abspath(__file__)),
+        "..", "perfbench", "data", "sf0.01",
+    )
+    # the catalog's one-time schema read belongs to the session
+    t(spark, sf, "embeddings")
+    sc = spark.sparkContext
+    group = "ivf-lists-budget-build"
+    sc.setJobGroup(group, "job-budget probe")
+    try:
+        REGISTRY["sim_ann_ivf_partitioned_lists"].builder(spark, sf)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    n_build = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert n_build <= 8, n_build
+
+
 def test_parts_accounting_reads_the_catalog_not_the_store(spark, tmp_path):
     """parts_total/parts_read for the persisted index come from
     list_partition_ids — one directory listing of the hive-style

@@ -215,6 +215,27 @@ def test_streaming_restart_labels_equal_batch_clustering(spark, sf_dir):
     )
 
 
+def test_streaming_restart_commits_through_the_log(spark, sf_dir):
+    """The cluster restart proof runs the tier's committed generation
+    transaction: after the torn commit and the replay, the snapshot
+    names generations 1..n_files (the replayed batch once) and its
+    n_indexed accounting covers the whole corpus."""
+    import os
+
+    from tijdloze_musicbrainz_spark.plans.lifecycle import index_root
+
+    REGISTRY["streaming_cluster_ingest_restart"].builder(spark, sf_dir)
+    root = index_root(sf_dir, "cc_stream", fresh=False)
+    n_files = len(
+        [f for f in os.listdir(f"{root}/arrivals") if f.endswith(".parquet")]
+    )
+    assert n_files >= 2, n_files
+    snap = current_snapshot(root)
+    assert snap["gens"] == list(range(1, n_files + 1))
+    n_docs = spark.read.parquet(f"{sf_dir}/documents.parquet").count()
+    assert snap["n_indexed"] == n_docs
+
+
 def test_streaming_restart_rejects_too_small_corpus(spark, tmp_path):
     """The restart proof needs >= 2 staged micro-batch files (the torn
     commit fires after batch 1); a tiny corpus stages fewer (Spark

@@ -287,8 +287,9 @@ def test_minhash_index_reingest_replaces_bands(spark, tmp_path_factory):
     3 first arrives as a near-dup of document 1, then a later increment
     re-ingests it as a near-dup of document 2. The index must pair it
     with 2 only — a store that kept the old bands would still serve
-    the (1, 3) candidate, and the corpus still holds document 3's old
-    text, so that pair would verify."""
+    the (1, 3) candidate (the verify payload's latest text then
+    rejects it; test_minhash_index_reingest_verifies_latest_text pins
+    that side)."""
     import os
     import shutil
 
@@ -333,6 +334,66 @@ def test_minhash_index_reingest_replaces_bands(spark, tmp_path_factory):
     write_increment([(3, redone, "en", "s0", len(redone))], "documents_b3.parquet")
     pairs = {(r.doc_a, r.doc_b) for r in spec.builder(spark, sf).collect()}
     assert pairs == {(2, 3)}
+
+
+def test_minhash_index_reingest_verifies_latest_text(spark, tmp_path_factory):
+    """A re-ingested document is verified against its LATEST text:
+    document 3 first arrives as a near-dup of document 1, then a later
+    increment re-ingests it as a different near-dup of document 1. The
+    pair (1, 3) must come back exactly once, with the Jaccard of the
+    re-ingested text — a verify side that kept every ingested row of
+    document 3 would return the pair once per text."""
+    import os
+    import shutil
+
+    import duckdb
+
+    from tijdloze_musicbrainz_spark.plans import REGISTRY
+    from tijdloze_musicbrainz_spark.plans.etl import SINK_ROOT
+
+    sf = str(tmp_path_factory.mktemp("minhash_reverify"))
+    tag = os.path.basename(os.path.normpath(sf))
+    for suffix in ("", "__checkpoint", "__payload"):
+        shutil.rmtree(f"{SINK_ROOT}/minhash_index_{tag}{suffix}", ignore_errors=True)
+
+    def write_increment(rows, fname):
+        con = duckdb.connect()
+        con.execute(
+            "CREATE TABLE d (doc_id BIGINT, text VARCHAR, lang VARCHAR, "
+            "source VARCHAR, n_chars BIGINT)"
+        )
+        con.executemany("INSERT INTO d VALUES (?, ?, ?, ?, ?)", rows)
+        con.execute(f"COPY d TO '{sf}/{fname}' (FORMAT parquet)")
+
+    def shingles(text):
+        ws = text.split(" ")
+        return {" ".join(ws[i : i + 3]) for i in range(max(len(ws) - 2, 1))}
+
+    def jac(x, y):
+        a, b = shingles(x), shingles(y)
+        return round(len(a & b) / len(a | b), 4)
+
+    base = "the quick brown fox jumps over the lazy dog again and again today"
+    far = "completely different words about spark shuffles and parquet files"
+    first = base.replace("today", "tonight")
+    write_increment(
+        [(1, base, "en", "s0", len(base)), (2, far, "en", "s0", len(far))],
+        "documents.parquet",
+    )
+    write_increment([(3, first, "en", "s0", len(first))], "documents_b2.parquet")
+    spec = REGISTRY["streaming_minhash_index"]
+    assert [
+        (r.doc_a, r.doc_b, r.jaccard) for r in spec.builder(spark, sf).collect()
+    ] == [(1, 3, jac(base, first))]
+
+    # document 3 re-ingested in a LATER batch, still a near-dup of 1
+    second = base + " now"
+    assert jac(base, second) != jac(base, first)
+    write_increment([(3, second, "en", "s0", len(second))], "documents_b3.parquet")
+    rows = [
+        (r.doc_a, r.doc_b, r.jaccard) for r in spec.builder(spark, sf).collect()
+    ]
+    assert [r for r in rows if r[:2] == (1, 3)] == [(1, 3, jac(base, second))]
 
 
 def test_minhash_ingest_restart_equals_batch_lsh(spark, sf_dir):

@@ -13,6 +13,7 @@ import pandas as pd  # noqa: F401,TC002  (pandas_udf resolves 'pd.Series' hints 
 from pyspark.sql import Column, DataFrame, SparkSession, Window  # noqa: F401
 from pyspark.sql import functions as F
 
+from ..lifecycle import index_root, list_partition_ids
 from ..registry import register
 from ..util import (  # noqa: F401
     checkpointed_payload,
@@ -655,27 +656,20 @@ FROM topk t CROSS JOIN probed pr CROSS JOIN parts pa
 def sim_ann_ivf_partitioned_lists(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    import os  # noqa: PLC0415
-    import shutil  # noqa: PLC0415
-
-    from ..etl import SINK_ROOT  # noqa: PLC0415
-
     # fan_out: the centroid-scoring passes are CPU-bound array math
     # over a single-row-group scan — partition-count-gated, a no-op
     # at production scale (see _pq_vecs).
-    # checkpointed_payload (r15/r16): this builder issues FIVE actions
-    # (lists write, probed-ids collect, two partition counts, final
-    # top-k), each re-running scan+fan-out+centroid scoring without
-    # the checkpoint; r16 sizes the checkpoint to its measured bytes
-    # so tiny corpora stop paying 32-task overhead per action.
+    # checkpointed_payload (r15/r16): this builder issues THREE actions
+    # (lists write, probed-ids collect, final top-k), each re-running
+    # scan+fan-out+centroid scoring without the checkpoint; r16 sizes
+    # the checkpoint to its measured bytes so tiny corpora stop paying
+    # 32-task overhead per action.
     vecs, _ = checkpointed_payload(_vecs(spark, sf_dir))
     cents = vecs.filter(F.col("vec_id") % 50 == 0).select(
         F.col("vec_id").alias("cent_id"), F.col("v").alias("cv")
     )
 
-    tag = os.path.basename(os.path.normpath(sf_dir)).replace(".", "_")
-    lists_path = f"{SINK_ROOT}/ivf_lists_{tag}"
-    shutil.rmtree(lists_path, ignore_errors=True)
+    lists_path = index_root(sf_dir, "ivf_lists")
     _nearest(vecs, cents, "vec_id", "v", 1).select(
         F.col("vec_id").alias("match_id"), F.col("v").alias("mv"), "cent_id"
     ).repartition("cent_id").write.partitionBy("cent_id").parquet(
@@ -695,19 +689,19 @@ def sim_ann_ivf_partitioned_lists(
     probed_ids = sorted(
         {r["cent_id"] for r in probes.select("cent_id").distinct().collect()}
     )
-    lists = spark.read.parquet(lists_path)
-    parts_total = lists.select("cent_id").distinct().count()
-    pruned = lists.filter(F.col("cent_id").isin(probed_ids))
-    # parts_read = partitions ACTUALLY read: probed centroids that own
-    # a non-empty inverted list. A probed centroid with no members
-    # (e.g. a near-duplicate centroid losing every rounded-cosine tie)
-    # has no partition directory — counting it would overstate the
-    # scan and disagree with the oracle's IN-lists intersection. Both
-    # sides are distributed COUNTS (the pruned scan's distinct
-    # partition values are <= |Q|*N_PROBE by construction) — nothing
-    # centroid-shaped is ever collected, so the pattern holds when
-    # centroid count grows with the corpus at 100 TB.
-    parts_read = pruned.select("cent_id").distinct().count()
+    pruned = spark.read.parquet(lists_path).filter(
+        F.col("cent_id").isin(probed_ids)
+    )
+    # Accounting from the partition listing, as the persisted PQ index
+    # does (sim_ann_ivf_pq_persisted): parts_total is the number of
+    # cent_id=... directories, parts_read the probed centroids that own
+    # one. A probed centroid with no members (e.g. a near-duplicate
+    # centroid losing every rounded-cosine tie) has no partition
+    # directory — counting it would overstate the scan and disagree
+    # with the oracle's IN-lists intersection. One LIST call, no job.
+    listed = list_partition_ids(lists_path)
+    parts_total = len(listed)
+    parts_read = len(listed & set(probed_ids))
 
     cand = probes.join(pruned, "cent_id").filter(
         F.col("query_id") != F.col("match_id")

@@ -704,14 +704,23 @@ _MH_DOC_SCHEMA = (
 )
 
 
+def _mh_payload(path: str) -> str:
+    """The verify payload table beside the band index at ``path``."""
+    return f"{path}__payload"
+
+
 def _mh_merge_batch(batch_df: DataFrame, batch_id: int, path: str) -> None:
     """One micro-batch of index maintenance: sign the batch's documents
     with the SAME codegen'd flat min-hash aggregates as the batch query
     (inside foreachBatch the frame is a batch frame, so no
     streaming-agg restrictions) and MERGE the (doc_id, band) rows into
     the manifest table at ``path``: only the touched buckets are
-    rewritten, in one atomic commit. Signing stays inline rather than
-    ``dedup.band_rows``: the upsert key needs the band position."""
+    rewritten, in one atomic commit. The batch's (doc_id, sgs) verify
+    payload merges into its own manifest table (``_mh_payload``) on
+    the same ``ingest_seq`` priority, so a re-ingested document's text
+    replaces its old one on the verify side as its bands do on the
+    index side. Signing stays inline rather than ``dedup.band_rows``:
+    the upsert key needs the band position."""
     from ..operators.manifest import merge_upsert_manifest  # noqa: PLC0415
     from ..plans.dedup import (  # noqa: PLC0415
         band_key_cols,
@@ -738,24 +747,24 @@ def _mh_merge_batch(batch_df: DataFrame, batch_id: int, path: str) -> None:
         F.lit(batch_id).cast("long"),
     )
     merge_upsert_manifest(bands, path, ["doc_id", "band"], "ingest_seq")
+    payload = docs.select(
+        "doc_id",
+        shingles_col(F.col("ws")).alias("sgs"),
+        F.lit(batch_id).cast("long").alias("ingest_seq"),
+    )
+    merge_upsert_manifest(payload, _mh_payload(path), ["doc_id"], "ingest_seq")
 
 
-def _mh_index_pairs(
-    spark: SparkSession, path: str, corpus: DataFrame
-) -> DataFrame:
+def _mh_index_pairs(spark: SparkSession, path: str) -> DataFrame:
     """Candidate/verify query against the MAINTAINED index: band
     self-join on the committed (doc_id, band_key) snapshot, exact-Jaccard
-    verification over shingle sets recomputed from the corpus rows."""
+    verification over the committed (doc_id, sgs) payload — each
+    document's latest ingested text."""
     from ..operators.manifest import read_table  # noqa: PLC0415
-    from ..plans.dedup import (  # noqa: PLC0415
-        band_candidates,
-        shingles_col,
-        verify_pairs,
-        words_col,
-    )
+    from ..plans.dedup import band_candidates, verify_pairs  # noqa: PLC0415
 
     index = read_table(spark, path).select("doc_id", "band_key")
-    sh = corpus.select("doc_id", shingles_col(words_col()).alias("sgs"))
+    sh = read_table(spark, _mh_payload(path)).select("doc_id", "sgs")
     return verify_pairs(band_candidates(index), sh, 0.8)
 
 
@@ -770,10 +779,13 @@ def _mh_index_pairs(
     "computes signatures with the SAME codegen'd flat min-hash "
     "aggregates as the batch query (inside foreachBatch the frame is "
     "a batch frame, so no streaming-agg restrictions), rewrites only "
-    "the buckets its keys touch and commits them atomically; a "
-    "re-ingested document's new bands replace its old ones. The "
-    "candidate/verify query then runs against the MAINTAINED index, "
-    "never recomputing signatures for old documents — the batch "
+    "the buckets its keys touch and commits them atomically, and "
+    "merges the batch's (doc_id, shingles) verify payload into a "
+    "second manifest table the same way; a re-ingested document's "
+    "new bands and new text replace its old ones. The "
+    "candidate/verify query then runs against the MAINTAINED index "
+    "and payload, never recomputing signatures or shingles for old "
+    "documents — the batch "
     "exhaustive-Jaccard oracle proves index-served pairs == "
     "recompute-from-scratch pairs. This is how a 100 TB corpus "
     "absorbs daily increments: signature cost is per-NEW-document, "
@@ -807,13 +819,7 @@ def streaming_minhash_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         .start()
     )
     q.awaitTermination()
-
-    # batch verify side reads the SAME file set as the stream (the
-    # full corpus incl. increments), so candidate texts always resolve
-    corpus = spark.read.schema(_MH_DOC_SCHEMA).parquet(
-        f"{sf_dir}/documents*.parquet"
-    )
-    return _mh_index_pairs(spark, path, corpus)
+    return _mh_index_pairs(spark, path)
 
 
 @register(
@@ -875,9 +881,7 @@ def streaming_minhash_ingest_restart(
         f"{root}/ckpt",
         lambda b, bid: _mh_merge_batch(b, bid, path),
     )
-
-    corpus = spark.read.schema(_MH_DOC_SCHEMA).parquet(f"{root}/arrivals")
-    return _mh_index_pairs(spark, path, corpus)
+    return _mh_index_pairs(spark, path)
 
 
 @register(

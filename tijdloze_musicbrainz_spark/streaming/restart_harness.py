@@ -1,18 +1,24 @@
-"""Shared injected-failure + checkpoint-restart driver for the index
-restart proofs (r10 verdict item 8 — the lifecycle scaffolding both
-index tiers were implementing twice).
+"""Shared injected-failure + checkpoint-restart driver for the
+streaming restart proofs (r10 verdict item 8 — the lifecycle
+scaffolding the index tiers were implementing separately).
 
-Both streaming index maintainers prove the same operability contract:
-a micro-batch ingest can die on a TORN COMMIT (batch data fully
-written/merged, Structured Streaming offset NOT committed) and a
-restart from the same checkpoint replays that batch idempotently —
+The three streaming index maintainers prove the same operability
+contract: a micro-batch ingest can die on a TORN COMMIT (the batch's
+transaction committed, the Structured Streaming offset NOT) and a
+restart from the same checkpoint replays that batch with no effect on
+the final store. Each proof's callback is its tier's own committed
+write, the one its clean ingest uses, and each is an idempotent sink:
 `streaming_ann_ingest_restart` (plans/similarity/pq_lifecycle.py,
-idempotent per-batch partition OVERWRITE) and
-`streaming_minhash_ingest_restart` (streaming/jobs.py, idempotent
-batch-id-priority MERGE). The proof driver — stage files, 1 file per
-trigger, crash after the target batch's write, assert the failure
-fired, restart from the same checkpoint, drain — is identical; only
-the per-batch ingest write differs, so it is the callback.
+`_pq_ingest_batch`) and `streaming_cluster_ingest_restart`
+(plans/cc_index.py, `_ingest_and_merge_generation`) run one snapshot-
+committed generation per micro-batch, which a replay of an already
+committed generation leaves untouched; `streaming_minhash_ingest_restart`
+(streaming/jobs.py) runs a batch-id-priority manifest MERGE, which a
+replay re-resolves to the same winners. The proof driver — stage
+files, 1 file per trigger, crash after the target batch's write,
+assert the failure fired, restart from the same checkpoint, drain —
+is identical; only the per-batch ingest write differs, so it is the
+callback.
 """
 
 from __future__ import annotations
@@ -52,24 +58,34 @@ def ingest_with_injected_restart(
             crash["armed"] = False
             raise RuntimeError(CRASH_MSG)
 
-    def run_stream() -> None:
-        q = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage)
-            .writeStream.foreachBatch(guarded)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
     try:
-        run_stream()
+        drain(spark, schema, stage, checkpoint, guarded)
         raise AssertionError("injected failure did not fire")
     except StreamingQueryException as exc:
         if CRASH_MSG not in str(exc):
             raise
     # restart from the SAME checkpoint: the crash batch replays
     # (idempotent write), remaining batches drain, availableNow stops
-    run_stream()
+    drain(spark, schema, stage, checkpoint, guarded)
+
+
+def drain(
+    spark: SparkSession,
+    schema,
+    stage: str,
+    checkpoint: str,
+    ingest: Callable[[DataFrame, int], None],
+) -> None:
+    """Drain the staged files at ``stage`` through ``ingest`` one file
+    per micro-batch (maxFilesPerTrigger=1, availableNow), resuming from
+    ``checkpoint``."""
+    (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(stage)
+        .writeStream.foreachBatch(ingest)
+        .option("checkpointLocation", checkpoint)
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination()
+    )

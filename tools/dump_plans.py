@@ -8,7 +8,8 @@ named queries, one file each, for a before/after comparison:
 
     python tools/dump_plans.py --out DIR --tag before [--sf DIR] NAME ...
 
-writes DIR/<name>_<tag>.txt. Expression and plan ids are renumbered in
+writes DIR/<name>_<tag>.txt; ``--sf`` defaults to /root/testdata/sf0.01,
+the full sweep's tables (every table, events included). Expression and plan ids are renumbered in
 order of first appearance, so two builds of the same plan give the same
 file and ``diff`` shows only real plan changes.
 """
@@ -379,10 +380,12 @@ AUDITED = {
     ),
     "streaming_ann_ingest_restart": (
         "Audit (r10): the plan shown is the post-restart stored-index "
-        "query (probes -> partition-pruned code lists -> broadcast ADC "
-        "-> shortlist re-rank); the ingest itself runs as foreachBatch "
-        "micro-batches whose idempotent per-batch overwrite "
-        "(ingest_batch=<id> subtree) + checkpoint replay is the "
+        "query (probes -> partition-pruned code lists of every "
+        "committed run -> broadcast ADC -> shortlist re-rank); the "
+        "ingest itself runs as foreachBatch micro-batches of the "
+        "index's own snapshot-committed generation transaction "
+        "(one lists_b<id> run each), which a replay of a committed "
+        "generation leaves untouched — with checkpoint replay, the "
         "exactly-once contract proved by the oracle row."
     ),
     "corpus_incremental_refresh_e2e": (
@@ -481,8 +484,9 @@ def main() -> None:
     ap.add_argument("names", nargs="*")
     ap.add_argument("--out")
     ap.add_argument("--tag", default="plan")
-    # named dumps default to the benchmark's scale and tables
-    ap.add_argument("--sf", default=os.path.join("perfbench", "data", "sf0.01"))
+    # named dumps default to the full sweep's tables: the benchmark's
+    # copy holds only the nine tables its workloads read (no events)
+    ap.add_argument("--sf", default="/root/testdata/sf0.01")
     args = ap.parse_args()
 
     sys.path.insert(0, ".")

@@ -662,10 +662,10 @@ def main() -> None:
         )
 
         tag = os.path.basename(os.path.normpath(sf_dir))
-        shutil.rmtree(f"{SINK_ROOT}/minhash_index_{tag}", ignore_errors=True)
-        shutil.rmtree(
-            f"{SINK_ROOT}/minhash_index_{tag}__checkpoint", ignore_errors=True
-        )
+        for suffix in ("", "__checkpoint", "__payload"):
+            shutil.rmtree(
+                f"{SINK_ROOT}/minhash_index_{tag}{suffix}", ignore_errors=True
+            )
 
     RESETS = {"streaming_minhash_index": _reset_minhash_index}
 
