@@ -93,9 +93,9 @@ HEADLINERS = [
     "sim_ann_ivf_pq",
     "s_stats_skipping_prune",
     # r9: the four r8b components newly rotated into the driver window
-    # get bench rows too — partition-pruned IVF lists (write + pruned
-    # read), the md5-keyed exact dedup (32-byte shuffle key), the
-    # two-pass equi-width histogram, and IGNORE-NULLS gap-fill
+    # get bench rows too — cent_id-keyed IVF lists (bucketed write +
+    # pushed-down read), the md5-keyed exact dedup (32-byte shuffle
+    # key), the two-pass equi-width histogram, and IGNORE-NULLS gap-fill
     "sim_ann_ivf_partitioned_lists",
     "dedup_exact_hash_first_wins",
     "events_histogram_equiwidth",

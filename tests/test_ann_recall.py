@@ -180,13 +180,18 @@ def test_ivf_pq_trained_recall_not_worse(spark, sf_dir):
 def test_ivf_pq_persisted_matches_in_memory_and_prunes(spark, sf_dir):
     """The persisted IVF-PQ index must return EXACTLY the in-memory
     sim_ann_ivf_pq top-k (same codes, same ADC, same re-rank — only
-    the storage location differs), its query path must read the code
-    lists through a cent_id PartitionFilter (directory pruning), and
-    the parts accounting must show a strict subset was read."""
+    the storage location differs), its query path must push the probed
+    ids into every stored code-list run's scan as In(cent_id, ...)
+    (bucket-file and row-group pruning), and the parts accounting must
+    show a strict subset was read."""
     from tijdloze_musicbrainz_spark.plans import REGISTRY
+    from tijdloze_musicbrainz_spark.plans.lifecycle import index_root
     from tijdloze_musicbrainz_spark.plans.similarity import (
         MAX_QUERIES,
         N_PROBE,
+    )
+    from tijdloze_musicbrainz_spark.sources.commit_log import (
+        current_snapshot,
     )
 
     mem = {
@@ -209,27 +214,36 @@ def test_ivf_pq_persisted_matches_in_memory_and_prunes(spark, sf_dir):
     if pt > MAX_QUERIES * N_PROBE:
         assert pr < pt
 
+    root = index_root(sf_dir, "ivfpq_index", fresh=False)
     plan = out._jdf.queryExecution().executedPlan().toString()
-    pf = [
-        line
-        for line in plan.splitlines()
-        if "PartitionFilters" in line and "cent_id" in line
-    ]
-    assert pf, "no cent_id PartitionFilters in the persisted-index scan"
+    for run in current_snapshot(root)["lists"]:
+        scans = [
+            line for line in plan.splitlines()
+            if "FileScan" in line and f".{run}[" in line
+        ]
+        assert scans, f"no scan of the stored run {run}"
+        for line in scans:
+            pushed = line.split("PushedFilters: ", 1)[1]
+            assert "In(cent_id" in pushed, line
 
 
 def test_ivf_pq_compaction_collapses_files_preserving_results(
     spark, sf_dir
 ):
     """Compaction is a LAYOUT event: after sim_ann_ivf_pq_compacted
-    runs, the compacted lists hold exactly ONE parquet file per
-    centroid partition (the append had left >1 in the delta-touched
-    partitions), total row count is preserved, and the query result
-    set equals the uncompacted append variant's."""
+    runs, the compacted code-list run holds exactly ONE parquet file
+    per bucket (the base run plus the ingested generation had left
+    more than one in some bucket), total row count is preserved, and
+    the query result set equals the uncompacted append variant's."""
+    import collections
     import os
+    import re
 
     from tijdloze_musicbrainz_spark.plans import REGISTRY
-    from tijdloze_musicbrainz_spark.plans.etl import SINK_ROOT
+    from tijdloze_musicbrainz_spark.plans.lifecycle import index_root
+    from tijdloze_musicbrainz_spark.plans.similarity import (
+        pq_lifecycle as pq,
+    )
 
     appended = {
         tuple(r) for r in
@@ -240,39 +254,91 @@ def test_ivf_pq_compaction_collapses_files_preserving_results(
     )
     assert {tuple(r) for r in compacted_rows} == appended
 
-    tag = os.path.basename(os.path.normpath(sf_dir)).replace(".", "_")
-    root = f"{SINK_ROOT}/ivfpq_compact_{tag}"
+    root = index_root(sf_dir, "ivfpq_compact", fresh=False)
 
-    def files_per_part(d):
-        out = {}
-        for p in os.listdir(d):
-            if p.startswith("cent_id="):
-                out[p] = len(
-                    [f for f in os.listdir(os.path.join(d, p))
-                     if f.endswith(".parquet")]
-                )
+    def files_per_bucket(subs):
+        # bucketed file names end in _<bucket id>.c000[.codec].parquet
+        out = collections.Counter()
+        for sub in subs:
+            for f in os.listdir(f"{root}/{sub}"):
+                m = re.search(r"_(\d{5})\.c\d{3}.*\.parquet$", f)
+                if m:
+                    out[int(m.group(1))] += 1
         return out
 
-    # pre-compaction: TWO runs (base lists + the ingested generation's
-    # lists_g1), each partitioned by cent_id — the r13 crash-atomic
-    # layout's version of fragmentation is per-partition file counts
-    # SUMMED ACROSS RUNS; the compactor folds the run set into one
-    # store with exactly one file per partition
-    frag = files_per_part(f"{root}/lists")
-    for part, n in files_per_part(f"{root}/lists_g1").items():
-        frag[part] = frag.get(part, 0) + n
-    comp = files_per_part(f"{root}/lists_compacted")
-    assert set(comp) == set(frag)  # same partitions survive
+    # pre-compaction: TWO runs (the base lists + the ingested
+    # generation's lists_g1) — the r13 crash-atomic layout's version of
+    # fragmentation is per-bucket file counts SUMMED ACROSS RUNS; the
+    # compactor folds the run set into one run with exactly one file
+    # per bucket
+    frag = files_per_bucket(["lists", "lists_g1"])
+    comp = files_per_bucket(["lists_compacted"])
+    assert set(comp) == set(frag)  # same buckets survive
     assert all(n == 1 for n in comp.values()), comp
-    assert any(n > 1 for n in frag.values()), (
-        "ingest should have fragmented at least one partition"
-    )
+    assert any(n > 1 for n in frag.values()), frag
     rows_frag = (
-        spark.read.parquet(f"{root}/lists").count()
-        + spark.read.parquet(f"{root}/lists_g1").count()
+        spark.table(pq._pq_run(root, "lists")).count()
+        + spark.table(pq._pq_run(root, "lists_g1")).count()
     )
-    rows_comp = spark.read.parquet(f"{root}/lists_compacted").count()
+    rows_comp = spark.table(pq._pq_run(root, "lists_compacted")).count()
     assert rows_frag == rows_comp
+
+
+def test_ivf_pq_stored_scan_prunes_rows(spark):
+    """The probed-id pushdown prunes the stored scan: with the split
+    size lowered so the code-list run has several buckets, the run's
+    scan outputs fewer rows than the run holds (bucket files and row
+    groups without a probed centroid are never read). The scan is
+    broadcast, so Spark disables bucketed reads there and reports no
+    SelectedBucketsCount — the scan's numOutputRows is the evidence.
+    At sf0.01, where the queries probe a strict subset of the lists."""
+    import os
+
+    from tijdloze_musicbrainz_spark.plans import REGISTRY
+    from tijdloze_musicbrainz_spark.plans.lifecycle import index_root
+    from tijdloze_musicbrainz_spark.plans.similarity import (
+        pq_lifecycle as pq,
+    )
+    from tijdloze_musicbrainz_spark.sources.commit_log import (
+        current_snapshot,
+    )
+
+    sf_dir = os.path.join(
+        os.path.dirname(os.path.abspath(__file__)),
+        "..", "perfbench", "data", "sf0.01",
+    )
+    key = "spark.sql.files.maxPartitionBytes"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "4096")
+    try:
+        out = REGISTRY["sim_ann_ivf_pq_persisted"].builder(spark, sf_dir)
+        rows = out.collect()
+    finally:
+        spark.conf.set(key, old)
+    root = index_root(sf_dir, "ivfpq_index", fresh=False)
+    run = pq._pq_run(root, "lists")
+    assert current_snapshot(root)["num_buckets"] >= 2
+    assert rows[0]["parts_read"] < rows[0]["parts_total"]
+
+    def nodes(node):
+        yield node
+        cls = node.getClass().getSimpleName()
+        if cls == "AdaptiveSparkPlanExec":
+            yield from nodes(node.executedPlan())
+        elif cls.endswith("QueryStageExec"):
+            yield from nodes(node.plan())
+        kids = node.children()
+        for i in range(kids.size()):
+            yield from nodes(kids.apply(i))
+
+    scanned = [
+        n.metrics().apply("numOutputRows").value()
+        for n in nodes(out._jdf.queryExecution().executedPlan())
+        if n.nodeName().startswith("Scan parquet") and run in n.nodeName()
+    ]
+    assert scanned, "no stored code-list scan in the executed plan"
+    n_run = spark.table(run).count()
+    assert all(0 < n < n_run for n in scanned), (scanned, n_run)
 
 
 def test_streaming_ann_ingest_is_multi_batch_and_equivalent(
@@ -313,6 +379,9 @@ def test_streaming_ann_restart_commits_through_the_log(spark, sf_dir):
 
     from tijdloze_musicbrainz_spark.plans import REGISTRY
     from tijdloze_musicbrainz_spark.plans.lifecycle import index_root
+    from tijdloze_musicbrainz_spark.plans.similarity import (
+        pq_lifecycle as pq,
+    )
     from tijdloze_musicbrainz_spark.sources.commit_log import (
         current_snapshot,
     )
@@ -323,16 +392,15 @@ def test_streaming_ann_restart_commits_through_the_log(spark, sf_dir):
         [f for f in os.listdir(f"{root}/arrivals") if f.endswith(".parquet")]
     )
     assert n_files >= 2, n_files
-    assert current_snapshot(root)["list_dirs"] == ["lists"] + [
-        f"lists_b{i}" for i in range(n_files)
+    assert current_snapshot(root)["lists"] == [
+        pq._pq_run(root, sub)
+        for sub in ["lists"] + [f"lists_b{i}" for i in range(n_files)]
     ]
 
 
-def test_ivf_partitioned_lists_job_budget(spark):
-    """Job budget of the IVF list-store build at sf0.01, counted with
-    statusTracker job groups: the lists write, the probed-ids collect
-    and the payload checkpoint. parts_total/parts_read come from the
-    partition listing, so no count job rides the build."""
+def _build_jobs(spark, name: str) -> int:
+    """Spark jobs one build of ``name`` launches at sf0.01, counted
+    with statusTracker job groups."""
     import os
 
     from tijdloze_musicbrainz_spark.plans import REGISTRY
@@ -345,36 +413,33 @@ def test_ivf_partitioned_lists_job_budget(spark):
     # the catalog's one-time schema read belongs to the session
     t(spark, sf, "embeddings")
     sc = spark.sparkContext
-    group = "ivf-lists-budget-build"
+    group = f"{name}-budget-build"
     sc.setJobGroup(group, "job-budget probe")
     try:
-        REGISTRY["sim_ann_ivf_partitioned_lists"].builder(spark, sf)
+        REGISTRY[name].builder(spark, sf)
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
-    n_build = len(sc.statusTracker().getJobIdsForGroup(group))
-    assert n_build <= 8, n_build
+    return len(sc.statusTracker().getJobIdsForGroup(group))
 
 
-def test_parts_accounting_reads_the_catalog_not_the_store(spark, tmp_path):
-    """parts_total/parts_read for the persisted index come from
-    list_partition_ids — one directory listing of the hive-style
-    store, never a distinct() scan over the code lists (r11 verdict
-    nit). Pin that the listing agrees with the data and is computed
-    without touching Spark at all (the helper takes only a path)."""
-    from pyspark.sql import functions as F
+def test_ivf_partitioned_lists_job_budget(spark):
+    """Job budget of the IVF list-store build at sf0.01: the payload
+    checkpoint, the list-run write and the probed-ids collect.
+    parts_total/parts_read come from the centroid ids observed on the
+    write, so no count or listing job rides the build."""
+    n_build = _build_jobs(spark, "sim_ann_ivf_partitioned_lists")
+    assert n_build <= 6, n_build
 
-    from tijdloze_musicbrainz_spark.plans.lifecycle import (
-        list_partition_ids,
-    )
 
-    path = str(tmp_path / "lists")
-    spark.range(0, 100).withColumn(
-        "cent_id", (F.col("id") % 7).cast("long")
-    ).write.partitionBy("cent_id").parquet(path)
-    listed = list_partition_ids(path)
-    assert listed == set(range(7))
-    # success/metadata artifacts (_SUCCESS, dotfiles) must be ignored
-    assert all(isinstance(x, int) for x in listed)
+def test_ivf_pq_persisted_and_append_job_budgets(spark):
+    """Build-job ceilings of the persisted and appended IVF-PQ indexes
+    at sf0.01. The vector count, the centroid ids and n_appended ride
+    the centroid and run writes as observations, so no count job
+    remains."""
+    n_persisted = _build_jobs(spark, "sim_ann_ivf_pq_persisted")
+    n_append = _build_jobs(spark, "sim_ann_ivf_pq_append")
+    assert n_persisted <= 26, n_persisted
+    assert n_append <= 35, n_append
 
 
 def test_recall_floor_holds_on_the_scale_curve():

@@ -187,10 +187,7 @@ def test_chaos_ann_three_generations_reader_loser_kill(
     base = pq._pq_vecs(spark, sf_dir)
     subs = pq._pq_subs(base)
     root = index_root(sf_dir, "ivfpq_chaos")
-    pq._pq_write_index(
-        base, subs, pq._pq_seed_codebook(base, subs), pq._ivf_cents(base),
-        root,
-    )
+    pq._pq_write_index(base, subs, pq._pq_seed_codebook(base, subs), root)
     delta = pq._pq_delta(base)
     cb = spark.read.parquet(f"{root}/codebook")
     cents = spark.read.parquet(f"{root}/cents")
@@ -198,8 +195,8 @@ def test_chaos_ann_three_generations_reader_loser_kill(
 
     def check_invariant() -> int:
         snap = current_snapshot(root)
-        for d in snap["list_dirs"]:
-            spark.read.parquet(f"{root}/{d}").count()
+        for run in snap["lists"]:
+            spark.table(run).count()
         return current_snapshot_version(root)
 
     # gen 1: reader races the ingest
@@ -232,8 +229,9 @@ def test_chaos_ann_three_generations_reader_loser_kill(
     pq._pq_ingest_batch(slices[2], cb, cents, root, gen="g3")
     assert not os.path.exists(lock)
     assert check_invariant() == 3
-    assert current_snapshot(root)["list_dirs"] == [
-        "lists", "lists_g1", "lists_g2", "lists_g3",
+    assert current_snapshot(root)["lists"] == [
+        pq._pq_run(root, sub)
+        for sub in ("lists", "lists_g1", "lists_g2", "lists_g3")
     ]
 
     corpus = base.select("vec_id", "v").unionByName(
@@ -278,10 +276,7 @@ def test_concurrent_multi_tier_ingest_snapshot_isolation(spark, sf_dir):
     base = pq._pq_vecs(spark, sf_dir)
     subs = pq._pq_subs(base)
     pq_root = index_root(sf_dir, "ivfpq_conc")
-    pq._pq_write_index(
-        base, subs, pq._pq_seed_codebook(base, subs), pq._ivf_cents(base),
-        pq_root,
-    )
+    pq._pq_write_index(base, subs, pq._pq_seed_codebook(base, subs), pq_root)
     pq_delta = pq._pq_delta(base)
     cb = spark.read.parquet(f"{pq_root}/codebook")
     cents = spark.read.parquet(f"{pq_root}/cents")

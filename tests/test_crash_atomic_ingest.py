@@ -255,9 +255,7 @@ def test_ann_kill_mid_ingest_leaves_old_snapshot_then_recovery_converges(
     base = pq._pq_vecs(spark, sf_dir)
     subs = pq._pq_subs(base)
     root = index_root(sf_dir, "ivfpq_crash")
-    pq._pq_write_index(
-        base, subs, pq._pq_seed_codebook(base, subs), pq._ivf_cents(base), root
-    )
+    pq._pq_write_index(base, subs, pq._pq_seed_codebook(base, subs), root)
     delta = pq._pq_delta(base)
     cb = spark.read.parquet(f"{root}/codebook")
     cents = spark.read.parquet(f"{root}/cents")
@@ -274,7 +272,7 @@ def test_ann_kill_mid_ingest_leaves_old_snapshot_then_recovery_converges(
 
     # reader view: base-only snapshot, the dead writer's run invisible
     snap = current_snapshot(root)
-    assert snap["list_dirs"] == ["lists"]
+    assert snap["lists"] == [pq._pq_run(root, "lists")]
     assert os.path.exists(f"{root}/lists_g1"), "crash fired too early"
 
     # hard-kill debris + recovery replay
@@ -283,7 +281,9 @@ def test_ann_kill_mid_ingest_leaves_old_snapshot_then_recovery_converges(
         f.write(f"pid={_dead_pid()} owner=pq_crashed\n")
     pq._pq_ingest_batch(delta, cb, cents, root)
     assert not os.path.exists(lock)
-    assert current_snapshot(root)["list_dirs"] == ["lists", "lists_g1"]
+    assert current_snapshot(root)["lists"] == [
+        pq._pq_run(root, "lists"), pq._pq_run(root, "lists_g1"),
+    ]
 
     corpus = base.select("vec_id", "v").unionByName(delta.select("vec_id", "v"))
     topk, _, _, _ = pq._pq_query_stored(spark, base, subs, root, corpus)

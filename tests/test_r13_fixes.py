@@ -1,5 +1,5 @@
 """Pinned tests for the r12 ADVICE items + verdict item 6 (the
-sidecar/partition-listing hardening and the meta-blocking sentinel
+sidecar hardening and the meta-blocking sentinel
 accounting row).
 
 - NULL staged keys must be dropped, not crash the ingest sort
@@ -9,8 +9,6 @@ accounting row).
   pinned by counting the Spark jobs the sidecar write launches: the
   approximate count is observed on the staged write and passed in, so
   the over-cap path launches none.
-- Hive artifacts with non-integer partition values must be skipped by
-  the catalog listing, not raise (ADVICE: lifecycle.list_partition_ids).
 - The meta-blocked Jaccard drop counters must reach the hashed result
   even when NO pair clears the threshold — via the always-present
   sentinel row, differentially checked against the oracle on a
@@ -29,7 +27,6 @@ from pyspark.sql import functions as F
 from tijdloze_musicbrainz_spark.plans.lifecycle import (
     _DELTA_KEYS_SIDECAR,
     PROBE_PUSHDOWN_MAX_KEYS,
-    list_partition_ids,
     write_delta_key_manifest,
 )
 
@@ -107,22 +104,6 @@ def test_sidecar_overcap_delta_skips_exact_distinct_shuffle(
     # all, while the under-cap path pays the exact distinct pass
     assert n_over == 0, n_over
     assert n_under > 0, n_under
-
-
-def test_list_partition_ids_skips_non_integer_hive_artifacts(tmp_path):
-    for name in (
-        "part=3",
-        "part=7",
-        "part=-2",
-        "part=__HIVE_DEFAULT_PARTITION__",  # hive's null partition value
-        "part=",  # degenerate empty value
-        "_SUCCESS",
-        ".hidden=9",
-    ):
-        os.makedirs(tmp_path / name)
-    (tmp_path / "stray_file.txt").write_text("x")
-    # pre-fix: int('__HIVE_DEFAULT_PARTITION__') -> ValueError
-    assert list_partition_ids(str(tmp_path)) == {3, 7, -2}
 
 
 def test_meta_blocked_sentinel_survives_empty_pair_set(spark, tmp_path):

@@ -515,14 +515,18 @@ def test_pushdown_keys_cost_bound(tmp_path, spark):
 
 
 def test_vacuum_ann_tier_after_compaction(spark, sf_dir):
-    """The ANN tier's manifests name root-relative run dirs
-    (list_dirs), so vacuum_unreferenced works with the identity
-    mapping: after append + compaction, keep-last-1 vacuum must delete
-    the superseded 'lists' and 'lists_g1' runs and the stored query
-    must answer identically from the compacted snapshot."""
+    """The ANN tier's manifests name its code-list run tables
+    ``<root basename>_<dir>``, so vacuum_unreferenced maps each back to
+    its run dir by stripping the prefix: after append + compaction,
+    keep-last-1 vacuum must delete the superseded 'lists' and
+    'lists_g1' runs and the stored query must answer identically from
+    the compacted snapshot."""
     from pyspark.sql import functions as F
 
-    from tijdloze_musicbrainz_spark.plans.lifecycle import index_root
+    from tijdloze_musicbrainz_spark.plans.lifecycle import (
+        compact_and_commit,
+        index_root,
+    )
     from tijdloze_musicbrainz_spark.plans.similarity import (
         pq_lifecycle as pq,
     )
@@ -530,10 +534,7 @@ def test_vacuum_ann_tier_after_compaction(spark, sf_dir):
     base = pq._pq_vecs(spark, sf_dir)
     subs = pq._pq_subs(base)
     root = index_root(sf_dir, "ivfpq_vac")
-    pq._pq_write_index(
-        base, subs, pq._pq_seed_codebook(base, subs), pq._ivf_cents(base),
-        root,
-    )
+    pq._pq_write_index(base, subs, pq._pq_seed_codebook(base, subs), root)
     delta = pq._pq_delta(base)
     pq._pq_ingest_batch(
         delta,
@@ -547,26 +548,15 @@ def test_vacuum_ann_tier_after_compaction(spark, sf_dir):
     topk, _, _, _ = pq._pq_query_stored(spark, base, subs, root, corpus)
     before = {tuple(r) for r in topk.collect()}
 
-    from tijdloze_musicbrainz_spark.plans.lifecycle import compact_partitioned
-    from tijdloze_musicbrainz_spark.sources.bucketing import (
-        exclusive_append,
+    compact_and_commit(
+        spark, root, "lists", "cent_id",
+        pq._pq_run(root, "lists_compacted"), f"{root}/lists_compacted",
     )
 
-    with exclusive_append(root, owner="pq_vac_compact") as lease:
-        snap = current_snapshot(root)
-        compact_partitioned(
-            spark,
-            [f"{root}/{d}" for d in snap["list_dirs"]],
-            f"{root}/lists_compacted",
-            "cent_id",
-        )
-        commit_snapshot(
-            root, {**snap, "list_dirs": ["lists_compacted"]}, lease=lease
-        )
-
+    prefix = pq._pq_run(root, "")
     report = vacuum_unreferenced(
         root,
-        lambda s: set(s["list_dirs"]),
+        lambda s: {run[len(prefix):] for run in s["lists"]},
         protected=("codebook", "cents"),
         keep_snapshots=1,
     )

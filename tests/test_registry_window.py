@@ -83,17 +83,14 @@ def _stale_docs(root: str) -> tuple[int, int, list[str]]:
     that do not state both). Three entries register only when the
     reference golden CSV exists, so the docs state the size with and
     without them; the expected counts come from the live registry plus
-    that flag, whichever way this checkout has it."""
+    the gated specs, whichever way this checkout has it."""
     import os
     import re
 
-    from tijdloze_musicbrainz_spark.plans.benchmark_real import (
-        CSV_GATED,
-        REAL_CSV_PRESENT,
-    )
+    from tijdloze_musicbrainz_spark.plans.benchmark_real import CSV_GATED
 
     gated = len(CSV_GATED)
-    n = len(REGISTRY) + (0 if REAL_CSV_PRESENT else gated)
+    n = len(REGISTRY.keys() | CSV_GATED.keys())
     both = rf"{n} (?:registered )?queries \({n - gated} without the reference golden CSV\)"
     expectations = {
         "README.md": rf"\b{both}",
@@ -145,6 +142,22 @@ def test_doc_count_check_flags_a_stale_doc(tmp_path):
         )
     )
     assert _stale_docs(str(tmp_path))[2] == ["QUERIES.md"]
+
+
+def test_query_inventory_matches_committed_file():
+    """QUERIES.md is what ``tools/query_inventory.py`` prints, gated
+    entries included, on a box with or without the reference golden
+    CSV: ``--check`` exits 0 only when the committed file matches."""
+    import os
+    import subprocess
+    import sys
+
+    root = os.path.join(os.path.dirname(__file__), "..")
+    out = subprocess.run(
+        [sys.executable, "tools/query_inventory.py", "--check"],
+        cwd=root, capture_output=True, text=True, timeout=300,
+    )
+    assert out.returncode == 0, out.stdout[-3000:] + out.stderr[-3000:]
 
 
 def test_no_rows_only_anywhere():

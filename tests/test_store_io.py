@@ -166,9 +166,8 @@ def test_append_lock_mutual_exclusion_through_fake(fake_io):
         assert "w3" in fake_io.objs[f"{loc}/_APPEND_LOCK"]
 
 
-def test_sidecar_and_partition_listing_through_fake(fake_io, spark):
+def test_sidecar_through_fake(fake_io, spark):
     from tijdloze_musicbrainz_spark.plans.lifecycle import (
-        list_partition_ids,
         read_delta_key_manifest,
         write_delta_key_manifest,
     )
@@ -179,10 +178,6 @@ def test_sidecar_and_partition_listing_through_fake(fake_io, spark):
     write_delta_key_manifest(staged, "band_key", "/fake/stage", 2)
     assert read_delta_key_manifest("/fake/stage", "band_key") == [10, 20]
     assert read_delta_key_manifest("/fake/stage", "other_col") is None
-
-    for key in ("part=3/f.parquet", "part=7/f.parquet", "_SUCCESS"):
-        fake_io.put_atomic(f"/fake/store/{key}", "x")
-    assert list_partition_ids("/fake/store") == {3, 7}
 
 
 def test_manifest_table_metadata_through_fake(fake_io, spark, tmp_path):

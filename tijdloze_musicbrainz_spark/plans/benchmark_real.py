@@ -50,7 +50,7 @@ from ..functions.normalize import search_key, search_key_sql
 from ..sources.readers import read_csv_golden
 from .fuzzy import fuzzy_key_join, rank_candidates, score_candidates
 from .golden_shape import GOLDEN_SHAPE_SCHEMA
-from .registry import register
+from .registry import REGISTRY, QuerySpec, register
 from .util import eager_checkpoint
 
 # resolvable from the environment so a machine without the reference
@@ -435,24 +435,31 @@ best AS (
 )"""
 
 
-# Entries that register only when the golden CSV exists, present or not.
-CSV_GATED: list[str] = []
+# The specs of the entries that register only when the golden CSV
+# exists, kept whether it exists or not (tools/query_inventory.py lists
+# them on any box).
+CSV_GATED: dict[str, QuerySpec] = {}
 
 
 def _register_if_csv_present(name: str, *args, **kwargs):
     """Register only when the golden CSV exists: a checkout without the
     reference repo keeps a fully working registry minus these entries
-    (r6 ADVICE item 4)."""
-    CSV_GATED.append(name)
-    if REAL_CSV_PRESENT:
-        return register(name, *args, **kwargs)
-    return lambda fn: fn
+    (r6 ADVICE item 4). The spec lands in CSV_GATED either way."""
+
+    def wrap(fn):
+        register(name, *args, **kwargs)(fn)
+        CSV_GATED[name] = REGISTRY[name]
+        if not REAL_CSV_PRESENT:
+            del REGISTRY[name]
+        return fn
+
+    return wrap
 
 
 def registry_sizes(registry) -> tuple[int, int]:
     """(size with the golden CSV, size without it) of ``registry``,
     whichever of the two this checkout has."""
-    n_with = len(registry) + (0 if REAL_CSV_PRESENT else len(CSV_GATED))
+    n_with = len(registry.keys() | CSV_GATED.keys())
     return n_with, n_with - len(CSV_GATED)
 
 

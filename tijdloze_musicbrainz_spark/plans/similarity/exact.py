@@ -5,39 +5,24 @@ Arrow-batched pandas top-k, and int8 embedding quantization.
 
 from __future__ import annotations
 
-import random  # noqa: F401
-from pathlib import Path  # noqa: F401
+import pandas as pd
 
-import pandas as pd  # noqa: F401,TC002  (pandas_udf resolves 'pd.Series' hints at module scope)
-
-from pyspark.sql import Column, DataFrame, SparkSession, Window  # noqa: F401
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..registry import register
-from ..util import t  # noqa: F401
 
-from .common import (  # noqa: F401
-    BITS_PER_BAND,
-    DIM,
-    MAX_BRUTE_FORCE_N,
+from .common import (
     MAX_QUERIES,
-    N_PROBE,
-    N_SIM_BANDS,
     NEAR_DUP_BLOCKS,
-    NEAR_DUP_THRESHOLD,
-    PLANE_QUANT,
-    QUANT,
     TOP_K,
     _COS_SQL,
     _Q_SQL,
-    _cos_null_safe_sql,
     _guard_brute_force,
     _query_filter,
     _vecs,
     cosine,
-    dot,
 )
-
 
 
 @register(

@@ -5,45 +5,34 @@ partition-pruned materialized inverted lists.
 
 from __future__ import annotations
 
-import random  # noqa: F401
-from pathlib import Path  # noqa: F401
+import os
 
-import pandas as pd  # noqa: F401,TC002  (pandas_udf resolves 'pd.Series' hints at module scope)
+import pandas as pd
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window  # noqa: F401
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..lifecycle import index_root, list_partition_ids
+from ...sources.bucketing import split_bytes, split_count
+from ..lifecycle import index_root, write_run
 from ..registry import register
-from ..util import (  # noqa: F401
-    checkpointed_payload,
-    eager_checkpoint,
-    fan_out,
-    t,
-)
+from ..util import checkpointed_payload, fan_out
 
-from .common import (  # noqa: F401
-    BITS_PER_BAND,
+from .common import (
     DIM,
-    MAX_BRUTE_FORCE_N,
     MAX_QUERIES,
     N_PROBE,
-    N_SIM_BANDS,
-    NEAR_DUP_BLOCKS,
     NEAR_DUP_THRESHOLD,
-    PLANE_QUANT,
-    QUANT,
     TOP_K,
-    _COS_SQL,
     _Q_SQL,
     _cos_null_safe_sql,
-    _guard_brute_force,
     _query_filter,
     _vecs,
     cosine,
-    dot,
 )
 
+# One full-vector list row: match_id and cent_id (longs) plus the
+# DIM-double vector.
+_IVF_LIST_ROW_BYTES = 16 + 8 * DIM
 
 
 def _nearest(
@@ -145,8 +134,9 @@ QUALIFY row_number() OVER (
     "vector), corpus bucketed by nearest centroid (one broadcast "
     "scan), queries probe their N_PROBE nearest centroid buckets and "
     "re-rank with exact cosine. At 100 TB the inverted lists are "
-    "written partitioned by centroid id so a query touches only its "
-    "probed partitions (partition pruning on the list table).",
+    "stored by centroid id so a query touches only its probed lists "
+    "(sim_ann_ivf_partitioned_lists: a cent_id-keyed run read with "
+    "the probed ids pushed down).",
 )
 def sim_ann_ivf_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     # fan_out: the centroid-scoring passes are CPU-bound array math
@@ -640,18 +630,21 @@ FROM topk t CROSS JOIN probed pr CROSS JOIN parts pa
     "sim_ann_ivf_partitioned_lists",
     survey_ids=(),
     oracle=_IVF_PART_ORACLE,
-    doc="IVF with MATERIALIZED partitioned inverted lists — the scale "
-    "claim in sim_ann_ivf_bucketed's docstring ('at 100 TB the "
-    "inverted lists are written partitioned by centroid id so a "
-    "query touches only its probed partitions'), now a measured "
-    "fact: the lists are WRITTEN to parquet partitioned by cent_id, "
-    "the probed centroid ids (a bounded metadata collect, <= "
-    "|Q|*N_PROBE ids) become a partition-pruning IN filter on the "
-    "read, and parts_read/parts_total — computed from the SAME "
-    "assignment in the oracle — prove the scan touched only probed "
-    "directories (the explain shows the pruned PartitionFilters). "
-    "Top-k results are identical to the in-memory IVF; only the "
-    "storage layout changed, which is the point.",
+    doc="IVF with MATERIALIZED inverted lists — the scale claim in "
+    "sim_ann_ivf_bucketed's docstring ('at 100 TB the inverted lists "
+    "are stored by centroid id so a query touches only its probed "
+    "lists'), now a measured fact: the lists are WRITTEN as a "
+    "key-index run on cent_id (plans/lifecycle.py write_run — the "
+    "run layout of the PQ code lists and the MinHash/cc tiers: "
+    "bucketed and sorted on cent_id, one bucket per scan split), the "
+    "probed centroid ids (a bounded metadata collect, <= "
+    "|Q|*N_PROBE ids) are pushed into the scan as a literal "
+    "In(cent_id, ...) — Spark prunes bucket files and parquet skips "
+    "row groups holding no probed id — and parts_read/parts_total — "
+    "computed from the SAME assignment in the oracle — come from the "
+    "centroid-id set observed on the write (the explain shows the "
+    "pushed In filter). Top-k results are identical to the in-memory "
+    "IVF; only the storage layout changed, which is the point.",
 )
 def sim_ann_ivf_partitioned_lists(
     spark: SparkSession, sf_dir: str
@@ -663,17 +656,34 @@ def sim_ann_ivf_partitioned_lists(
     # (lists write, probed-ids collect, final top-k), each re-running
     # scan+fan-out+centroid scoring without the checkpoint; r16 sizes
     # the checkpoint to its measured bytes so tiny corpora stop paying
-    # 32-task overhead per action.
-    vecs, _ = checkpointed_payload(_vecs(spark, sf_dir))
+    # 32-task overhead per action. Its observed row count sizes the
+    # list run's buckets.
+    vecs, vecs_m = checkpointed_payload(_vecs(spark, sf_dir))
     cents = vecs.filter(F.col("vec_id") % 50 == 0).select(
         F.col("vec_id").alias("cent_id"), F.col("v").alias("cv")
     )
 
-    lists_path = index_root(sf_dir, "ivf_lists")
-    _nearest(vecs, cents, "vec_id", "v", 1).select(
-        F.col("vec_id").alias("match_id"), F.col("v").alias("mv"), "cent_id"
-    ).repartition("cent_id").write.partitionBy("cent_id").parquet(
-        lists_path
+    root = index_root(sf_dir, "ivf_lists")
+    run = f"{os.path.basename(root)}_lists"
+    # the centroid ids that own a list ride the write as an observation:
+    # a probed centroid with no members (e.g. a near-duplicate centroid
+    # losing every rounded-cosine tie) owns no list — counting it would
+    # overstate the scan and disagree with the oracle's IN-lists
+    # intersection
+    listed = Observation()
+    write_run(
+        _nearest(vecs, cents, "vec_id", "v", 1)
+        .select(
+            F.col("vec_id").alias("match_id"), F.col("v").alias("mv"),
+            "cent_id",
+        )
+        .observe(listed, F.collect_set("cent_id").alias("cent_ids")),
+        run,
+        root,
+        "cent_id",
+        split_count(
+            vecs_m["n_rows"] * _IVF_LIST_ROW_BYTES, split_bytes(spark)
+        ),
     )
 
     probes = _nearest(
@@ -689,19 +699,10 @@ def sim_ann_ivf_partitioned_lists(
     probed_ids = sorted(
         {r["cent_id"] for r in probes.select("cent_id").distinct().collect()}
     )
-    pruned = spark.read.parquet(lists_path).filter(
-        F.col("cent_id").isin(probed_ids)
-    )
-    # Accounting from the partition listing, as the persisted PQ index
-    # does (sim_ann_ivf_pq_persisted): parts_total is the number of
-    # cent_id=... directories, parts_read the probed centroids that own
-    # one. A probed centroid with no members (e.g. a near-duplicate
-    # centroid losing every rounded-cosine tie) has no partition
-    # directory — counting it would overstate the scan and disagree
-    # with the oracle's IN-lists intersection. One LIST call, no job.
-    listed = list_partition_ids(lists_path)
-    parts_total = len(listed)
-    parts_read = len(listed & set(probed_ids))
+    pruned = spark.table(run).filter(F.col("cent_id").isin(probed_ids))
+    cent_ids = set(listed.get["cent_ids"])
+    parts_total = len(cent_ids)
+    parts_read = len(cent_ids & set(probed_ids))
 
     cand = probes.join(pruned, "cent_id").filter(
         F.col("query_id") != F.col("match_id")
@@ -726,10 +727,10 @@ def sim_ann_ivf_partitioned_lists(
 # sim_ann_ivf_pq computes index and query in one DAG;
 # sim_ann_ivf_partitioned_lists persists FULL-VECTOR lists. This
 # variant persists the REAL production layout (the Faiss IVFPQ
-# on-disk shape): code lists partitioned by centroid — PQ_M ints +
-# id per vector, a 64x compression over float lists — plus the tiny
+# on-disk shape): code lists keyed on centroid — PQ_M ints + id per
+# vector, a 64x compression over float lists — plus the tiny
 # codebook as its own parquet. The query path then touches ONLY the
-# stored index: probed partitions of the code lists (partition-pruned
-# read), the re-read codebook (broadcast), and exact vectors fetched
-# by id for the shortlist re-rank. Build once, query many — the
-# index write is the one corpus-linear pass.
+# stored index: probed lists of the code runs (In(cent_id) pushed
+# into the bucketed scan), the re-read codebook (broadcast), and
+# exact vectors fetched by id for the shortlist re-rank. Build once,
+# query many — the index write is the one corpus-linear pass.

@@ -18,7 +18,7 @@ file create)                                    GCS precondition
                                                 ``ifGenerationMatch=0``)
 ``get_text``         open().read()              GET
 ``list_names``       os.listdir                 LIST (one call per
-(partition catalog)                             prefix, paginated)
+(vacuum sweep)                                  prefix, paginated)
 ``delete``           os.remove                  DELETE
 ``delete_if_match``  flock'd read-verify-unlink DELETE with ``If-Match``
 (lease takeover)                                (S3 conditional delete /
@@ -32,7 +32,7 @@ file create)                                    GCS precondition
 Data files themselves (parquet) stay on Spark's own Hadoop-FS layer —
 this seam carries only the SMALL, consistency-critical metadata:
 current-store pointers, snapshot/commit manifests, append locks,
-delta-key sidecars, partition listings. SCALE.md's prose mapping
+delta-key sidecars, vacuum listings. SCALE.md's prose mapping
 ("os.replace is a conditional put at production scale") is now this
 module: deploying against an object store means providing one
 ``StoreIO`` implementation, not auditing every call site

@@ -316,29 +316,33 @@ AUDITED = {
         "measured recall@5 0.97 at sf0.1 (was 0.76 with K=16/depth 64)."
     ),
     "sim_ann_ivf_pq_persisted": (
-        "Audit (r9): the stored-index query path — the code-list scan "
-        "carries cent_id PartitionFilters (only probed directories "
-        "open, asserted in tests/test_ann_recall.py), the re-read "
-        "codebook and the per-query ADC tables are BroadcastExchanges, "
-        "and exact vectors enter the plan only at the shortlist "
-        "re-rank join. The build half is one corpus-linear encode + "
-        "assignment feeding a partitioned write."
+        "Audit (r9, key-index runs since the PQ lifecycle refactor): "
+        "the stored-index query path — the code-list run's scan "
+        "carries the probed ids as PushedFilters In(cent_id, ...) "
+        "(asserted in tests/test_ann_recall.py; bucket files and row "
+        "groups without a probed id are skipped, the scan's "
+        "numOutputRows is below the run's rows), the re-read codebook "
+        "and the per-query ADC tables are BroadcastExchanges, and "
+        "exact vectors enter the plan only at the shortlist re-rank "
+        "join. The scan feeds a broadcast, so the planner disables "
+        "the bucketed read there. The build half is one corpus-linear "
+        "encode + assignment feeding a bucketed write (no exchange "
+        "before it)."
     ),
     "sim_ann_ivf_pq_append": (
         "Audit (r9): incremental ingest — the delta is encoded against "
         "the STORED codebook (broadcast) and assigned against the "
-        "STORED centroids (broadcast), then appended as new files "
-        "inside the centroid partitions (mode=append, existing files "
-        "untouched); the query plan is identical to the persisted "
-        "variant's pruned read, now listing base+delta files."
+        "STORED centroids (broadcast), then written as its own "
+        "cent_id-keyed run and committed in the snapshot (existing "
+        "runs untouched); the query plan is the persisted variant's "
+        "pushed-In read over each committed run, unioned."
     ),
     "sim_ann_ivf_pq_compacted": (
-        "Audit (r9): compaction is repartition(cent_id) + partitionBy "
-        "write — one Exchange, one file per centroid partition "
-        "(collapse pinned in tests) — and the query plan over the "
-        "compacted copy is byte-identical in shape to the append "
-        "variant's; results pinned equal, only the file listing "
-        "shrinks."
+        "Audit (r9): compaction is the band tier's "
+        "lifecycle.compact_and_commit — one Exchange on the bucket-id "
+        "expression, one file per bucket (collapse pinned in tests) — "
+        "and the query plan reads the ONE compacted run where the "
+        "append variant unions two; results pinned equal."
     ),
     "s_stats_skipping_prune": (
         "Audit (r8b): the pruned scan's InMemoryFileIndex lists ONLY "
@@ -380,8 +384,8 @@ AUDITED = {
     ),
     "streaming_ann_ingest_restart": (
         "Audit (r10): the plan shown is the post-restart stored-index "
-        "query (probes -> partition-pruned code lists of every "
-        "committed run -> broadcast ADC -> shortlist re-rank); the "
+        "query (probes -> pushed-In scans of every committed "
+        "code-list run -> broadcast ADC -> shortlist re-rank); the "
         "ingest itself runs as foreachBatch micro-batches of the "
         "index's own snapshot-committed generation transaction "
         "(one lists_b<id> run each), which a replay of a committed "
