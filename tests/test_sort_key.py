@@ -14,10 +14,10 @@ from pyspark.sql import functions as F
 
 from tijdloze_musicbrainz_spark.functions.scoring import (
     canonical_sort_key,
-    is_compilation,
-    is_main_album,
+    is_compilation_expr,
+    is_main_album_expr,
     is_single,
-    is_soundtrack,
+    is_soundtrack_expr,
 )
 from tijdloze_musicbrainz_spark.operators.canonical import argmin_per_group
 
@@ -29,11 +29,11 @@ def _pick_winner(spark, rows):
         rows, "rg_id string, release_year int, rg_type int, sec_types array<int>, is_single_from boolean"
     )
     yv, rp, tp = canonical_sort_key(
-        F.col("release_year"),
-        F.col("is_single_from"),
-        is_main_album(F.col("rg_type"), F.col("sec_types")),
-        is_soundtrack(F.col("rg_type"), F.col("sec_types")),
-        is_compilation(F.col("rg_type"), F.col("sec_types")),
+        "release_year",
+        "is_single_from",
+        is_main_album_expr("rg_type", "sec_types"),
+        is_soundtrack_expr("rg_type", "sec_types"),
+        is_compilation_expr("rg_type", "sec_types"),
     )
     scored = df.select("rg_id", yv, rp, tp).withColumn("grp", F.lit(1))
     best = argmin_per_group(
@@ -136,5 +136,5 @@ def test_main_album_requires_no_secondary_types(spark):
 
 def test_is_single_flag(spark):
     df = spark.createDataFrame([(SINGLE,), (ALBUM,)], "rg_type int")
-    got = [r[0] for r in df.select(is_single(F.col("rg_type"))).collect()]
+    got = [r[0] for r in df.select(is_single("rg_type")).collect()]
     assert got == [True, False]

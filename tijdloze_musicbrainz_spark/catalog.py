@@ -2,10 +2,14 @@
 
 The driver testdata is a TPC-H-ish star schema plus ``events`` (a
 timestamped JSON-props stream table), ``documents`` (text corpus) and
-``embeddings`` (float vectors). Schemas are declared explicitly
-(never inferred) — the reference declares its export schemas the same
-way (``/root/reference/sql/2_export_tables.sql:1-55``); inference is a
-correctness hazard at 100 TB (one bad file re-types a column).
+``embeddings`` (float vectors). ``SCHEMAS`` declares each table's
+schema explicitly — the reference declares its export schemas the same
+way (``sql/2_export_tables.sql:1-55``). The loader does
+NOT read with it: ``_load_table_uncached`` infers the schema from the
+parquet footers (one Spark job per table, 9 per session for the
+benchmark's nine tables, against 0 with ``.schema(SCHEMAS[name])``) and
+checks the inferred field names against ``SCHEMAS`` — a superset
+check, so a file that re-types a column is not caught here.
 """
 
 from __future__ import annotations

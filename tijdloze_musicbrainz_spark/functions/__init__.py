@@ -1,10 +1,10 @@
 from .normalize import clean, search_key, unaccent
 from .scoring import (
     canonical_sort_key,
-    is_compilation,
-    is_main_album,
+    is_compilation_expr,
+    is_main_album_expr,
     is_single,
-    is_soundtrack,
+    is_soundtrack_expr,
     relevance_generation,
     relevance_query,
 )
@@ -16,8 +16,8 @@ __all__ = [
     "canonical_sort_key",
     "relevance_generation",
     "relevance_query",
-    "is_main_album",
-    "is_compilation",
-    "is_soundtrack",
+    "is_main_album_expr",
+    "is_compilation_expr",
+    "is_soundtrack_expr",
     "is_single",
 ]

@@ -96,7 +96,7 @@ def unaccent_full(col: Column | str) -> Column:
     return _unidecode(F.col(col) if isinstance(col, str) else col)
 
 
-def _search_key_spark_sql(e: str) -> str:
+def search_key_expr(e: str) -> str:
     """Spark-SQL rendering of search_key over an expression snippet —
     the same functions the Column path composes, as ONE parse."""
     for src, dst in _MULTI_FOLDS:
@@ -123,7 +123,7 @@ def search_key(col: Column | str) -> Column:
     The parsed plan is function-for-function the same expression.
     """
     if isinstance(col, str):
-        return F.expr(_search_key_spark_sql(col))
+        return F.expr(search_key_expr(col))
     c = F.lower(unaccent(col))
     c = F.replace(c, F.lit("(live)"), F.lit(""))
     return F.regexp_replace(c, "[^a-z0-9]+", "")

@@ -1,7 +1,7 @@
 """Scoring + canonical-selection key builders (SURVEY §2.8 F7-F9, P11).
 
 These are the reference's core client-side algorithms re-expressed as
-pure column expressions (no UDFs):
+pure expressions (no UDFs):
 
 - album-type predicates from the secondary-type array
   (``/root/reference/src/main.py:30-37``)
@@ -23,41 +23,49 @@ ALBUM, SINGLE = 1, 2
 COMPILATION, SOUNDTRACK = 1, 2
 
 
-def _arr(sec_types: Column) -> Column:
+# The album predicates and the sort key are defined ONCE, as Spark-SQL
+# text over expression snippets (a bare column name works): the SQL
+# stages of pipeline.py splice the text into their statements, and the
+# Column callers get the same text as one ``F.expr`` parse (a Column
+# composition costs one py4j round trip per operator).
+
+
+def _arr(sec_types: str) -> str:
     # collect_list of an empty group yields NULL, not [] — normalize
     # (SURVEY F16 pitfall).
-    return F.coalesce(sec_types, F.array().cast("array<int>"))
+    return f"coalesce({sec_types}, CAST(array() AS ARRAY<INT>))"
 
 
-def is_main_album(rg_type: Column, sec_types: Column) -> Column:
+def is_main_album_expr(rg_type: str, sec_types: str) -> str:
     """type == album AND no secondary types (src/main.py:30-32)."""
-    return (rg_type == ALBUM) & (F.size(_arr(sec_types)) == 0)
+    return f"({rg_type} = {ALBUM} AND size({_arr(sec_types)}) = 0)"
 
 
-def is_compilation(rg_type: Column, sec_types: Column) -> Column:
+def is_compilation_expr(rg_type: str, sec_types: str) -> str:
     """type == album AND compilation secondary (src/main.py:33-34 —
     the release_type==1 guard is part of the predicate: a SINGLE with
     a compilation secondary type is NOT a compilation album)."""
-    return (rg_type == ALBUM) & F.array_contains(_arr(sec_types), COMPILATION)
+    return f"({rg_type} = {ALBUM} AND array_contains({_arr(sec_types)}, {COMPILATION}))"
 
 
-def is_soundtrack(rg_type: Column, sec_types: Column) -> Column:
+def is_soundtrack_expr(rg_type: str, sec_types: str) -> str:
     """type == album AND soundtrack secondary (src/main.py:36-37)."""
-    return (rg_type == ALBUM) & F.array_contains(_arr(sec_types), SOUNDTRACK)
+    return f"({rg_type} = {ALBUM} AND array_contains({_arr(sec_types)}, {SOUNDTRACK}))"
 
 
-def is_single(rg_type: Column) -> Column:
-    return rg_type == SINGLE
+def is_single_expr(rg_type: str) -> str:
+    return f"({rg_type} = {SINGLE})"
 
 
-def canonical_sort_key(
-    release_year: Column,
-    is_single_from: Column,
-    main_album: Column,
-    soundtrack: Column,
-    compilation: Column,
-) -> tuple[Column, Column, Column]:
-    """The 3-tuple lexicographic argmin key (src/main.py:50-73).
+def canonical_sort_key_exprs(
+    release_year: str,
+    is_single_from: str,
+    main_album: str,
+    soundtrack: str,
+    compilation: str,
+) -> tuple[str, str, str]:
+    """The 3-tuple lexicographic argmin key (src/main.py:50-73), as
+    the SQL texts of ``year_value``, ``ref_priority``, ``type_priority``.
 
     1. ``year_value``: NULL year → 9999 sentinel; a release-group that
        is the explicit "single from" target or a main album keeps its
@@ -72,22 +80,36 @@ def canonical_sort_key(
     # not also take the +1 penalty, or a NULL-year compilation would
     # sort after a 9998-year "other" instead of tying on year_value.
     year_value = (
-        F.when(release_year.isNull(), F.lit(9999))
-        .when(is_single_from | main_album, release_year)
-        .otherwise(release_year + 1)
+        f"CASE WHEN {release_year} IS NULL THEN 9999"
+        f" WHEN {is_single_from} OR {main_album} THEN {release_year}"
+        f" ELSE {release_year} + 1 END"
     )
-    ref_priority = F.when(is_single_from, 0).otherwise(1)
+    ref_priority = f"CASE WHEN {is_single_from} THEN 0 ELSE 1 END"
     type_priority = (
-        F.when(main_album, 1)
-        .when(soundtrack, 2)
-        .when(compilation, 3)
-        .otherwise(4)
+        f"CASE WHEN {main_album} THEN 1 WHEN {soundtrack} THEN 2"
+        f" WHEN {compilation} THEN 3 ELSE 4 END"
     )
-    return (
-        year_value.alias("year_value"),
-        ref_priority.alias("ref_priority"),
-        type_priority.alias("type_priority"),
+    return year_value, ref_priority, type_priority
+
+
+def is_single(rg_type: str) -> Column:
+    return F.expr(is_single_expr(rg_type))
+
+
+def canonical_sort_key(
+    release_year: str,
+    is_single_from: str,
+    main_album: str,
+    soundtrack: str,
+    compilation: str,
+) -> tuple[Column, Column, Column]:
+    """``canonical_sort_key_exprs`` as aliased Columns; the arguments
+    are SQL snippets (the ``*_expr`` predicates, or column names)."""
+    exprs = canonical_sort_key_exprs(
+        release_year, is_single_from, main_album, soundtrack, compilation
     )
+    names = ("year_value", "ref_priority", "type_priority")
+    return tuple(F.expr(e).alias(n) for e, n in zip(exprs, names))  # type: ignore[return-value]
 
 
 def relevance_generation(exact_match: Column, score: Column) -> Column:

@@ -12,7 +12,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..fixtures import musicbrainz_fixture_tables
-from ..pipeline import canonical_pipeline, run_pipeline
+from ..pipeline import build_stage
 from .registry import register
 
 
@@ -37,8 +37,7 @@ SELECT * FROM (VALUES
     "reachable only via the second pool, NULL-year entries dropped.",
 )
 def mb_pipeline_canonical_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tables = musicbrainz_fixture_tables(spark)
-    best = canonical_pipeline(tables)["canonical"]
+    best = build_stage("canonical", musicbrainz_fixture_tables(spark))
     return best.select(
         "artist_id",
         "recording_mb_id",
@@ -64,136 +63,122 @@ SELECT * FROM (VALUES
     "through search_key and dedupe.",
 )
 def mb_pipeline_artist_aliases_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tables = musicbrainz_fixture_tables(spark)
-    return run_pipeline(tables)["mb_artist_alias"].select(
+    aliases = build_stage("mb_artist_alias", musicbrainz_fixture_tables(spark))
+    return aliases.select(
         F.col("artist_id").cast("int").alias("artist_id"), "alias"
     )
 
 
-def mb_scale_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
+# recording id = partkey * 10^7 + suppkey: suppkey < 10M up to sf~1000,
+# so ids cannot collide across parts in any reachable sf (the 100k
+# multiplier collided from sf>=100 / 1M suppliers on)
+_REC_ID = "l_partkey * 10000000L + l_suppkey"
+
+# the scale world's MusicBrainz tables, each one SQL text over the TPC-H
+# tables (mb_scale_tables)
+_SCALE_DERIVED = {
+    "area": "SELECT n_nationkey AS id FROM {nation}",
+    "iso_3166_1": """
+        SELECT n_nationkey AS area, upper(substring(n_name, 1, 2)) AS code
+        FROM {nation}""",
+    "artist": """
+        SELECT s_suppkey AS id, CAST(s_suppkey AS STRING) AS gid,
+               s_name AS name, s_nationkey AS area
+        FROM {supplier}""",
+    "l_artist_url": """
+        SELECT DISTINCT l_suppkey AS entity0, l_orderkey AS entity1
+        FROM {lineitem}""",
+    "artist_credit": "SELECT s_suppkey AS id FROM {supplier}",
+    "artist_credit_name": """
+        SELECT s_suppkey AS artist_credit, 0 AS position,
+               s_suppkey AS artist, s_name AS name
+        FROM {supplier}""",
+    "release_group": """
+        SELECT o.o_orderkey AS id, CAST(o.o_orderkey AS STRING) AS gid,
+               concat('order-', o.o_orderkey) AS name,
+               CASE WHEN o.o_orderpriority = '1-URGENT' THEN 2 ELSE 1 END AS type,
+               c.rg_ac AS artist_credit
+        FROM {orders} o
+        JOIN (
+          SELECT l_orderkey, min(l_suppkey) AS rg_ac FROM {lineitem}
+          GROUP BY l_orderkey
+        ) c ON o.o_orderkey = c.l_orderkey""",
+    # one scan with a CASE instead of a union of two filtered scans
+    # (the union read `orders` twice per use of this table)
+    "release_group_secondary_type_join": """
+        SELECT o_orderkey AS release_group,
+               CASE WHEN o_orderpriority = '2-HIGH' THEN 2 ELSE 1 END
+                 AS secondary_type
+        FROM {orders} WHERE o_orderpriority IN ('2-HIGH', '3-MEDIUM')""",
+    "release": """
+        SELECT o_orderkey AS id, o_orderkey AS release_group,
+               CASE WHEN o_orderstatus = 'P' THEN 2 ELSE 1 END AS status
+        FROM {orders}""",
+    "release_country": """
+        SELECT o_orderkey AS release, year(o_orderdate) AS date_year
+        FROM {orders}""",
+    "medium": "SELECT o_orderkey AS id, o_orderkey AS release FROM {orders}",
+    # track id derived from the data (orderkey*8 + linenumber,
+    # linenumber <= 7), not monotonically_increasing_id — layout-
+    # independent, deterministic across runs and repartitions
+    "track": f"""
+        SELECT l_orderkey * 8 + l_linenumber AS id, l_orderkey AS medium,
+               {_REC_ID} AS recording
+        FROM {{lineitem}}""",
+    "recording": f"""
+        SELECT {_REC_ID} AS id, CAST({_REC_ID} AS STRING) AS gid,
+               p.p_name AS name, d.l_suppkey AS artist_credit
+        FROM (SELECT DISTINCT l_partkey, l_suppkey FROM {{lineitem}}) d
+        JOIN {{part}} p ON d.l_partkey = p.p_partkey""",
+}
+
+# the relation tables the scale world leaves empty, as DDL schemas
+_SCALE_EMPTY = {
+    "l_area_area": "link int, entity0 int, entity1 int",
+    "artist_alias": "artist int, name string",
+    "link": "id int, link_type int",
+    "link_attribute": "link int, attribute_type int",
+    "l_artist_artist": "link int, entity0 int, entity1 int",
+    "l_rg_rg": "entity0 int, entity1 int, link int",
+    "recording_alias": "recording int, name string",
+    "l_recording_work": "entity0 bigint, entity1 int, link_order int",
+    "work": "id int, gid string, name string",
+    "work_alias": "work int, name string",
+    "language": "id int, iso_code_1 string, iso_code_3 string",
+    "work_language": "work int, language int",
+}
+
+
+def _empty_sql(ddl: str) -> str:
+    """A provably-empty relation of schema ``ddl``: Catalyst's
+    PruneFilters folds ``WHERE false`` to an empty LocalRelation and
+    PropagateEmptyRelation then collapses every join/union/aggregate
+    over it at optimization time. A parallelize-backed
+    ``createDataFrame([], schema)`` hid that: each of the 12 empty
+    relation tables kept a full exchange + join in the plan (measured
+    r15: the scale pipeline's plan dropped from 61 Exchanges to a third
+    of that; same results by join semantics)."""
+    cols = (field.split() for field in ddl.split(","))
+    return "SELECT " + ", ".join(f"CAST(NULL AS {t}) AS {n}" for n, t in cols) + " WHERE false"
+
+
+def mb_scale_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame | str]:
     """Volume-bearing MusicBrainz-shaped world derived from the TPC-H
     testdata (sf-scaled), for benching the composed DAG at data scale:
     suppliers play artists, (part, supplier) pairs play recordings,
     orders play release groups / releases, lineitems play tracks.
-    Every derivation is a column expression — the derivation cost is
-    part of the measured job, exactly like the reference's job reads
-    raw MusicBrainz tables."""
+
+    Every MusicBrainz table is a SQL text over the five TPC-H tables,
+    the only DataFrames, so ``pipeline.build_stage`` inlines the whole
+    world into the stage's one statement and binds five inputs. The
+    derivation cost is part of the measured job, exactly like the
+    reference's job reads raw MusicBrainz tables."""
     from .util import t as _t  # noqa: PLC0415
 
-    supplier = _t(spark, sf_dir, "supplier")
-    nation = _t(spark, sf_dir, "nation")
-    part = _t(spark, sf_dir, "part")
-    orders = _t(spark, sf_dir, "orders")
-    li = _t(spark, sf_dir, "lineitem")
-
-    # a provably-empty relation: the trailing filter(false) lets
-    # Catalyst's PruneFilters fold the subtree to an empty
-    # LocalRelation and PropagateEmptyRelation then collapses every
-    # join/union/aggregate over it at optimization time. A bare
-    # createDataFrame([], schema) is parallelize-backed — Spark cannot
-    # see it is empty, so each of the 12 empty relation tables kept a
-    # full 32-task exchange + join in the plan (measured r15: the
-    # scale pipeline's plan dropped from 61 Exchanges to a third of
-    # that; same results by join semantics).
-    empty = lambda schema: (  # noqa: E731
-        spark.createDataFrame([], schema).where(F.lit(False))
-    )
-
-    # recording id = partkey * 10^7 + suppkey: suppkey < 10M up to
-    # sf~1000, so ids cannot collide across parts in any reachable sf
-    # (the 100k multiplier collided from sf>=100 / 1M suppliers on)
-    rec_id = F.col("l_partkey") * F.lit(10_000_000).cast("long") + F.col("l_suppkey")
-    recording = (
-        li.select(F.col("l_partkey"), F.col("l_suppkey"))
-        .distinct()
-        .join(part, F.col("l_partkey") == part.p_partkey)
-        .select(
-            rec_id.alias("id"),
-            rec_id.cast("string").alias("gid"),
-            F.col("p_name").alias("name"),
-            F.col("l_suppkey").alias("artist_credit"),
-        )
-    )
-    rg_credit = li.groupBy("l_orderkey").agg(F.min("l_suppkey").alias("rg_ac"))
-    release_group = orders.join(
-        rg_credit, orders.o_orderkey == rg_credit.l_orderkey
-    ).select(
-        F.col("o_orderkey").alias("id"),
-        F.col("o_orderkey").cast("string").alias("gid"),
-        F.concat(F.lit("order-"), F.col("o_orderkey")).alias("name"),
-        F.when(F.col("o_orderpriority") == "1-URGENT", 2).otherwise(1).alias("type"),
-        F.col("rg_ac").alias("artist_credit"),
-    )
     return {
-        "area": nation.select(F.col("n_nationkey").alias("id")),
-        "iso_3166_1": nation.select(
-            F.col("n_nationkey").alias("area"),
-            F.upper(F.substring("n_name", 1, 2)).alias("code"),
-        ),
-        "l_area_area": empty("link int, entity0 int, entity1 int"),
-        "artist": supplier.select(
-            F.col("s_suppkey").alias("id"),
-            F.col("s_suppkey").cast("string").alias("gid"),
-            F.col("s_name").alias("name"),
-            F.col("s_nationkey").alias("area"),
-        ),
-        "l_artist_url": li.select(
-            F.col("l_suppkey").alias("entity0"),
-            F.col("l_orderkey").alias("entity1"),
-        ).distinct(),
-        "artist_alias": empty("artist int, name string"),
-        "link": empty("id int, link_type int"),
-        "link_attribute": empty("link int, attribute_type int"),
-        "l_artist_artist": empty("link int, entity0 int, entity1 int"),
-        "artist_credit": supplier.select(F.col("s_suppkey").alias("id")),
-        "artist_credit_name": supplier.select(
-            F.col("s_suppkey").alias("artist_credit"),
-            F.lit(0).alias("position"),
-            F.col("s_suppkey").alias("artist"),
-            F.col("s_name").alias("name"),
-        ),
-        "release_group": release_group,
-        # one scan with a CASE instead of a union of two filtered scans
-        # (the union read `orders` twice per use of this table)
-        "release_group_secondary_type_join": orders.filter(
-            F.col("o_orderpriority").isin("2-HIGH", "3-MEDIUM")
-        ).select(
-            F.col("o_orderkey").alias("release_group"),
-            F.when(F.col("o_orderpriority") == "2-HIGH", 2)
-            .otherwise(1)
-            .alias("secondary_type"),
-        ),
-        "l_rg_rg": empty("entity0 int, entity1 int, link int"),
-        "release": orders.select(
-            F.col("o_orderkey").alias("id"),
-            F.col("o_orderkey").alias("release_group"),
-            F.when(F.col("o_orderstatus") == "P", 2).otherwise(1).alias("status"),
-        ),
-        "release_country": orders.select(
-            F.col("o_orderkey").alias("release"),
-            F.year("o_orderdate").alias("date_year"),
-        ),
-        "medium": orders.select(
-            F.col("o_orderkey").alias("id"), F.col("o_orderkey").alias("release")
-        ),
-        # track id derived from the data (orderkey*8 + linenumber,
-        # linenumber <= 7), not monotonically_increasing_id — layout-
-        # independent, deterministic across runs and repartitions
-        "track": li.select(
-            (F.col("l_orderkey") * 8 + F.col("l_linenumber")).alias("id"),
-            F.col("l_orderkey").alias("medium"),
-            (
-                F.col("l_partkey") * F.lit(10_000_000).cast("long")
-                + F.col("l_suppkey")
-            ).alias("recording"),
-        ),
-        "recording": recording,
-        "recording_alias": empty("recording int, name string"),
-        "l_recording_work": empty("entity0 bigint, entity1 int, link_order int"),
-        "work": empty("id int, gid string, name string"),
-        "work_alias": empty("work int, name string"),
-        "language": empty("id int, iso_code_1 string, iso_code_3 string"),
-        "work_language": empty("work int, language int"),
+        **_SCALE_DERIVED,
+        **{name: _empty_sql(ddl) for name, ddl in _SCALE_EMPTY.items()},
+        **{n: _t(spark, sf_dir, n) for n in ("nation", "supplier", "part", "orders", "lineitem")},
     }
 
 
@@ -371,5 +356,4 @@ FROM ranked WHERE rn = 1
     "at sf0.01), closing the registry's last rows-only entry.",
 )
 def mb_pipeline_scale(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tables = mb_scale_tables(spark, sf_dir)
-    return canonical_pipeline(tables)["canonical"]
+    return build_stage("canonical", mb_scale_tables(spark, sf_dir))

@@ -782,6 +782,21 @@ def _pq_ingest_batch(
         )
 
 
+# The schemas _pq_write_index writes the codebook and the centroids
+# with. Read back with them, a stored index's parquet footers are not
+# opened on the driver: a schema-inferring read costs one Spark job each.
+_CODEBOOK_DDL = "j int, m int, cbv array<bigint>"
+_CENTS_DDL = "cent_id bigint, cv array<double>"
+
+
+def _pq_read_model(spark: SparkSession, root: str) -> tuple[DataFrame, DataFrame]:
+    """(codebook, centroids) of the index stored at ``root``."""
+    return (
+        spark.read.schema(_CODEBOOK_DDL).parquet(f"{root}/codebook"),
+        spark.read.schema(_CENTS_DDL).parquet(f"{root}/cents"),
+    )
+
+
 def _pq_query_stored(
     spark: SparkSession,
     base: DataFrame,
@@ -798,8 +813,7 @@ def _pq_query_stored(
     the crash-atomic ingest publishes), read once per query. Returns
     (topk, stored, snap, probed_ids): the unfiltered run set, and the
     snapshot whose accounting callers report."""
-    stored_cb = spark.read.parquet(f"{root}/codebook")
-    stored_cents = spark.read.parquet(f"{root}/cents")
+    stored_cb, stored_cents = _pq_read_model(spark, root)
     probes = _nearest_cent(
         base.filter(_query_filter()).select(
             F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
@@ -907,12 +921,7 @@ def _pq_appended(
     root = index_root(sf_dir, name)
     _pq_write_index(base, subs, _pq_seed_codebook(base, subs), root)
     delta = _pq_delta(base)
-    _pq_ingest_batch(
-        delta,
-        spark.read.parquet(f"{root}/codebook"),
-        spark.read.parquet(f"{root}/cents"),
-        root,
-    )
+    _pq_ingest_batch(delta, *_pq_read_model(spark, root), root)
     corpus = base.select("vec_id", "v").unionByName(
         delta.select("vec_id", "v")
     )
@@ -981,8 +990,7 @@ def _pq_stream_ingest(
     delta = _pq_delta(base).select("vec_id", "v")
     stage = f"{root}/arrivals"
     delta.repartition(3).write.parquet(stage)
-    cb = spark.read.parquet(f"{root}/codebook")
-    cents = spark.read.parquet(f"{root}/cents")
+    cb, cents = _pq_read_model(spark, root)
     drive(
         spark, _PQ_ARRIVAL, stage, f"{root}/ckpt",
         lambda b, bid: _pq_ingest_batch(b, cb, cents, root, gen=f"b{bid}"),

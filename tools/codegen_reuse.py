@@ -15,6 +15,9 @@ noop sink, like one pass of ``perfbench/run.py``. The default ops are the
   (``CodegenMetrics.METRIC_COMPILATION_TIME`` count). A codegen-cache
   hit compiles nothing.
 - ``jit_ms``: JVM JIT compile time (``CompilationMXBean``).
+- ``py4j_calls``: commands the driver sent to the JVM over py4j, each a
+  blocking round trip (``ClientServerConnection.send_command``): the
+  driver-build layer's cost in calls.
 - ``build_s``: wall seconds in the builders (driver plan building).
 - ``pass_s``: wall seconds of the pass.
 
@@ -50,6 +53,8 @@ def main() -> int:
     args = ap.parse_args()
 
     sys.path.insert(0, REPO)
+    from py4j.clientserver import ClientServerConnection
+
     from tijdloze_musicbrainz_spark.plans import REGISTRY
     from tijdloze_musicbrainz_spark.session import get_spark
 
@@ -62,9 +67,20 @@ def main() -> int:
     compiles = jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
     jit = jvm.java.lang.management.ManagementFactory.getCompilationMXBean()
 
+    sent = 0
+    send = ClientServerConnection.send_command
+
+    def counted(self, command, *a, **kw):
+        nonlocal sent
+        sent += 1
+        return send(self, command, *a, **kw)
+
+    ClientServerConnection.send_command = counted
+
     total = 0
     for p in range(args.passes):
         c0, j0, t0 = compiles.getCount(), jit.getTotalCompilationTime(), time.monotonic()
+        s0 = sent
         build_s = 0.0
         for op in args.ops:
             b0 = time.monotonic()
@@ -79,6 +95,7 @@ def main() -> int:
                     "pass": p,
                     "janino_compiles": n,
                     "jit_ms": jit.getTotalCompilationTime() - j0,
+                    "py4j_calls": sent - s0,
                     "build_s": round(build_s, 2),
                     "pass_s": round(time.monotonic() - t0, 2),
                 }

@@ -79,7 +79,13 @@ AUDITED = {
         "carried through the groupBy instead of re-deriving the "
         "recording subtree; release_group_secondary_type_join is one "
         "scan + CASE. Dims broadcast; the artist selectivity cut sits "
-        "at the top of the spine."
+        "at the top of the spine. The plan is built from SQL text: the "
+        "scale world's tables and every pipeline stage are CTEs of ONE "
+        "spark.sql statement over the five TPC-H tables "
+        "(pipeline.build_stage), and the two broadcasts are "
+        "/*+ BROADCAST */ hints; the physical plan — join strategies, "
+        "exchanges, aggregates — is the one the Column-composed build "
+        "produced."
     ),
     "j_skew_salted_join": (
         "Audit: the deterministic 8-way salt appears as pmod(xxhash64) "
@@ -455,8 +461,10 @@ AUDITED = {
 
 
 def stable_ids(plan: str) -> str:
-    """Renumber ``#<id>`` expression ids and ``plan_id=<id>`` in order of
-    first appearance: the counters behind them differ between builds."""
+    """Renumber ``#<id>`` expression ids, ``plan_id=<id>`` and the
+    ``_pyspark_<uuid>`` view names ``spark.sql`` binds its DataFrame
+    arguments to, in order of first appearance: the counters and uuids
+    behind them differ between builds."""
     seen: dict[str, int] = {}
 
     def renumber(m: re.Match) -> str:
@@ -464,7 +472,7 @@ def stable_ids(plan: str) -> str:
         seen.setdefault(key, len(seen) + 1)
         return f"{m.group(1)}{seen[key]}"
 
-    return re.sub(r"(#|plan_id=)\d+", renumber, plan)
+    return re.sub(r"(#|plan_id=|_pyspark_)(?:\d+\b|[0-9a-f]{32})", renumber, plan)
 
 
 def dump_named(spark, names: list[str], sf_dir: str, out: str, tag: str) -> None:
