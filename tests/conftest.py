@@ -4,6 +4,7 @@ correctness harness)."""
 
 from __future__ import annotations
 
+import itertools
 import os
 
 import pytest
@@ -49,3 +50,40 @@ def duck():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return TEST_SF_DIR
+
+
+@pytest.fixture(scope="session")
+def bench_sf01(spark) -> str:
+    """The committed bench tables at sf0.01 — job budgets are pinned
+    on them so they hold on any box — with every table's one-time
+    catalog read taken here: it belongs to the session, not to a
+    counted build."""
+    from tijdloze_musicbrainz_spark.catalog import load_table
+
+    sf = os.path.join(
+        os.path.dirname(os.path.abspath(__file__)),
+        "..", "perfbench", "data", "sf0.01",
+    )
+    for fn in sorted(os.listdir(sf)):
+        if fn.endswith(".parquet"):
+            load_table(spark, sf, fn[: -len(".parquet")])
+    return sf
+
+
+@pytest.fixture(scope="session")
+def jobs_of(spark):
+    """``jobs_of(fn) -> (fn(), n_jobs)``: the Spark jobs ``fn()``
+    launches, counted through a statusTracker job group of its own."""
+    sc = spark.sparkContext
+    seq = itertools.count()
+
+    def count(fn):
+        group = f"jobs-of-{next(seq)}"
+        sc.setJobGroup(group, "job-count probe")
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return count

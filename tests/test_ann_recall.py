@@ -398,47 +398,32 @@ def test_streaming_ann_restart_commits_through_the_log(spark, sf_dir):
     ]
 
 
-def _build_jobs(spark, name: str) -> int:
-    """Spark jobs one build of ``name`` launches at sf0.01, counted
-    with statusTracker job groups."""
-    import os
-
-    from tijdloze_musicbrainz_spark.plans import REGISTRY
-    from tijdloze_musicbrainz_spark.plans.util import t
-
-    sf = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)),
-        "..", "perfbench", "data", "sf0.01",
-    )
-    # the catalog's one-time schema read belongs to the session
-    t(spark, sf, "embeddings")
-    sc = spark.sparkContext
-    group = f"{name}-budget-build"
-    sc.setJobGroup(group, "job-budget probe")
-    try:
-        REGISTRY[name].builder(spark, sf)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return len(sc.statusTracker().getJobIdsForGroup(group))
-
-
-def test_ivf_partitioned_lists_job_budget(spark):
+def test_ivf_partitioned_lists_job_budget(spark, bench_sf01, jobs_of):
     """Job budget of the IVF list-store build at sf0.01: the payload
     checkpoint, the list-run write and the probed-ids collect.
     parts_total/parts_read come from the centroid ids observed on the
     write, so no count or listing job rides the build."""
-    n_build = _build_jobs(spark, "sim_ann_ivf_partitioned_lists")
+    from tijdloze_musicbrainz_spark.plans import REGISTRY
+
+    build = REGISTRY["sim_ann_ivf_partitioned_lists"].builder
+    _, n_build = jobs_of(lambda: build(spark, bench_sf01))
     assert n_build <= 6, n_build
 
 
-def test_ivf_pq_persisted_and_append_job_budgets(spark):
+def test_ivf_pq_persisted_and_append_job_budgets(spark, bench_sf01, jobs_of):
     """Build-job ceilings of the persisted and appended IVF-PQ indexes
     at sf0.01. The vector count, the centroid ids and n_appended ride
     the centroid and run writes as observations, so no count job
     remains; the stored codebook and centroids are read back with
     their declared schemas, so no schema-inference job either."""
-    n_persisted = _build_jobs(spark, "sim_ann_ivf_pq_persisted")
-    n_append = _build_jobs(spark, "sim_ann_ivf_pq_append")
+    from tijdloze_musicbrainz_spark.plans import REGISTRY
+
+    _, n_persisted = jobs_of(
+        lambda: REGISTRY["sim_ann_ivf_pq_persisted"].builder(spark, bench_sf01)
+    )
+    _, n_append = jobs_of(
+        lambda: REGISTRY["sim_ann_ivf_pq_append"].builder(spark, bench_sf01)
+    )
     assert n_persisted <= 24, n_persisted
     assert n_append <= 31, n_append
 

@@ -271,41 +271,20 @@ def test_base_pairs_gate_falls_back_to_row_count_without_bytes(spark):
     assert not hinted({"bytes": None, "n_rows": too_many, "n_base_pay": too_many})
 
 
-def test_cc_job_budget_and_data_sized_buckets(spark):
+def test_cc_job_budget_and_data_sized_buckets(spark, bench_sf01, jobs_of):
     """Job budget of the cluster lifecycle (base build, ingest, merge,
     commit, label read) at sf0.01, counted with statusTracker job
     groups, and the block index's bucket spec: the base run is ~450
     rows x 64 B, so the data-sized block index is ONE bucket, committed
     in the snapshot and carried by every block run."""
-    import os
-
     from tijdloze_musicbrainz_spark.plans.lifecycle import index_root
-    from tijdloze_musicbrainz_spark.plans.util import t
 
-    sf = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)),
-        "..", "perfbench", "data", "sf0.01",
-    )
-    # the catalog's one-time schema read belongs to the session, not
-    # to the lifecycle: take it before counting
-    t(spark, sf, "documents")
-    sc = spark.sparkContext
-
-    def jobs_of(group, fn):
-        sc.setJobGroup(group, "job-budget probe")
-        try:
-            out = fn()
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-        return out, len(sc.statusTracker().getJobIdsForGroup(group))
-
+    sf = bench_sf01
     df, n_build = jobs_of(
-        "cc-inc-budget-build",
-        lambda: REGISTRY["dedup_cluster_incremental"].builder(spark, sf),
+        lambda: REGISTRY["dedup_cluster_incremental"].builder(spark, sf)
     )
     _, n_exec = jobs_of(
-        "cc-inc-budget-exec",
-        lambda: df.write.format("noop").mode("overwrite").save(),
+        lambda: df.write.format("noop").mode("overwrite").save()
     )
     assert n_build <= 68, n_build
     assert n_exec <= 2, n_exec

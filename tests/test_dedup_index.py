@@ -103,7 +103,7 @@ def test_compaction_collapses_files_preserving_results(spark, sf_dir):
     assert max_per_bucket == 1
 
 
-def test_probe_is_lazy_and_scans_index_once(spark, sf_dir):
+def test_probe_is_lazy_and_scans_index_once(spark, sf_dir, jobs_of):
     """r10 verdict item 1: the probe path must not launch ANY
     full-index aggregation — in fact no job at all (the old code ran
     an eager distinct().count() over the whole band table per probe
@@ -113,14 +113,8 @@ def test_probe_is_lazy_and_scans_index_once(spark, sf_dir):
     from tijdloze_musicbrainz_spark.plans import dedup_index as di
 
     args = di._build_and_ingest(spark, sf_dir, "mh_lazy")
-    sc = spark.sparkContext
-    sc.setJobGroup("probe-lazy-pin", "probe must not launch jobs")
-    try:
-        df = di._probe_index(spark, *args)
-        jobs = sc.statusTracker().getJobIdsForGroup("probe-lazy-pin")
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    assert list(jobs) == [], f"probe launched jobs: {jobs}"
+    df, n_jobs = jobs_of(lambda: di._probe_index(spark, *args))
+    assert n_jobs == 0, f"probe launched {n_jobs} jobs"
 
     import re
 
@@ -399,42 +393,21 @@ def test_split_count_sizes_to_target(spark):
         spark.conf.set(key, old)
 
 
-def test_vacuum_job_budget_and_data_sized_buckets(spark):
+def test_vacuum_job_budget_and_data_sized_buckets(spark, bench_sf01, jobs_of):
     """Job budget of the index lifecycle (build, append, compaction,
     vacuum, probe) at sf0.01, counted with statusTracker job groups.
     The base run is ~115 KB, so the data-sized band index is ONE
     bucket, and the key sidecar's over-cap pre-check rides the staged
     write instead of launching a job."""
-    import os
-
     from tijdloze_musicbrainz_spark.plans.lifecycle import index_root
-    from tijdloze_musicbrainz_spark.plans.util import t
     from tijdloze_musicbrainz_spark.sources.commit_log import current_snapshot
 
-    sf = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)),
-        "..", "perfbench", "data", "sf0.01",
-    )
-    # the catalog's one-time schema read belongs to the session, not
-    # to the lifecycle: take it before counting
-    t(spark, sf, "documents")
-    sc = spark.sparkContext
-
-    def jobs_of(group, fn):
-        sc.setJobGroup(group, "job-budget probe")
-        try:
-            out = fn()
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-        return out, len(sc.statusTracker().getJobIdsForGroup(group))
-
+    sf = bench_sf01
     df, n_build = jobs_of(
-        "mh-vacuum-budget-build",
-        lambda: REGISTRY["dedup_minhash_vacuum"].builder(spark, sf),
+        lambda: REGISTRY["dedup_minhash_vacuum"].builder(spark, sf)
     )
     _, n_exec = jobs_of(
-        "mh-vacuum-budget-exec",
-        lambda: df.write.format("noop").mode("overwrite").save(),
+        lambda: df.write.format("noop").mode("overwrite").save()
     )
     assert n_build <= 13, n_build
     assert n_exec <= 4, n_exec

@@ -15,6 +15,7 @@ from __future__ import annotations
 
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
+import pytest
 from pyspark.sql import functions as F
 
 from tijdloze_musicbrainz_spark.functions import normalize
@@ -139,26 +140,46 @@ def test_int8_quantization_error_bound(spark, sf_dir):
     assert bad == 0
 
 
-def test_bpe_rounds_use_reliable_checkpoint_when_configured(spark, sf_dir):
-    """r8: with a reliable checkpoint dir configured, the BPE merge
-    chain checkpoints rounds to shared storage (loss-proof on a real
-    cluster); without one it falls back to localCheckpoint. Results
-    must be identical either way."""
+@pytest.mark.parametrize(
+    "name",
+    [
+        "text_bpe_train_merges",
+        "dedup_simhash",
+        "corpus_clean_pipeline",
+        "dedup_cluster_components",
+    ],
+)
+def test_bpe_rounds_use_reliable_checkpoint_when_configured(
+    spark, sf_dir, tmp_path, name
+):
+    """With a reliable checkpoint dir configured, a query's checkpoints
+    (the BPE merge rounds, the simhash fingerprint table, the cleaned
+    shingle table, the star-contraction rounds) go to shared storage
+    (loss-proof on a real cluster); without one they fall back to
+    localCheckpoint. Results must be identical either way."""
     import os
-    import tempfile
 
     from tijdloze_musicbrainz_spark.plans import REGISTRY
 
-    build = REGISTRY["text_bpe_train_merges"].builder
+    build = REGISTRY[name].builder
     local = {tuple(r) for r in build(spark, sf_dir).collect()}
 
-    ckpt = tempfile.mkdtemp(prefix="bpe_ckpt_")
+    ckpt = str(tmp_path)
     sc = spark.sparkContext
+    stored = {i.id() for i in sc._jsc.sc().getRDDStorageInfo()}
     try:
         sc.setCheckpointDir(ckpt)
         reliable = {tuple(r) for r in build(spark, sf_dir).collect()}
-        # the reliable dir was actually used
-        written = any(os.scandir(ckpt))
+        # no checkpoint fell back to executor-local blocks
+        local_blocks = {
+            i.id() for i in sc._jsc.sc().getRDDStorageInfo()
+        } - stored
+        assert not local_blocks, "a checkpoint ignored the reliable dir"
+        # checkpoint data landed in the reliable dir (setCheckpointDir
+        # alone already creates an empty per-context subdirectory)
+        written = any(
+            f.startswith("part-") for _, _, fs in os.walk(ckpt) for f in fs
+        )
         assert written, "no checkpoint data written to the reliable dir"
     finally:
         sc._jsc.sc().setCheckpointDir(None)  # restore local-checkpoint mode

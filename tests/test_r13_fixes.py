@@ -31,18 +31,6 @@ from tijdloze_musicbrainz_spark.plans.lifecycle import (
 )
 
 
-def _jobs_launched(spark, fn) -> int:
-    """Number of Spark jobs ``fn()`` launches, via a job group."""
-    sc = spark.sparkContext
-    group = f"r13_jobcount_{id(fn)}"
-    sc.setJobGroup(group, "job-count probe")
-    try:
-        fn()
-    finally:
-        sc.setJobGroup(None, None)
-    return len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def _read_sidecar(staged_dir: str) -> dict:
     with open(os.path.join(staged_dir, _DELTA_KEYS_SIDECAR)) as f:
         return json.load(f)
@@ -63,7 +51,7 @@ def test_sidecar_drops_null_keys_instead_of_crashing(spark, tmp_path):
 
 
 def test_sidecar_overcap_delta_skips_exact_distinct_shuffle(
-    spark, tmp_path, monkeypatch
+    spark, tmp_path, monkeypatch, jobs_of
 ):
     from tijdloze_musicbrainz_spark.plans import lifecycle
 
@@ -81,9 +69,8 @@ def test_sidecar_overcap_delta_skips_exact_distinct_shuffle(
     )
     d_over = str(tmp_path / "over")
     os.makedirs(d_over)
-    n_over = _jobs_launched(
-        spark,
-        lambda: write_delta_key_manifest(over, "band_key", d_over, 20 * cap),
+    _, n_over = jobs_of(
+        lambda: write_delta_key_manifest(over, "band_key", d_over, 20 * cap)
     )
     m = _read_sidecar(d_over)
     assert m["complete"] is False and m["keys"] == []
@@ -94,9 +81,8 @@ def test_sidecar_overcap_delta_skips_exact_distinct_shuffle(
     )
     d_under = str(tmp_path / "under")
     os.makedirs(d_under)
-    n_under = _jobs_launched(
-        spark,
-        lambda: write_delta_key_manifest(under, "band_key", d_under, 17),
+    _, n_under = jobs_of(
+        lambda: write_delta_key_manifest(under, "band_key", d_under, 17)
     )
     m = _read_sidecar(d_under)
     assert m["complete"] is True and m["keys"] == list(range(17))

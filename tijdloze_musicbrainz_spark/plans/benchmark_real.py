@@ -51,7 +51,7 @@ from ..sources.readers import read_csv_golden
 from .fuzzy import fuzzy_key_join, rank_candidates, score_candidates
 from .golden_shape import GOLDEN_SHAPE_SCHEMA
 from .registry import REGISTRY, QuerySpec, register
-from .util import eager_checkpoint
+from .util import checkpointed_payload
 
 # resolvable from the environment so a machine without the reference
 # checkout can point at its own copy (r6 ADVICE); when the file is
@@ -514,15 +514,15 @@ def _classified(spark: SparkSession) -> DataFrame:
     direct, duet_main, duet_second = _resolve(golden, aliases)
     # Truncate the plan at the resolve boundary (r16): each resolved
     # set is tiny (<= |golden| rows) and EXPLICITLY broadcast by every
-    # consumer (_candidates hints them), so an eager localCheckpoint
+    # consumer (_candidates hints them), so an eager checkpoint
     # costs the planner no estimate-driven broadcast decision — unlike
     # the r15 _base checkpoint attempt — while removing the fuzzy-join
     # subtrees from the 3-way candidates union, the ranker and the
     # final match join (the query is plan/codegen-bound: 146 codegen
     # units, 2,954 rows).
-    direct = eager_checkpoint(direct)
-    duet_main = eager_checkpoint(duet_main)
-    duet_second = eager_checkpoint(duet_second)
+    direct, _ = checkpointed_payload(direct)
+    duet_main, _ = checkpointed_payload(duet_main)
+    duet_second, _ = checkpointed_payload(duet_second)
     cand = _candidates(songs, direct, duet_main, duet_second)
     best = rank_candidates(cand)
     matched = best.join(songs.select("song_id", "mb_id"), "song_id").select(

@@ -92,7 +92,7 @@ from .lifecycle import (
     write_run,
 )
 from .registry import register
-from .util import checkpointed_payload, fits_broadcast, t
+from .util import checkpointed_payload, fan_out, fits_broadcast, t
 
 # Every CC_DELTA_MOD-th document "arrives" after the base clustering —
 # the same deterministic split as the MinHash index lifecycle. The
@@ -272,7 +272,7 @@ def _build_base(
         .select("doc_id", words_col().alias("ws"))
     )
     pay, pay_m = checkpointed_payload(
-        _payload(docs),
+        fan_out(_payload(docs)),
         [
             F.sum(
                 (F.col("doc_id") % CC_DELTA_MOD != 0).cast("long")
@@ -444,10 +444,10 @@ def _merge_generation(
     # write below — it reads the label store via _resolve_labels, and
     # a lazy plan would re-resolve labels AFTER the write, journaling
     # against post-write state. connected_components already
-    # localCheckpoints its fixpoint, but that is an implementation
+    # checkpoints its fixpoint, but that is an implementation
     # detail of CC; the explicit checkpoint here makes the ordering
     # dependency local and regression-proof (r11 ADVICE).
-    merged = _contract_and_merge(new_pairs, current).localCheckpoint()
+    merged, _ = checkpointed_payload(_contract_and_merge(new_pairs, current))
 
     batch_ids = spark.read.schema("doc_id bigint").parquet(
         f"{paths['stage']}/delta_ids_{gen}"

@@ -36,11 +36,11 @@ friendly; zero Python UDFs in any of these plans.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Observation, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .registry import register
-from .util import checkpointed_payload, eager_checkpoint, fan_out, t
+from .util import checkpointed_payload, fan_out, t
 
 N_PERMS = 64
 N_BANDS = 16
@@ -274,14 +274,16 @@ def dedup_ngram_jaccard_blocked(spark: SparkSession, sf_dir: str) -> DataFrame:
     # self-join would inline it once per leg: checkpoint it so the
     # gram CPU runs ONCE and both legs read the materialized frame
     # (the exact-substring precedent, guide §2.4/§1.2).
-    # checkpointed_payload fans the projected frame out and sizes the
-    # checkpoint to its measured bytes (r16), so the join legs stop
+    # The projected frame is fanned out, and checkpointed_payload sizes
+    # the checkpoint to its measured bytes (r16), so the join legs stop
     # paying 32-task overhead on a few-MB frame.
     sh, _ = checkpointed_payload(
-        docs.select(
-            "doc_id",
-            F.concat_ws(" ", F.slice(F.col("ws"), 1, 5)).alias("blk"),
-            shingles_col(F.col("ws")).alias("sgs"),
+        fan_out(
+            docs.select(
+                "doc_id",
+                F.concat_ws(" ", F.slice(F.col("ws"), 1, 5)).alias("blk"),
+                shingles_col(F.col("ws")).alias("sgs"),
+            )
         )
     )
     a = sh.alias("a")
@@ -393,15 +395,17 @@ def dedup_ngram_jaccard_meta_blocked(
         .select("doc_id", words_col().alias("ws"))
     )
     # sh is consumed by FIVE subtrees (b1, kept1, over1->b2/kept2, and
-    # the two bounded accounting actions) — without a checkpoint each
+    # the bounded accounting action) — without a checkpoint each
     # one re-runs the shingle fold; pinned once by checkpointed_payload
     # (same rationale as dedup_ngram_jaccard_blocked)
     sh, _ = checkpointed_payload(
-        docs.select(
-            "doc_id",
-            F.element_at(F.col("ws"), 1).alias("blk1"),
-            F.concat_ws(" ", F.slice(F.col("ws"), 1, 2)).alias("blk2"),
-            shingles_col(F.col("ws")).alias("sgs"),
+        fan_out(
+            docs.select(
+                "doc_id",
+                F.element_at(F.col("ws"), 1).alias("blk1"),
+                F.concat_ws(" ", F.slice(F.col("ws"), 1, 2)).alias("blk2"),
+                shingles_col(F.col("ws")).alias("sgs"),
+            )
         )
     )
     b1 = sh.groupBy("blk1").agg(F.count("*").alias("c"))
@@ -419,20 +423,27 @@ def dedup_ngram_jaccard_meta_blocked(
     )
     dropped = b2.filter(F.col("c") > META_SUBBLOCK_CAP)
     # bounded accounting aggregates (block-count sized, not corpus
-    # sized); surfaced as literals on every row so the cap is in the
+    # sized), cross-joined into ONE row so they cost one action;
+    # surfaced as literals on every row so the cap is in the
     # driver-hashed result
-    n_reblocked = b1.filter(F.col("c") > META_BLOCK_CAP).count()
-    drop_row = dropped.agg(
-        F.count("*").alias("nb"), F.coalesce(F.sum("c"), F.lit(0)).alias("nd")
-    ).first()
+    acct = (
+        b1.agg(F.count(F.when(F.col("c") > META_BLOCK_CAP, 1)).alias("nr"))
+        .crossJoin(
+            dropped.agg(
+                F.count("*").alias("nb"),
+                F.coalesce(F.sum("c"), F.lit(0)).alias("nd"),
+            )
+        )
+        .first()
+    )
     units = kept1.unionByName(kept2)
     a = units.alias("a")
     b = units.alias("b")
     jac = jaccard(F.col("a.sgs"), F.col("b.sgs"))
     acct_cols = (
-        F.lit(n_reblocked).cast("long").alias("n_blocks_reblocked"),
-        F.lit(drop_row["nb"]).cast("long").alias("n_subblocks_dropped"),
-        F.lit(drop_row["nd"]).cast("long").alias("n_docs_dropped"),
+        F.lit(acct["nr"]).cast("long").alias("n_blocks_reblocked"),
+        F.lit(acct["nb"]).cast("long").alias("n_subblocks_dropped"),
+        F.lit(acct["nd"]).cast("long").alias("n_docs_dropped"),
     )
     pairs = (
         a.join(
@@ -681,7 +692,7 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Materialize the fingerprint table (16 B/doc): the self-join below
     # would otherwise execute the vote aggregation once PER SIDE (no
     # common-subexpression elimination across join inputs).
-    fp = votes.select("doc_id", fp_expr.alias("fp")).localCheckpoint()
+    fp, _ = checkpointed_payload(votes.select("doc_id", fp_expr.alias("fp")))
 
     def seg16(col: Column, s: int) -> Column:
         return F.shiftright(col, s * 16).bitwiseAND(F.lit(0xFFFF))
@@ -768,30 +779,24 @@ def connected_components(
       smaller neighbors + self to the minimum.
     Fixpoint = edge set unchanged (count + exceptAll certificate —
     exact, not a checksum that could terminate early on collision).
-    localCheckpoint pins each round's frontier so lineage stays flat;
-    the 100 TB deployment swaps in checkpoint() to durable storage
-    (same two lines) for lineage-free failure recovery.
+    Each round's frontier is pinned by checkpointed_payload, so
+    lineage stays flat; with a reliable checkpoint dir configured the
+    rounds land on durable storage for lineage-free failure recovery.
     """
-    # eager checkpoints throughout: a LAZY localCheckpoint recomputes
-    # the plan a second time when the checkpoint materializes after the
-    # first action (measured: +1 s per round at sf0.1) — the classic
-    # persist-before-checkpoint gotcha. Counts ride the checkpoint
-    # jobs as observations (r16): the fixpoint loop previously paid
-    # one count ACTION per round on top of each round's checkpoint
-    # job — on the lifecycle tier those driver round-trips, not stage
-    # wall, were the bound (r15 verdict items 3/5).
-    obs0 = Observation()
-    edges = (
+    # Each round's edge count rides its checkpoint job (r16): the
+    # fixpoint loop previously paid one count ACTION per round on top
+    # of each round's checkpoint job — on the lifecycle tier those
+    # driver round-trips, not stage wall, were the bound (r15 verdict
+    # items 3/5).
+    edges, edges_m = checkpointed_payload(
         edges.select(F.col("u").cast("long"), F.col("v").cast("long"))
         .filter(F.col("u") != F.col("v"))
         .select(
             F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v")
         )
         .distinct()
-        .observe(obs0, F.count(F.lit(1)).alias("n"))
-        .localCheckpoint(eager=True)
     )
-    n_edges = int(obs0.get["n"] or 0)
+    n_edges = edges_m["n_rows"]
     # nodes derive lazily from the checkpointed initial edge set; only
     # the final labels join computes them
     nodes = (
@@ -823,17 +828,14 @@ def connected_components(
         # neighbor and u itself to the group minimum
         smin = large.groupBy("u").agg(F.min("v").alias("m"))
         joined = large.join(smin, "u")
-        obs_i = Observation()
-        small = (
+        small, small_m = checkpointed_payload(
             joined.filter(F.col("v") != F.col("m"))
             .select(F.col("v").alias("u"), F.col("m").alias("v"))
             .unionByName(joined.select("u", F.col("m").alias("v")))
             .filter(F.col("u") != F.col("v"))
             .distinct()
-            .observe(obs_i, F.count(F.lit(1)).alias("n"))
-            .localCheckpoint(eager=True)
         )
-        new_n = int(obs_i.get["n"] or 0)
+        new_n = small_m["n_rows"]
         if new_n == n_edges and small.exceptAll(edges).limit(1).count() == 0:
             edges = small
             break
@@ -1044,11 +1046,11 @@ def _exact_substring_over(toks: DataFrame, k: int) -> DataFrame:
     # per-position 128-bit gram fingerprints; empty when too short.
     # fan_out: gram building (k-token slice + concat + double hash per
     # position) is the CPU of this family and the single-row-group
-    # test scan runs it as ONE task otherwise. eager_checkpoint: the
+    # test scan runs it as ONE task otherwise. checkpointed_payload: the
     # gram stream feeds BOTH the dup-hash aggregate and the semi-join
     # probe leg — without it the whole tokenize+hash pipeline is
     # inlined and paid twice (profiled as two ~equal Generate stages).
-    grams = eager_checkpoint(
+    grams, _ = checkpointed_payload(
         fan_out(base)
         .select("doc_id", F.posexplode(_gram_hashes(k)).alias("pos", "gh"))
         .select("doc_id", "pos", "gh.h1", "gh.h2")
@@ -1264,10 +1266,10 @@ def dedup_exact_substring_cut(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # 128-bit (h1, h2) gram keys — a collision here would CUT unrelated
     # text, the worst silent-failure mode (see _gram_hashes).
-    # fan_out + eager_checkpoint for the same reasons as
+    # fan_out + checkpointed_payload for the same reasons as
     # _exact_substring_over: parallelize the gram CPU and stop the
     # winners/losers legs from re-running the tokenize+hash pipeline.
-    grams = eager_checkpoint(
+    grams, _ = checkpointed_payload(
         fan_out(base)
         .select("doc_id", F.posexplode(_gram_hashes(K_SPAN)).alias("pos", "gh"))
         .select("doc_id", "pos", "gh.h1", "gh.h2")

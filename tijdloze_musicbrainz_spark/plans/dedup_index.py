@@ -79,7 +79,7 @@ from .textops import (
     QUALITY_PUNCT_CLASS as Q_CLASS,
     quality_passes,
 )
-from .util import checkpointed_payload, t
+from .util import checkpointed_payload, fan_out, t
 
 # Every DEDUP_DELTA_MOD-th document "arrives" after the base index is
 # built — a deterministic split both engines can state.
@@ -246,9 +246,11 @@ def _build_base_index(
     # job), and the base/delta accounting counts ride the checkpoint
     # job as observations instead of costing separate count actions.
     docs, docs_m = checkpointed_payload(
-        t(spark, sf_dir, "documents")
-        .filter(F.col("text").isNotNull())
-        .select("doc_id", words_col().alias("ws")),
+        fan_out(
+            t(spark, sf_dir, "documents")
+            .filter(F.col("text").isNotNull())
+            .select("doc_id", words_col().alias("ws"))
+        ),
         [
             F.sum(
                 (F.col("doc_id") % DEDUP_DELTA_MOD != 0).cast("long")

@@ -22,7 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .registry import register
-from .util import eager_checkpoint, fits_broadcast, money_sum, money_sum_sql, t
+from .util import checkpointed_payload, fits_broadcast, money_sum, money_sum_sql, t
 
 N_SALTS = 8
 N_BUCKETS = 8
@@ -534,7 +534,7 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     # legs); without a checkpoint every leg re-runs the lineitem
     # self-join + distinct (~6 sibling consumers in the plan). The edge list
     # is two longs per row, bounded by 21·|orders| — cheap to pin.
-    pairs = eager_checkpoint(pairs)
+    pairs, _ = checkpointed_payload(pairs)
     deg = (
         pairs.select(F.col("u").alias("s"))
         .unionAll(pairs.select(F.col("v").alias("s")))
@@ -542,7 +542,7 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count("*").cast("long").alias("d"))
     )
     # one degree table serves both the orientation and the stats fold
-    oriented = eager_checkpoint(orient_by_degree(pairs, deg=deg))
+    oriented, oriented_m = checkpointed_payload(orient_by_degree(pairs, deg=deg))
     # The wedge stream (e1 join e2) is the only data-sized intermediate:
     # ~wedge-count rows of three longs, shuffled AND sort-merge-sorted
     # twice under the default plan (420 MB exchange + ~250 s of sort CPU
@@ -550,12 +550,12 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     # is two longs per row. When the edge list fits an executor-memory
     # budget, broadcast BOTH closure sides instead: wedges are then
     # generated and consumed inside one stage (hash probes, no exchange,
-    # no sort). The gate is an exact row count on the checkpointed edge
-    # list (AQE cannot make this call: a LogicalRDD has no size stats),
-    # so at production scale, where edges outgrow the budget, the plan
-    # falls back to the bounded sort-merge shape unchanged.
-    n_edges_exact = oriented.count()
-    bcast_edges = fits_broadcast(None, n_edges_exact, _EDGE_BCAST_ROW_BYTES)
+    # no sort). The gate is the exact edge count observed on the
+    # checkpoint job (AQE cannot make this call: a LogicalRDD has no
+    # size stats), so at production scale, where edges outgrow the
+    # budget, the plan falls back to the bounded sort-merge shape
+    # unchanged.
+    bcast_edges = fits_broadcast(None, oriented_m["n_rows"], _EDGE_BCAST_ROW_BYTES)
     _side = F.broadcast if bcast_edges else (lambda d: d)
     # Deliberately NOT fanned out: raising the probe stage from the
     # checkpoint's 10 partitions to 32 slots left the wall unchanged
@@ -731,8 +731,8 @@ def _copurchase_edges_and_seeds(
     # inline the full self-join + distinct otherwise (profiled: two
     # extra 248 MB lineitem-scan stages per run just to re-derive the
     # same pair set for the reversed leg)
-    pairs = eager_checkpoint(pairs)
-    edges = eager_checkpoint(
+    pairs, _ = checkpointed_payload(pairs)
+    edges, _ = checkpointed_payload(
         pairs.unionByName(
             pairs.select(F.col("v").alias("u"), F.col("u").alias("v"))
         )
@@ -753,15 +753,16 @@ def _bfs_expand(
     edges: DataFrame,
     visited: DataFrame,
     bcast: bool = False,
-) -> DataFrame:
+) -> tuple[DataFrame, dict]:
     """One BFS round: frontier x edges, dedup, drop already-visited.
     min-hop semantics — a node already visited keeps its earlier
     (smaller) hop count; only genuinely new nodes join the level.
     The eager checkpoint truncates lineage so round k's anti-join
-    never re-derives rounds 0..k-1.
+    never re-derives rounds 0..k-1; returns it with its metrics
+    (``n_rows`` is the round's new-node count).
 
     ``bcast=True`` (caller gates it on the EXACT visited-set row count
-    — every block is a checkpoint, so the count is cheap and known)
+    — every block is a checkpoint whose row count rode its job)
     broadcasts the frontier into the expansion join and the visited
     set into the anti-join: the edge table then streams straight from
     its checkpoint and the only exchange left per round is the
@@ -779,7 +780,7 @@ def _bfs_expand(
         )
         .distinct()
     )
-    return eager_checkpoint(nbrs.join(v, "node", "left_anti"))
+    return checkpointed_payload(nbrs.join(v, "node", "left_anti"))
 
 
 @register(
@@ -826,17 +827,19 @@ FROM walk GROUP BY node
 )
 def graph_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges, seeds = _copurchase_edges_and_seeds(spark, sf_dir)
-    visited = seeds.withColumn("hops", F.lit(0).cast("int"))
+    visited, seeds_m = checkpointed_payload(
+        seeds.withColumn("hops", F.lit(0).cast("int"))
+    )
     frontier = visited
-    n_visited = visited.count()
+    n_visited = seeds_m["n_rows"]
     for _ in range(BFS_MAX_HOPS):
-        new = _bfs_expand(
+        new, new_m = _bfs_expand(
             frontier,
             edges,
             visited,
             bcast=fits_broadcast(None, n_visited, _NODE_BCAST_ROW_BYTES),
         )
-        n_visited += new.count()  # cheap: `new` is already materialized
+        n_visited += new_m["n_rows"]
         # visited stays a lazy union of CHECKPOINTED blocks (seeds +
         # new_1..new_k): shallow lineage, no re-materialization cost.
         visited = visited.unionByName(new)
@@ -885,8 +888,8 @@ FROM walk GROUP BY node
     "frontier is EMPTY — the convergence contract of k-core peeling "
     "applied to reachability, so the result is the complete min-hop "
     "distance map of the seed set's connected components, whatever "
-    "the diameter. Each round eager-checkpoints its frontier and runs "
-    "one cheap isEmpty() on the materialized block (the driver-side "
+    "the diameter. Each round eager-checkpoints its frontier and reads "
+    "its row count off that checkpoint job (the driver-side "
     "convergence check — bounded metadata, not data); round count = "
     "eccentricity of the seed set, which for co-occurrence graphs is "
     "O(log N) (small-world), NOT O(N) — and a pathological "
@@ -901,18 +904,20 @@ FROM walk GROUP BY node
 )
 def graph_bfs_fixpoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges, seeds = _copurchase_edges_and_seeds(spark, sf_dir)
-    visited = seeds.withColumn("hops", F.lit(0).cast("int"))
+    visited, seeds_m = checkpointed_payload(
+        seeds.withColumn("hops", F.lit(0).cast("int"))
+    )
     frontier = visited
     rounds = 0
-    n_visited = visited.count()
+    n_visited = seeds_m["n_rows"]
     while True:
-        new = _bfs_expand(
+        new, new_m = _bfs_expand(
             frontier,
             edges,
             visited,
             bcast=fits_broadcast(None, n_visited, _NODE_BCAST_ROW_BYTES),
         )
-        n_new = new.count()  # cheap: `new` is already materialized
+        n_new = new_m["n_rows"]
         if n_new == 0:
             break
         n_visited += n_new
@@ -978,7 +983,7 @@ WHERE d >= {KCORE_K}
     "matches exactly. The alive set is id-only and shrinks "
     "monotonically; edges are re-filtered against it each round "
     "rather than rewritten — at 100 TB you'd checkpoint the "
-    "filtered edge list every few rounds (util.eager_checkpoint) "
+    "filtered edge list every few rounds (util.checkpointed_payload) "
     "to cap lineage, exactly like the BPE chain.",
 )
 def graph_kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -996,7 +1001,7 @@ def graph_kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .distinct()
     )
-    edges = eager_checkpoint(
+    edges, _ = checkpointed_payload(
         pairs.unionByName(
             pairs.select(F.col("v").alias("u"), F.col("u").alias("v"))
         )
@@ -1073,7 +1078,7 @@ SELECT node, CAST(label AS BIGINT) AS label FROM l{LP_ROUNDS}
 )
 def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges, _ = _copurchase_edges_and_seeds(spark, sf_dir)
-    labels = eager_checkpoint(
+    labels, _ = checkpointed_payload(
         edges.select(F.col("u").alias("node"))
         .distinct()
         .withColumn("label", F.col("node"))
@@ -1085,7 +1090,7 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy(F.col("u").alias("node"))
             .agg(F.min("label").alias("nbr_label"))
         )
-        labels = eager_checkpoint(
+        labels, _ = checkpointed_payload(
             labels.join(nbr_min, "node")
             .select(
                 "node",

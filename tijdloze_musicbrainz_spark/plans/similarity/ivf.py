@@ -395,10 +395,10 @@ def _assign_centroids_chunked(
     formulation, computed chunk-by-chunk with a running min."""
     # centroids are k rows (metadata-scale); checkpoint once so the
     # per-chunk filters scan k rows, not the corpus subtree k/chunk
-    # times (the multi-consumer recompute gotcha)
-    cents = cents.localCheckpoint(eager=True)
-    n_cents = cents.count()
-    n_chunks = max(1, -(-n_cents // chunk))
+    # times (the multi-consumer recompute gotcha); k rides the
+    # checkpoint job
+    cents, cents_m = checkpointed_payload(cents)
+    n_chunks = max(1, -(-cents_m["n_rows"] // chunk))
     inf = float("inf")
     chunk_bests = []
     for i in range(n_chunks):
@@ -658,7 +658,7 @@ def sim_ann_ivf_partitioned_lists(
     # the checkpoint to its measured bytes so tiny corpora stop paying
     # 32-task overhead per action. Its observed row count sizes the
     # list run's buckets.
-    vecs, vecs_m = checkpointed_payload(_vecs(spark, sf_dir))
+    vecs, vecs_m = checkpointed_payload(fan_out(_vecs(spark, sf_dir)))
     cents = vecs.filter(F.col("vec_id") % 50 == 0).select(
         F.col("vec_id").alias("cent_id"), F.col("v").alias("cv")
     )

@@ -212,7 +212,7 @@ def _pq_vecs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # cosine, ADC) is CPU-bound array math, and the single-row-group
     # test scan would run it all on one task. Partition-count-gated —
     # a no-op at production scale.
-    # NO eager_checkpoint here (r15, measured): pinning the source
+    # NO checkpoint here (r15, measured): pinning the source
     # does kill the per-consumer recompute, but a LogicalRDD has no
     # size stats, so every downstream id-join the planner had been
     # auto-broadcasting (probes x lists, cand x codes, the rerank's

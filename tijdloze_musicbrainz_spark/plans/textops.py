@@ -11,7 +11,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .registry import register
-from .util import t
+from .util import checkpointed_payload, fan_out, t
 
 # Tiny per-language stopword lists for the n-gram-free heuristic
 # language ID: score = #hits of language-specific common words. The
@@ -318,13 +318,15 @@ def corpus_clean_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     # un-checkpointed it would re-run the gate/dedup/shingle subtree
     # per branch (the simhash fingerprint playbook; measured 2.0 s vs
     # 2.5 s at sf0.1). At 100 TB this is a staging write.
-    sh = survivors.select(
-        "doc_id",
-        "lang",
-        F.size("ws").alias("n_tok"),
-        F.concat_ws(" ", F.slice(F.col("ws"), 1, 5)).alias("blk"),
-        shingles_col(F.col("ws")).alias("sgs"),
-    ).localCheckpoint()
+    sh, _ = checkpointed_payload(
+        survivors.select(
+            "doc_id",
+            "lang",
+            F.size("ws").alias("n_tok"),
+            F.concat_ws(" ", F.slice(F.col("ws"), 1, 5)).alias("blk"),
+            shingles_col(F.col("ws")).alias("sgs"),
+        )
+    )
     a = sh.alias("a")
     b = sh.alias("b")
     losers = (
@@ -871,13 +873,15 @@ def corpus_training_dataset_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # same three-branch reuse as corpus_clean_pipeline: checkpoint the
     # gated+shingled table once instead of recomputing it per branch
-    sh = survivors.select(
-        "doc_id",
-        "source",
-        F.size("ws").alias("n_tok"),
-        F.concat_ws(" ", F.slice(F.col("ws"), 1, 5)).alias("blk"),
-        shingles_col(F.col("ws")).alias("sgs"),
-    ).localCheckpoint()
+    sh, _ = checkpointed_payload(
+        survivors.select(
+            "doc_id",
+            "source",
+            F.size("ws").alias("n_tok"),
+            F.concat_ws(" ", F.slice(F.col("ws"), 1, 5)).alias("blk"),
+            shingles_col(F.col("ws")).alias("sgs"),
+        )
+    )
     a = sh.alias("a")
     b = sh.alias("b")
     losers = (
@@ -1723,9 +1727,7 @@ def _bpe_train_chain(
     sf0.1 for the composed spans query): the lazy chain made every
     downstream action re-evaluate ALL prior rounds' interpreted merge
     folds (O(R^2) fold evaluations); the checkpoint caps it at O(R)."""
-    from .util import eager_checkpoint, fan_out  # noqa: PLC0415
-
-    docs = eager_checkpoint(fan_out(docs))
+    docs, _ = checkpointed_payload(fan_out(docs))
     merge_fold = F.expr(
         """
 aggregate(tk,
@@ -1778,7 +1780,7 @@ aggregate(tk,
                 F.col("wcnt").alias("pair_count"),
             )
         )
-        docs = eager_checkpoint(
+        docs, _ = checkpointed_payload(
             docs.crossJoin(F.broadcast(winner))
             .select("doc_id", merge_fold.alias("tk"))
         )

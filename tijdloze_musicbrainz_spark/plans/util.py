@@ -136,7 +136,10 @@ def fan_out(df: DataFrame) -> DataFrame:
     AFTER projecting, guide: shuffle fewer bytes). Deterministic:
     round-robin repartition sorts locally first (SPARK-23207), and
     every consumer here is an aggregate/join whose result is
-    row-order independent."""
+    row-order independent. The input must be SCAN-ROOTED: on a plan
+    ending in an exchange, AQE runs the stages as a job to answer
+    ``getNumPartitions()`` and returns the coalesced count (a
+    ``groupBy`` frame: one job, 1 partition)."""
     sc = df.sparkSession.sparkContext
     n = sc.defaultParallelism
     if df.rdd.getNumPartitions() >= n:
@@ -154,28 +157,31 @@ def checkpointed_payload(
     aggs: list[Column] | None = None,
     part_bytes: int | None = None,
 ) -> tuple[DataFrame, dict]:
-    """Shared-payload checkpoint, SIZED TO THE DATA (r15 verdict item
-    1): ``eager_checkpoint(fan_out(df))`` computed the payload once at
-    cluster parallelism — but left the checkpoint at
-    ``defaultParallelism`` partitions, so every one of a lifecycle
-    transaction's ~40-100 downstream jobs paid 32-task scheduling
-    overhead to read a few KB per task (dedup_cluster_incremental's
-    payload measured 5,000 rows / 7.7 MB over 32 partitions). This
-    helper:
+    """The package's one checkpoint, for a frame consumed by several
+    sibling sub-trees (self-joins, multi-action lifecycles, iterative
+    rounds): without it every consumer re-evaluates the full upstream
+    lineage. This helper:
 
-    1. fans the compute out exactly as before (gated no-op at
-       production partition counts),
-    2. attaches an ``observe`` so the row count — and any caller
+    1. attaches an ``observe`` so the row count — and any caller
        aggregates, e.g. a broadcast gate's base-subset count — ride
        the CHECKPOINT job instead of costing separate count actions,
-    3. eager-checkpoints,
-    4. coalesces the materialized blocks so one downstream task
+    2. checkpoints EAGERLY (a lazy checkpoint recomputes the plan on
+       first use). With a RELIABLE checkpoint dir configured
+       (``sc.setCheckpointDir``) the blocks go to shared storage —
+       loss-proof at the cost of one distributed write; otherwise
+       ``localCheckpoint`` keeps them on executor-local storage,
+       where an executor loss triggers recompute, never failure
+       (SCALE.md),
+    3. coalesces the materialized blocks so one downstream task
        carries ~``CKPT_PART_BYTES`` of REAL checkpoint
        bytes (read from the block manager's storage info — measured,
        not estimated). Narrow and cheap: the blocks are already
        materialized; at production volume ``bytes/target >=
        partitions`` and nothing is coalesced (the helper only ever
        REDUCES partition count).
+
+    It does not fan out: a CPU-heavy scan-rooted payload is passed as
+    ``fan_out(x)``; a loop round's exchange-rooted frame never is.
 
     The default target (1 MB) sizes for the downstream consumers
     these payloads feed — shingle-set Jaccard verification runs
@@ -184,7 +190,7 @@ def checkpointed_payload(
     small corpus parallelize. Measured on dedup_cluster_incremental
     at sf0.1 (7.7 MB payload, solo best-of-3): 1 partition (32 MB
     target) 14.1 s, 4 parts (2 MB) 9.2 s, 8 parts (1 MB) 8.3 s, 16
-    parts (512 KB) 10.0 s, 32 parts (the r15 un-sized checkpoint)
+    parts (512 KB) 10.0 s, 32 parts (the un-sized checkpoint)
     13.1 s. ``part_bytes`` overrides the target per call: a payload
     whose consumers burn MORE CPU per byte (the 64-permutation
     minhash sign over raw token arrays) wants smaller slices.
@@ -193,49 +199,25 @@ def checkpointed_payload(
     ``n_rows``, ``bytes`` (None under a RELIABLE checkpoint dir,
     whose blocks are not in the block manager), and every caller
     aggregate by its alias."""
-    spark = df.sparkSession
-    sc = spark.sparkContext
+    sc = df.sparkSession.sparkContext
     obs = Observation()
-    fanned = fan_out(df).observe(
-        obs, F.count(F.lit(1)).alias("__n_rows"), *(aggs or [])
-    )
+    df = df.observe(obs, F.count(F.lit(1)).alias("__n_rows"), *(aggs or []))
     before = {i.id() for i in sc._jsc.sc().getRDDStorageInfo()}
-    ck = eager_checkpoint(fanned)
-    metrics = dict(obs.get)
-    metrics["n_rows"] = int(metrics.pop("__n_rows") or 0)
     nbytes = None
-    if sc.getCheckpointDir() is None:
-        new = [
-            i
-            for i in sc._jsc.sc().getRDDStorageInfo()
-            if i.id() not in before
-        ]
+    if sc.getCheckpointDir() is not None:
+        ck = df.checkpoint(eager=True)
+    else:
+        ck = df.localCheckpoint(eager=True)
+        storage = sc._jsc.sc().getRDDStorageInfo()
+        new = [i for i in storage if i.id() not in before]
         if new:
             info = max(new, key=lambda i: i.id())
             nbytes = int(info.memSize() + info.diskSize())
+    metrics = dict(obs.get)
+    metrics["n_rows"] = int(metrics.pop("__n_rows") or 0)
     metrics["bytes"] = nbytes
     if nbytes is not None:
-        target = part_bytes or CKPT_PART_BYTES
-        nparts = ck.rdd.getNumPartitions()
-        ideal = split_count(nbytes, target)
-        if ideal < nparts:
+        ideal = split_count(nbytes, part_bytes or CKPT_PART_BYTES)
+        if ideal < ck.rdd.getNumPartitions():
             ck = ck.coalesce(ideal)
     return ck, metrics
-
-
-def eager_checkpoint(df: DataFrame) -> DataFrame:
-    """EAGER checkpoint for a DataFrame that is consumed by several
-    sibling sub-trees (self-joins, iterative rounds): without it every
-    consumer re-evaluates the full upstream lineage. eager=True — a
-    lazy localCheckpoint still recomputes on first use (r5 lesson).
-
-    Executor-loss semantics (SCALE.md): localCheckpoint blocks live on
-    executor-local storage — on a real cluster an executor loss
-    triggers recompute, never failure. When a RELIABLE checkpoint dir
-    is configured (``sc.setCheckpointDir``), checkpoints go to shared
-    storage instead: loss-proof blocks at the cost of one distributed
-    write."""
-    sc = df.sparkSession.sparkContext
-    if sc.getCheckpointDir() is not None:
-        return df.checkpoint(eager=True)
-    return df.localCheckpoint(eager=True)

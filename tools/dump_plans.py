@@ -105,8 +105,9 @@ AUDITED = {
         "pair stage joins only block-key collisions, the shard window "
         "exchanges once on source (the parallelism unit), and the "
         "final manifest aggregate is a partial/final HashAggregate "
-        "pair. The gated/shingled table is localCheckpoint'd once "
-        "(r4b) so the three consuming branches scan the materialized "
+        "pair. The gated/shingled table is checkpointed once "
+        "(r4b; util.checkpointed_payload, to the reliable dir when "
+        "one is set) so the three consuming branches scan the materialized "
         "rows instead of re-running the gate/dedup/shingle subtree "
         "per branch — at 100 TB the equivalent is a staging write "
         "before the pairwise stage; exact-dedup winners group by md5 "
@@ -266,9 +267,10 @@ AUDITED = {
     "dedup_cluster_components": (
         "Audit (r5): alternating large-star/small-star — each round "
         "is symmetrize + groupBy-min + join (all shuffle-bounded, no "
-        "driver-side data beyond the fixpoint counters), frontier "
-        "localCheckpoint'd eagerly (a lazy checkpoint recomputes the "
-        "plan on materialization — measured, documented in the "
+        "driver-side data beyond the fixpoint counters, which ride "
+        "each round's checkpoint job), frontier checkpointed eagerly "
+        "by util.checkpointed_payload (a lazy checkpoint recomputes "
+        "the plan on materialization — measured, documented in the "
         "code); O(log^2 n) rounds proven, diameter-independent."
     ),
     "corpus_chunk_overlap": (
